@@ -4520,7 +4520,7 @@ def q_erase_subject_loop(spark, sf_dir):
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     eng = FlyQEngine(spark, base)
     eng.create_topic("subjects", partitions=4)
-    eng.produce("subjects", msgs, method="mod", collect_acks=False)
+    eng.produce("subjects", msgs, method="mod")
     report = eng.erase_subject(
         [b"7", b"42", b"99", b"424242"], topics=["subjects"]
     )

@@ -201,6 +201,7 @@ def main() -> None:
             return None
 
     steal_before = _steal_ticks()
+    steal_t0 = time.time()
 
     import __spark_entry__ as entry_mod
     from flyq_spark.session import get_spark
@@ -305,7 +306,7 @@ def main() -> None:
             F.col("ts").alias("timestamp"),
         )
         t0 = time.time()
-        eng.produce("bench", msgs, collect_acks=False)
+        eng.produce("bench", msgs)
         times["engine_produce"] = round(time.time() - t0, 3)
         t0 = time.time()
         for p in range(4):
@@ -331,6 +332,7 @@ def main() -> None:
     core21_total = round(sum(times[q] for q in core21 if q in times), 3)
     load_after = [round(x, 2) for x in os.getloadavg()]
     steal_after = _steal_ticks()
+    steal_window_s = time.time() - steal_t0
     steal_ticks = (
         steal_after - steal_before
         if steal_before is not None and steal_after is not None
@@ -372,8 +374,10 @@ def main() -> None:
     # core-seconds stolen by the hypervisor makes the totals mush even
     # when loadavg is clean — a twin from such a window misleads every
     # later round-over-round comparison. 1 tick = 10 ms (USER_HZ=100).
+    # The ticks are divided by the wall time of the window they were
+    # sampled over (process start to the end of the engine bench).
     ncpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
-    elapsed = sum(sum(r) for r in runs.values()) or 1.0
+    elapsed = steal_window_s or 1.0
     steal_frac = (
         steal_ticks / (elapsed * 100.0 * ncpus)
         if steal_ticks is not None

@@ -8,9 +8,16 @@ Spark-first restatement of the FlyQ broker:
   stats on ``offset`` replace the sparse index
   (flyq-server/src/core/segment.rs:125-154);
 - produce = route + dense offset assignment + partitioned append
-  (log_engine.rs:60-70, topic.rs:76-88, partition.rs:107-142);
-- consume/stream = predicate-pushdown point/range scans
-  (log_engine.rs:75-102, partition.rs:144-165);
+  (log_engine.rs:60-70, topic.rs:76-88, partition.rs:107-142). A list
+  batch (every wire and CLI produce) is routed, offset-assigned and
+  written from the driver with pyarrow, one file per touched partition;
+  a DataFrame batch is routed and written by Spark;
+- point consume = a footer-selected pyarrow read: the footer stats pick
+  the one file holding the offset (log_engine.rs:75-102,
+  partition.rs:144-165); range scans stay predicate-pushdown Spark
+  scans. Point reads see only committed offsets (low <= offset < LEO),
+  and every produce first deletes the files a crashed produce left past
+  LEO (a ``repair_topic`` run before that produce keeps them instead);
 - consumer-group offsets = small JSON control state (mirrors the
   reference's ``consumer_offsets.json``, offset_tracker.rs:36-54) with
   the topic-scope fix (quirk Q3) and durable-at-commit semantics
@@ -22,28 +29,82 @@ Spark-first restatement of the FlyQ broker:
 
 Concurrency contract: single writer per topic (the reference is stricter —
 one global engine mutex serializes every op, types.rs:4; we only require
-produce/retention on the *same topic* not to race). Reads are snapshot-
-isolated by Spark's plan-time file listing, the analog of the reference's
-Arc-based deferred deletion (segment.rs:336-351).
+produce/retention on the *same topic* not to race). Range reads are
+snapshot-isolated by Spark's plan-time file listing, the analog of the
+reference's Arc-based deferred deletion (segment.rs:336-351); data files
+appear only by rename, so no listing sees a partial file.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
+from datetime import datetime, timezone
 from typing import Any, Iterable
 
+import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from flyq_spark import storage
 from flyq_spark.config import EngineConfig
+from flyq_spark.functions.hashing import flyq_partition_for_key, spark_partition_for_key
 from flyq_spark.operators.offsets import assign_offsets
-from flyq_spark.operators.routing import keyed_partition, route
+from flyq_spark.operators.routing import ROUTING_METHODS, route
 from flyq_spark.schemas import CONSUMER_OFFSETS_SCHEMA, LOG_SCHEMA, MESSAGE_SCHEMA
 
 _OFFSETS_FILE = "consumer_offsets.json"
+_TIMESTAMP = T.TimestampType()
+_NUMERIC_KEY = re.compile(rb"\s*[+-]?[0-9]+\s*")
+
+
+def _keyed_partition_for(key: bytes, n: int, method: str) -> int:
+    """Driver replica of ``routing.keyed_partition`` for one key."""
+    if method == "xxhash64":
+        return spark_partition_for_key(key, n)
+    if method == "xxh3":
+        return flyq_partition_for_key(key, n)
+    if method == "mod":
+        # numeric-string keys only, like cast(cast(key as string) as long)
+        if not _NUMERIC_KEY.fullmatch(key) or not -(1 << 63) <= int(key) < (1 << 63):
+            raise ValueError(f"key {key!r} is not a numeric string; method 'mod' needs one")
+        return int(key) % n
+    raise ValueError(f"unknown routing method {method!r}; expected one of {ROUTING_METHODS}")
+
+
+def _timestamp_micros(ts) -> int:
+    """Epoch microseconds the way Spark stores a message timestamp:
+    numbers are epoch millis (the reference unit), datetimes convert
+    as ``createDataFrame`` converts them (naive = local time)."""
+    if isinstance(ts, (int, float)):
+        ts = datetime.fromtimestamp(ts / 1000.0, tz=timezone.utc)
+    return _TIMESTAMP.toInternal(ts)
+
+
+def _header(h) -> dict:
+    """A (key, value) header pair, given as a tuple, Row or dict."""
+    k, v = (h["key"], h["value"]) if isinstance(h, dict) else h
+    return {"key": k, "value": bytes(v)}
+
+
+def _log_row(r: dict, partition: int) -> Row:
+    """A pyarrow log row as the Row ``log(topic).collect()`` yields:
+    LOG_SCHEMA field order, bytes binaries, naive local datetime, header
+    Rows."""
+    headers = r["headers"]
+    return LOG_SCHEMA.fromInternal(
+        (
+            r["offset"],
+            r["key"],
+            r["value"],
+            _TIMESTAMP.toInternal(r["timestamp"]),
+            None if headers is None else [(h["key"], h["value"]) for h in headers],
+            partition,
+        )
+    )
 
 
 class UnknownTopic(KeyError):
@@ -160,18 +221,18 @@ class FlyQEngine:
         topic: str,
         messages: DataFrame | Iterable[dict[str, Any]],
         method: str = "xxhash64",
-        collect_acks: bool | None = None,
     ):
         """Append a batch of messages; auto-creates the topic
         (log_engine.rs:60-70, constants.rs:4).
 
         ``messages``: a DataFrame with columns key/value/timestamp
-        [/headers][/seq], or an iterable of dicts (small driver-side
-        batches, the reference's per-message produce shape).
+        [/headers][/seq], written by Spark, or an iterable of dicts
+        (small driver-side batches, the reference's per-message produce
+        shape), routed and written from the driver with pyarrow.
 
-        Returns a list of ``(partition, offset)`` acks in seq order when
-        ``collect_acks`` (default for list input), else a dict
-        ``{partition: (base_offset, new_log_end_offset)}``.
+        Returns a list of ``(partition, offset)`` acks in seq order for
+        list input, and a dict ``{partition: (base_offset,
+        new_log_end_offset)}`` for DataFrame input.
         """
         if not self.topic_exists(topic):
             if not self.config.auto_create_topics:
@@ -181,7 +242,137 @@ class FlyQEngine:
         n = int(meta["partitions"])
         prev_leo = {int(k): int(v) for k, v in meta["log_end_offsets"].items()}
         rr_cursor = int(meta.get("rr_cursor", 0))
+        self._rollback_uncommitted(topic, meta)
 
+        acks = None
+        if isinstance(messages, DataFrame):
+            counts, n_keyless = self._produce_frame(
+                topic, messages, n, prev_leo, rr_cursor, method
+            )
+        else:
+            acks, n_keyless = self._produce_list(
+                topic, messages, n, prev_leo, rr_cursor, method
+            )
+            counts = {}
+            for p, _ in acks:
+                counts[p] = counts.get(p, 0) + 1
+
+        # Commit point: LEO + cursor advance (partition_state.rs:27-29;
+        # cursor persistence is stronger than the reference, topic.rs:35).
+        # The cursor advances by the KEYLESS row count — the reference
+        # increments next_partition only on keyless produces
+        # (topic.rs:80-83). Caller-supplied `seq` DataFrames have no
+        # keyless rank (n_keyless is None) and use the documented slotted
+        # semantics: every row consumes a cycle slot, cursor += total.
+        total = 0
+        for p, c in counts.items():
+            meta["log_end_offsets"][str(p)] = prev_leo.get(p, 0) + c
+            total += c
+        advance = total if n_keyless is None else n_keyless
+        meta["rr_cursor"] = (rr_cursor + advance) % n if n else 0
+        storage.save_topic_meta(self.base_dir, topic, meta)
+        if acks is not None:
+            return acks
+        return {
+            int(p): (prev_leo.get(int(p), 0), int(meta["log_end_offsets"][str(p)]))
+            for p in counts
+        }
+
+    def _rollback_uncommitted(self, topic: str, meta: dict) -> None:
+        """Delete data files lying wholly at or past a partition's LEO.
+        Every produce writes offsets from the committed LEO up, so such
+        files are the leftovers of a produce that crashed between its
+        write and its meta commit: never acked, never readable (reads
+        stop at LEO), and in the way of the offsets the next produce
+        assigns."""
+        for p in range(int(meta["partitions"])):
+            leo = int(meta["log_end_offsets"].get(str(p), 0))
+            for st in storage.partition_file_stats(self.base_dir, topic, p):
+                if st.min_offset is not None and st.min_offset >= leo:
+                    os.remove(st.path)
+
+    def _produce_list(
+        self,
+        topic: str,
+        messages: Iterable[dict[str, Any]],
+        n: int,
+        prev_leo: dict[int, int],
+        rr_cursor: int,
+        method: str,
+    ) -> tuple[list[tuple[int, int]], int]:
+        """Route, offset and write a driver-side batch without a Spark
+        job — the same semantics as ``route`` + ``assign_offsets``:
+
+        - keyless rows (quirk Q1: None or b"") take ``(rr_cursor + keyless
+          rank) % n``, the rank counted in list order (topic.rs:80-83);
+        - keyed rows use the driver replicas of the Spark hashes;
+        - offsets are dense per partition in ``seq`` order (default: list
+          order), continuing from ``prev_leo``.
+
+        Every row is validated and routed before any file is written.
+        Returns (acks in seq order, keyless row count)."""
+        if method not in ROUTING_METHODS:
+            raise ValueError(
+                f"unknown routing method {method!r}; expected one of {ROUTING_METHODS}"
+            )
+        routed = []
+        n_keyless = 0
+        for i, m in enumerate(messages):
+            key = m.get("key")
+            if key is None or len(key) == 0:
+                p = (rr_cursor + n_keyless) % n
+                n_keyless += 1
+            else:
+                key = bytes(key)
+                p = 0 if n == 1 else _keyed_partition_for(key, n, method)
+            headers = m.get("headers")
+            routed.append(
+                (
+                    m.get("seq", i),
+                    p,
+                    key,
+                    bytes(m["value"]),
+                    _timestamp_micros(m["timestamp"]),
+                    None if headers is None else [_header(h) for h in headers],
+                )
+            )
+        routed.sort(key=lambda r: r[0])  # stable: list order breaks seq ties
+
+        next_offset = dict(prev_leo)
+        acks = []
+        files: dict[int, dict[str, list]] = {}
+        for _seq, p, key, value, ts, headers in routed:
+            off = next_offset.get(p, 0)
+            next_offset[p] = off + 1
+            acks.append((p, off))
+            cols = files.get(p)
+            if cols is None:
+                cols = files[p] = {name: [] for name in storage.LOG_ARROW_SCHEMA.names}
+            cols["offset"].append(off)
+            cols["key"].append(key)
+            cols["value"].append(value)
+            cols["timestamp"].append(ts)
+            cols["headers"].append(headers)
+        for p, cols in files.items():
+            storage.append_log_files(
+                storage.partition_dir(self.base_dir, topic, p),
+                cols,
+                self.config.max_records_per_file,
+            )
+        return acks, n_keyless
+
+    def _produce_frame(
+        self,
+        topic: str,
+        df: DataFrame,
+        n: int,
+        prev_leo: dict[int, int],
+        rr_cursor: int,
+        method: str,
+    ) -> tuple[dict[int, int], int | None]:
+        """Route, offset and append a DataFrame batch with Spark.
+        Returns (rows per partition, keyless row count or None when the
+        caller supplied ``seq``)."""
         # INT96 timestamps (Spark's default parquet output) carry no usable
         # footer min/max stats; retention (quirk Q5) reads them. Harmless
         # no-op when the session factory already set it.
@@ -192,9 +383,10 @@ class FlyQEngine:
         except Exception:
             pass
 
-        df, is_local, n_keyless = self._as_message_df(messages)
-        if collect_acks is None:
-            collect_acks = is_local
+        for field in ("key", "headers"):
+            if field not in df.columns:
+                df = df.withColumn(field, F.lit(None).cast(MESSAGE_SCHEMA[field].dataType))
+        n_keyless = None
         if "seq" not in df.columns:
             # Arrival order for a DataFrame batch is Spark's scan order.
             # Stamp a DENSE (0..m-1) seq plus the keyless round-robin
@@ -217,24 +409,7 @@ class FlyQEngine:
                 .parquet(storage.topic_dir(self.base_dir, topic))
             )
 
-        acks = None
-        if collect_acks:
-            # small driver-side batches: materialize acks, then write the
-            # (deterministic) plan again for the data files.
-            assigned = assigned.persist()
-            try:
-                counts: dict[int, int] = {}
-                acks = []
-                for r in (
-                    assigned.select("seq", "partition", "offset").orderBy("seq").collect()
-                ):
-                    p = int(r["partition"])
-                    acks.append((p, int(r["offset"])))
-                    counts[p] = counts.get(p, 0) + 1
-                _write(assigned)
-            finally:
-                assigned.unpersist()
-        elif n <= 64:
+        if n <= 64:
             # single pass: per-partition counts ride along with the write
             # action via the Observation API — no separate count job, no
             # persist of the whole batch.
@@ -265,74 +440,7 @@ class FlyQEngine:
                 _write(assigned)
             finally:
                 assigned.unpersist()
-
-        # Commit point: LEO + cursor advance (partition_state.rs:27-29;
-        # cursor persistence is stronger than the reference, topic.rs:35).
-        # The cursor advances by the KEYLESS row count — the reference
-        # increments next_partition only on keyless produces
-        # (topic.rs:80-83). Caller-supplied `seq` batches have no keyless
-        # rank (n_keyless is None) and use the documented slotted
-        # semantics: every row consumes a cycle slot, cursor += total.
-        total = 0
-        for p, c in counts.items():
-            meta["log_end_offsets"][str(p)] = prev_leo.get(p, 0) + c
-            total += c
-        advance = total if n_keyless is None else n_keyless
-        meta["rr_cursor"] = (rr_cursor + advance) % n if n else 0
-        storage.save_topic_meta(self.base_dir, topic, meta)
-        if collect_acks:
-            return acks
-        return {
-            int(p): (prev_leo.get(int(p), 0), int(meta["log_end_offsets"][str(p)]))
-            for p in counts
-        }
-
-    def _as_message_df(self, messages) -> tuple[DataFrame, bool, int | None]:
-        """Normalize input to a message DataFrame.
-
-        Returns (df, is_local_batch, n_keyless). For local list batches the
-        rows carry dense ``seq`` (arrival order) and ``_rr`` (rank among
-        KEYLESS rows — the reference's round-robin counter, topic.rs:80-83)
-        and ``n_keyless`` is exact. DataFrame input passes through
-        (n_keyless=None; produce stamps seq/_rr if absent)."""
-        if isinstance(messages, DataFrame):
-            df = messages
-            for field in ("key", "headers"):
-                if field not in df.columns:
-                    df = df.withColumn(field, F.lit(None).cast(MESSAGE_SCHEMA[field].dataType))
-            return df, False, None
-        rows = []
-        n_keyless = 0
-        for i, m in enumerate(messages):
-            ts = m["timestamp"]
-            if isinstance(ts, (int, float)):  # epoch millis, the reference unit
-                from datetime import datetime, timezone
-
-                ts = datetime.fromtimestamp(ts / 1000.0, tz=timezone.utc)
-            key = m.get("key")
-            keyless = key is None or len(key) == 0  # quirk Q1: b"" == no key
-            rows.append(
-                Row(
-                    key=key,
-                    value=m["value"],
-                    timestamp=ts,
-                    headers=m.get("headers"),
-                    seq=m.get("seq", i),
-                    _rr=n_keyless if keyless else None,
-                )
-            )
-            if keyless:
-                n_keyless += 1
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            list(MESSAGE_SCHEMA.fields)
-            + [
-                T.StructField("seq", T.LongType(), False),
-                T.StructField("_rr", T.LongType(), True),
-            ]
-        )
-        return self.spark.createDataFrame(rows, schema), True, n_keyless
+        return counts, n_keyless
 
     def _with_dense_seq(self, df: DataFrame) -> tuple[DataFrame, int, int]:
         """Stamp dense scan-order ``seq`` (0..m-1) and the keyless
@@ -515,18 +623,33 @@ class FlyQEngine:
         return max(int(offset), low)
 
     def consume(self, topic: str, partition: int, offset: int) -> Row | None:
-        """Point read at >= offset; past-end -> None (log_engine.rs:75-102:
-        OffsetNotFound degrades to graceful None). Starts no lower than
-        the low watermark (see _clamped_start)."""
-        offset = self._clamped_start(topic, partition, offset)
-        rows = (
-            self.log(topic)
-            .where((F.col("partition") == partition) & (F.col("offset") >= offset))
-            .orderBy("offset")
-            .limit(1)
-            .collect()
-        )
-        return rows[0] if rows else None
+        """Point read of the first committed record at >= offset; past-end
+        -> None (log_engine.rs:75-102: OffsetNotFound degrades to graceful
+        None). Reads are bounded to ``low <= offset < LEO`` from the meta
+        (see _clamped_start): a file past LEO is an uncommitted leftover.
+
+        The footer stats are the sparse index (partition.rs:148-158): walk
+        the partition's files in min-offset order and read only the
+        candidates with pyarrow — no Spark job. The Row has the shape a
+        Spark ``collect()`` of ``log(topic)`` gives."""
+        low, _, leo = self.get_watermark(topic, partition)
+        start = max(int(offset), low)
+        if start >= leo:
+            return None
+        best = None
+        for st in storage.partition_file_stats(self.base_dir, topic, partition):
+            if st.min_offset is not None:
+                if st.min_offset >= leo or (best is not None and st.min_offset > best["offset"]):
+                    break
+                if st.max_offset < start:
+                    continue
+            table = storage.read_offset_range(st.path, start, leo)
+            if table.num_rows:
+                first = pc.index(table["offset"], pc.min(table["offset"])).as_py()
+                row = table.slice(first, 1).to_pylist()[0]
+                if best is None or row["offset"] < best["offset"]:
+                    best = row
+        return None if best is None else _log_row(best, partition)
 
     # A28a client stub (flyq-client/src/client.rs:181-189)
     consume_from_partition = consume
@@ -553,22 +676,11 @@ class FlyQEngine:
     def consume_by_key(self, topic: str, key: bytes, method: str = "xxhash64") -> list[Row]:
         """A28b (client.rs:192-199): route the key, then scan only its
         partition (partition pruning) for exact key matches. Routing is
-        computed driver-side with the bit-compatible pure-Python XXH64
-        (functions/hashing.py, parity-tested against F.xxhash64) — no
-        Spark job just to find the partition."""
+        computed driver-side with the bit-compatible pure-Python hashes
+        (functions/hashing.py, parity-tested against the Spark routing)
+        — no Spark job just to find the partition."""
         n = self.topic_partitions(topic)
-        if n == 1:
-            p = 0
-        elif method == "xxhash64":
-            from flyq_spark.functions.hashing import spark_partition_for_key
-
-            p = spark_partition_for_key(key, n)
-        else:
-            p = int(
-                self.spark.range(1)
-                .select(keyed_partition(F.lit(key), n, method).alias("p"))
-                .collect()[0]["p"]
-            )
+        p = 0 if n == 1 else _keyed_partition_for(key, n, method)
         low, _, _ = self.get_watermark(topic, p)
         return (
             self.log(topic)
@@ -904,7 +1016,15 @@ class FlyQEngine:
         written. Low watermark becomes min(footer min offset) when data
         exists (bounded below by the recorded value, which survives
         retention of everything). Discovers partition dirs beyond the
-        recorded count (partial create). Returns the repaired meta."""
+        recorded count (partial create). Returns the repaired meta.
+
+        Files past the recorded LEO are rolled FORWARD here: their
+        offsets become committed and readable (``mirror_topic`` relies
+        on this). ``produce`` rolls the same files BACK instead
+        (``_rollback_uncommitted``). So the leftovers of a produce that
+        crashed before its meta commit are kept if ``repair_topic``
+        runs first and deleted if the next ``produce`` runs first;
+        either way the log stays dense with no duplicate offsets."""
         meta = self._meta(topic)
         tdir = storage.topic_dir(self.base_dir, topic)
         n = int(meta["partitions"])

@@ -114,7 +114,7 @@ def route(
 
     Round-robin is always a shuffle-free projection. When the batch
     carries ``_rr`` — the dense rank among KEYLESS rows that the engine's
-    produce path stamps (engine._with_dense_seq / _as_message_df) —
+    DataFrame produce path stamps (engine._with_dense_seq) —
     keyless rows route as ``pmod(rr_cursor + _rr, n)``: bit-exact
     reference semantics, where only keyless messages advance the cycle
     (topic.rs:80-83). Without ``_rr``, `seq` itself must be dense per

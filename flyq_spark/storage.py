@@ -13,7 +13,10 @@ segment lookup (flyq-server/src/core/partition.rs:148-158):
       _meta/consumer_offsets.parquet
 
 Metadata writes are atomic tmp+rename, same discipline as the reference's
-PartitionMeta::save (flyq-server/src/core/partiton_meta.rs:27-40).
+PartitionMeta::save (flyq-server/src/core/partiton_meta.rs:27-40). Data
+files written from the driver (``append_log_files``) follow the same
+discipline, and footers are cached per process: data files never change
+once in place.
 """
 
 from __future__ import annotations
@@ -21,9 +24,12 @@ from __future__ import annotations
 import json
 import os
 import re
+import uuid
 from dataclasses import dataclass
 from datetime import timezone
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 TOPIC_PREFIX = "topic_"
@@ -73,7 +79,7 @@ def list_topics(base_dir: str) -> list[str]:
     return out
 
 
-@dataclass
+@dataclass(frozen=True)
 class FileStats:
     """Per-parquet-file stats — the Spark analog of a FlyQ Segment
     (base_offset/last_offset, flyq-server/src/core/segment.rs:14-28)."""
@@ -100,47 +106,131 @@ def _ts_to_ms(v) -> int | None:
         return int(v)
 
 
+def footer_stats(path: str) -> FileStats:
+    """Offset range and newest timestamp of one data file, from its
+    parquet footer alone (no data page is read)."""
+    md = pq.ParquetFile(path).metadata
+    schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
+    idx_off = schema_names.index("offset") if "offset" in schema_names else None
+    idx_ts = schema_names.index("timestamp") if "timestamp" in schema_names else None
+    mn = mx = mxts = None
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        if idx_off is not None:
+            st = g.column(idx_off).statistics
+            if st is not None and st.has_min_max:
+                mn = st.min if mn is None else min(mn, st.min)
+                mx = st.max if mx is None else max(mx, st.max)
+        if idx_ts is not None:
+            st = g.column(idx_ts).statistics
+            if st is not None and st.has_min_max:
+                ts = _ts_to_ms(st.max)
+                if ts is not None:
+                    mxts = ts if mxts is None else max(mxts, ts)
+    return FileStats(
+        path=path,
+        size_bytes=os.path.getsize(path),
+        num_rows=md.num_rows,
+        min_offset=mn,
+        max_offset=mx,
+        max_timestamp_ms=mxts,
+    )
+
+
+def _by_offset(s: FileStats):
+    return (s.min_offset if s.min_offset is not None else 1 << 62, s.path)
+
+
+# Footer cache: partition dir -> {file name: (inode, FileStats)}. Data
+# files are immutable once renamed into place (a rename installs a new
+# inode), so each footer is read once per process. The identity comes from the directory listing itself:
+# one stat() per file per listing would cost more than the whole read.
+_FOOTERS: dict[str, dict[str, tuple[int, FileStats]]] = {}
+
+
 def partition_file_stats(base_dir: str, topic: str, partition: int) -> list[FileStats]:
-    """Read footer stats for every file of one partition, sorted by
+    """Footer stats for every file of one partition, sorted by
     min_offset (oldest first) — the recovery scan analog of
     flyq-server/src/core/segment.rs:188-237, except parquet footers are
-    self-describing so there is no tail re-scan."""
+    self-describing so there is no tail re-scan. Names starting with
+    '.' or '_' are skipped, as Spark's file listing skips them. A
+    listing drops the cache entries of deleted files."""
     pdir = partition_dir(base_dir, topic, partition)
-    out: list[FileStats] = []
-    if not os.path.isdir(pdir):
-        return out
-    for name in sorted(os.listdir(pdir)):
-        if not name.endswith(".parquet"):
+    try:
+        entries = list(os.scandir(pdir))
+    except (FileNotFoundError, NotADirectoryError):
+        _FOOTERS.pop(pdir, None)
+        return []
+    cached = _FOOTERS.get(pdir, {})
+    fresh: dict[str, tuple[int, FileStats]] = {}
+    for e in entries:
+        if not e.name.endswith(".parquet") or e.name.startswith((".", "_")):
             continue
-        path = os.path.join(pdir, name)
-        f = pq.ParquetFile(path)
-        md = f.metadata
-        schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
-        idx_off = schema_names.index("offset") if "offset" in schema_names else None
-        idx_ts = schema_names.index("timestamp") if "timestamp" in schema_names else None
-        mn = mx = mxts = None
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            if idx_off is not None:
-                st = g.column(idx_off).statistics
-                if st is not None and st.has_min_max:
-                    mn = st.min if mn is None else min(mn, st.min)
-                    mx = st.max if mx is None else max(mx, st.max)
-            if idx_ts is not None:
-                st = g.column(idx_ts).statistics
-                if st is not None and st.has_min_max:
-                    ts = _ts_to_ms(st.max)
-                    if ts is not None:
-                        mxts = ts if mxts is None else max(mxts, ts)
-        out.append(
-            FileStats(
-                path=path,
-                size_bytes=os.path.getsize(path),
-                num_rows=md.num_rows,
-                min_offset=mn,
-                max_offset=mx,
-                max_timestamp_ms=mxts,
-            )
-        )
-    out.sort(key=lambda s: (s.min_offset if s.min_offset is not None else 1 << 62, s.path))
-    return out
+        hit = cached.get(e.name)
+        if hit is None or hit[0] != e.inode():
+            hit = (e.inode(), footer_stats(e.path))
+        fresh[e.name] = hit
+    _FOOTERS[pdir] = fresh
+    return sorted((fs for _, fs in fresh.values()), key=_by_offset)
+
+
+# Arrow form of schemas.LOG_SCHEMA minus the hive `partition` column —
+# the on-disk shape Spark writes with TIMESTAMP_MICROS (isAdjustedToUTC).
+LOG_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("offset", pa.int64(), nullable=False),
+        pa.field("key", pa.binary()),
+        pa.field("value", pa.binary(), nullable=False),
+        pa.field("timestamp", pa.timestamp("us", tz="UTC"), nullable=False),
+        pa.field(
+            "headers",
+            pa.list_(
+                pa.field(
+                    "element",
+                    pa.struct(
+                        [
+                            pa.field("key", pa.string(), nullable=False),
+                            pa.field("value", pa.binary(), nullable=False),
+                        ]
+                    ),
+                )
+            ),
+        ),
+    ]
+)
+
+# Columns the engine prunes on: offset (seek, retention low watermark),
+# timestamp (time retention, offsets_for_times) and key (consume_by_key).
+_STATS_COLUMNS = ["offset", "timestamp", "key"]
+
+
+def append_log_files(pdir: str, columns: dict[str, list], max_records_per_file: int) -> None:
+    """Write one partition's offset-ordered rows as new parquet files
+    (split every ``max_records_per_file`` rows) from the driver. Each
+    file is written under a dot-prefixed name and renamed into place,
+    so a concurrent listing never sees a partial file. ``columns`` maps
+    every LOG_ARROW_SCHEMA name to a list; timestamps are epoch
+    microseconds."""
+    table = pa.Table.from_pydict(columns, schema=LOG_ARROW_SCHEMA)
+    for start in range(0, table.num_rows, max_records_per_file):
+        chunk = table.slice(start, max_records_per_file)
+        name = f"part-{chunk['offset'][0].as_py():020d}-{uuid.uuid4().hex[:16]}.parquet"
+        tmp = os.path.join(pdir, f".{name}.tmp")
+        pq.write_table(chunk, tmp, write_statistics=_STATS_COLUMNS, store_schema=False)
+        os.replace(tmp, os.path.join(pdir, name))
+
+
+def read_offset_range(path: str, start: int, end: int) -> pa.Table:
+    """Rows of one data file with ``start <= offset < end``. Only the row
+    groups whose footer offset stats overlap the range are read."""
+    f = pq.ParquetFile(path)
+    md = f.metadata
+    col = next(i for i in range(md.num_columns) if md.schema.column(i).path == "offset")
+    groups = []
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(col).statistics
+        if st is None or not st.has_min_max or (st.max >= start and st.min < end):
+            groups.append(g)
+    table = f.read_row_groups(groups)
+    offsets = table["offset"]
+    return table.filter(pc.and_(pc.greater_equal(offsets, start), pc.less(offsets, end)))

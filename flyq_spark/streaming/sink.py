@@ -31,7 +31,7 @@ def produce_sink(
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        engine.produce(topic, batch_df, method=method, collect_acks=False)
+        engine.produce(topic, batch_df, method=method)
 
     return write
 

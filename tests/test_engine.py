@@ -134,7 +134,7 @@ def test_produce_dataframe_batch(engine, spark):
             F.timestamp_millis(F.lit(1_700_000_000_000) + F.col("id")).alias("timestamp"),
         )
     )
-    acks = engine.produce("big", df, collect_acks=False)
+    acks = engine.produce("big", df)
     assert sum(leo - base for base, leo in acks.values()) == 100
     low, high, leo = engine.get_watermark("big", 0)
     assert leo == len(engine.read_from_offset("big", 0, 0))
