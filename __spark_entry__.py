@@ -1591,7 +1591,7 @@ def q_phash_neardup(spark, sf_dir):
     )
     hashes = M.perceptual_hash(media)
     return (
-        M.phash_neardup_pairs(hashes, max_hamming=8)
+        D.banded_hamming_pairs(hashes, "content_id", "phash", 64, 8, 8)
         .join(
             media.select(F.col("content_id").alias("id_a"),
                          F.col("doc_id").alias("doc_a")),

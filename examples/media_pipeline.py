@@ -32,11 +32,11 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
 from pyspark.sql import functions as F
 
+from flyq_spark.operators.dedup import banded_hamming_pairs
 from flyq_spark.operators.multimodal import (
     dedup_by_content,
     extract_features,
     perceptual_hash,
-    phash_neardup_pairs,
     read_media_dir,
 )
 from flyq_spark.session import get_spark
@@ -117,9 +117,9 @@ def main() -> None:
         for r in feats.select("width", "height", "n_frames").collect():
             print(f"  {r['width']}x{r['height']} frames={r['n_frames']}")
 
-        pairs = phash_neardup_pairs(
+        pairs = banded_hamming_pairs(
             perceptual_hash(unique.select("content_id", "payload")),
-            max_hamming=8,
+            "content_id", "phash", 64, 8, 8,
         )
         n_near = pairs.count()
         print(f"perceptual near-dup pairs (hamming<=8): {n_near} "

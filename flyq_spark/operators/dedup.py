@@ -8,8 +8,9 @@ LLM-pipeline extensions, designed shuffle-conscious for 100 TB:
 - MinHash-LSH near-dup: pyspark.ml MinHashLSH with banding via
   approxSimilarityJoin — candidate generation is a bucket join, never the
   O(n^2) all-pairs cross join;
-- SimHash: 64-bit signature built JVM-side (explode + 64 codegen'd sums),
-  near-dups via banded self-join + popcount(xor) Hamming filter;
+- SimHash: 63-bit signature built JVM-side (explode + 63 codegen'd sums),
+  near-dups via ``banded_hamming_pairs`` — the one banded self-join +
+  popcount(xor) Hamming filter, shared with the pHash media path;
 - n-gram Jaccard: EXACT token-set similarity join via rarity-ordered
   prefix filtering (AllPairs/PPJoin) — 100% recall with skew-bounded
   candidate generation, never an all-pairs cross join.
@@ -160,64 +161,76 @@ def simhash(
     return agg.select(F.col(id_col), sig.alias("simhash"))
 
 
-def simhash_neardup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bands: int = 4,
+def hamming_band_keys(
+    sigs: DataFrame, id_col: str, sig_col: str, bits: int, bands: int
 ) -> DataFrame:
-    """Banded SimHash near-dup join: split the 63-bit signature into
-    ``bands`` bands; by pigeonhole, any pair within ``max_hamming`` (<
-    bands) shares at least one exact band → candidates come from equality
-    joins on (band_idx, band_bits), then popcount(xor) verifies. No
-    all-pairs comparison anywhere. Signatures persist so the self-join's
-    two sides share one tokenize+vote computation.
+    """Explode ``bits``-bit integer signatures (SimHash, dHash) into
+    banded Hamming-LSH keys: one (id, sig, band, band_key) row per band,
+    band_key being the band's ``ceil(bits/bands)``-bit slice. The
+    candidate half of ``banded_hamming_pairs``, shared with the
+    streaming media dedup sink so batch and stream band alike.
 
-    Guards: the pigeonhole guarantee needs ``max_hamming < bands``
-    (silent recall loss otherwise), and every band must cover at least
-    one real signature bit — a band whose shift lands past bit 62 is
-    identically zero, which would make the "never all-pairs" equi-join
-    degenerate into an O(n²) cross product through that band."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"pigeonhole guarantee needs max_hamming < bands "
-            f"(got {max_hamming} >= {bands})"
-        )
-    width = SIMHASH_BITS // bands + 1
-    if (bands - 1) * width >= SIMHASH_BITS:
+    ``shiftrightunsigned`` keeps a set bit 63 (a negative long) from
+    smearing sign bits into the top band. A band count whose last band
+    starts past the top bit is rejected: that band is identically zero,
+    so every pair would collide there and the equi-join would degenerate
+    into an O(n²) cross product."""
+    width = -(-bits // bands)
+    if (bands - 1) * width >= bits:
         raise ValueError(
             f"bands={bands} leaves a degenerate empty band at width "
-            f"{width} over {SIMHASH_BITS} bits — every pair would "
-            "collide there (all-pairs join); use a band count whose "
-            "last band still covers a real bit (e.g. 3, 4, 7, 8)"
+            f"{width} over {bits} bits — every pair would collide there "
+            "(all-pairs join); use a band count whose last band still "
+            "covers a real bit"
         )
-    sigs = simhash(df, text_col, id_col).persist()
-    banded = sigs.select(
-        id_col,
-        "simhash",
+    mask = (1 << width) - 1
+    return sigs.select(
+        F.col(id_col),
+        F.col(sig_col),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bits"),
+                        F.shiftrightunsigned(F.col(sig_col), b * width)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("band_key"),
                     )
                     for b in range(bands)
                 ]
             )
-        ).alias("bb"),
-    ).select(id_col, "simhash", "bb.band", "bb.bits")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
+        ).alias("_bb"),
+    ).select(id_col, sig_col, "_bb.band", "_bb.band_key")
+
+
+def banded_hamming_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    sig_col: str,
+    bits: int,
+    bands: int,
+    max_hamming: int,
+) -> DataFrame:
+    """Near-dup pairs of integer signatures within ``max_hamming``
+    differing bits: candidates from an equi-join on (band, band_key),
+    then an exact ``bit_count(xor)`` verify on candidates only — never
+    all-pairs. By pigeonhole every pair within ``max_hamming < bands``
+    bits shares an untouched band, so recall is 1.0 there and
+    probabilistic above it (callers that need completeness reject
+    ``max_hamming >= bands`` themselves).
+
+    Nothing is persisted: both join sides are the same subtree, which
+    AQE exchange reuse computes once. Output: (id_a, id_b, hamming long)
+    with id_a < id_b."""
+    banded = hamming_band_keys(sigs, id_col, sig_col, bits, bands)
+    a, b = banded.alias("a"), banded.alias("b")
+    ham = F.bit_count(F.col(f"a.{sig_col}").bitwiseXOR(F.col(f"b.{sig_col}")))
+    return (
         a.join(
             b,
             on=[
                 F.col("a.band") == F.col("b.band"),
-                F.col("a.bits") == F.col("b.bits"),
+                F.col("a.band_key") == F.col("b.band_key"),
                 # null-keys-impossible: row-identity contract; a NULL
                 # id cannot satisfy the < pair order
                 F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
@@ -226,14 +239,35 @@ def simhash_neardup_pairs(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
+            ham.cast("long").alias("hamming"),
         )
-        .dropDuplicates(["id_a", "id_b"])
         .where(F.col("hamming") <= max_hamming)
+        .dropDuplicates(["id_a", "id_b"])
     )
-    return pairs
+
+
+def _require_pigeonhole(max_hamming: int, bands: int) -> None:
+    if max_hamming >= bands:
+        raise ValueError(
+            f"pigeonhole guarantee needs max_hamming < bands "
+            f"(got {max_hamming} >= {bands})"
+        )
+
+
+def simhash_neardup_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+    bands: int = 4,
+) -> DataFrame:
+    """Near-dup pairs over the 63-bit xxhash64 SimHash: signatures, then
+    ``banded_hamming_pairs``. Needs ``max_hamming < bands`` (silent
+    recall loss otherwise). Output: (id_a, id_b, hamming long)."""
+    _require_pigeonhole(max_hamming, bands)
+    return banded_hamming_pairs(
+        simhash(df, text_col, id_col), id_col, "simhash", SIMHASH_BITS, bands, max_hamming
+    )
 
 
 # --------------------------------------------------------------------- #
@@ -789,63 +823,15 @@ def simhash_md5_neardup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Banded near-dup join over the md5 SimHash: signatures split into
-    ``bands`` equal bit-bands; by pigeonhole any pair within
-    ``max_hamming`` < ``bands`` differing bits collides on at least one
-    untouched band, so candidate generation is an equi-join on
-    (band, band_value) — never all-pairs — and the exact Hamming verify
-    (``bit_count(xor)``) runs on candidates only. Both stages are plain
-    integer SQL: the whole pipeline hash-checks against the oracle.
+    """Near-dup pairs over the md5 SimHash: signatures, then
+    ``banded_hamming_pairs``. Needs ``max_hamming < bands`` (pigeonhole
+    completeness). Banding and verify are plain integer SQL, so the
+    whole pipeline hash-checks against the oracle.
 
-    Output: (id_a, id_b, hamming) with id_a < id_b."""
-    if bits % bands:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"pigeonhole guarantee needs max_hamming < bands "
-            f"(got {max_hamming} >= {bands})"
-        )
-    width = bits // bands
-    mask = (1 << width) - 1
-    # no persist needed here (unlike minhash_band_pairs, whose THREE
-    # consumers diverge before the exchange): both self-join sides are
-    # the identical aggregation subtree, which AQE exchange reuse
-    # already computes once — verified by timing; a cache would only
-    # add materialization cost
+    Output: (id_a, id_b, hamming long) with id_a < id_b."""
+    _require_pigeonhole(max_hamming, bands)
     sigs = simhash_md5(df, bits=bits, id_col=id_col, text_col=text_col)
-    banded = sigs.select(
-        F.col(id_col),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), b * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bv"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_bd"),
-    ).select(id_col, "simhash", F.col("_bd.band").alias("band"), F.col("_bd.bv").alias("bv"))
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("_sa"), "band", "bv"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("_sb"), "band", "bv"
-    )
-    cand = (
-        a.join(b, ["band", "bv"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_sa", "_sb")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
-    return cand.select(
-        "id_a", "id_b", ham.alias("hamming")
-    ).where(F.col("hamming") <= max_hamming)
+    return banded_hamming_pairs(sigs, id_col, "simhash", bits, bands, max_hamming)
 
 
 def minhash_band_keys(

@@ -999,7 +999,9 @@ def perceptual_hash(df: DataFrame) -> DataFrame:
     at any real scale — but without it a one-file corpus pins ALL
     hashing onto one core). Output: (content_id, phash) with phash an
     int64 (bit 63 may set the sign — callers XOR and popcount, they
-    never compare magnitudes)."""
+    never compare magnitudes). Near-dup pairs come from
+    ``dedup.banded_hamming_pairs(hashes, "content_id", "phash", 64,
+    bands, max_hamming)``."""
     from flyq_spark.operators.util import fan_out
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -1021,73 +1023,6 @@ def perceptual_hash(df: DataFrame) -> DataFrame:
 
     return fan_out(df.select("content_id", "payload")).mapInPandas(
         run, PHASH_SCHEMA
-    )
-
-
-def phash_band_keys(
-    hashes: DataFrame, bands: int = 8, id_col: str = "content_id"
-) -> DataFrame:
-    """Explode 64-bit perceptual hashes into banded Hamming-LSH keys:
-    one row per (id, phash, band, band_key) where band_key is the band's
-    64/bands-bit slice. The candidate-generation half of
-    ``phash_neardup_pairs``, shared with the streaming media dedup sink
-    (same (band, band_key) shape as the MinHash sink's state store)."""
-    if 64 % bands:
-        raise ValueError(f"bands={bands} must divide 64")
-    width = 64 // bands
-    mask = (1 << width) - 1
-    return hashes.select(
-        F.col(id_col),
-        F.col("phash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        (
-                            F.shiftrightunsigned(F.col("phash"), i * width)
-                            .bitwiseAND(F.lit(mask))
-                        ).alias("band_key"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("_bb"),
-    ).select(id_col, "phash", "_bb.band", "_bb.band_key")
-
-
-def phash_neardup_pairs(
-    hashes: DataFrame, max_hamming: int = 8, bands: int = 8
-) -> DataFrame:
-    """Near-duplicate media pairs from 64-bit perceptual hashes: banded
-    Hamming LSH (a pair collides when some band's 64/bands bits match
-    exactly — by pigeonhole, every pair within ``max_hamming <
-    bands`` differing bits is caught by SOME band, so recall is 1.0 in
-    that regime, probabilistic above it) + exact popcount verify on
-    candidates only. Same banded equi-join shape as SimHash: shuffle
-    carries |media| x bands small rows, never n^2 comparisons; all
-    bit arithmetic is JVM-side codegen.
-
-    Output: (id_a, id_b, hamming) on content_id, id_a < id_b."""
-    banded = phash_band_keys(hashes, bands=bands)
-    a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.band_key") == F.col("b.band_key"),
-                F.col("a.content_id") < F.col("b.content_id"),
-            ],
-        )
-        .select(
-            F.col("a.content_id").alias("id_a"),
-            F.col("b.content_id").alias("id_b"),
-            ham.cast("long").alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 

@@ -65,13 +65,3 @@ def salted_agg(
         ]
     )
 
-
-def salted_join_hint(big: DataFrame, small: DataFrame, on: list[str]) -> DataFrame:
-    """Join-skew guidance: AQE splits skewed partitions at runtime
-    (spark.sql.adaptive.skewJoin, on in our session factory), so the
-    declarative fix is usually just a broadcast hint when the small side
-    fits. This helper applies it; for the rare both-sides-huge hot-key
-    join, pre-aggregate or salt-replicate instead."""
-    # null-keys-impossible: a join HINT — semantics identical to the
-    # caller's plain inner equi-join (NULL keys match nothing)
-    return big.join(F.broadcast(small), on=on)

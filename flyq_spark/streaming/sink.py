@@ -200,20 +200,22 @@ def phash_dedup_sink(
     """foreachBatch callback deduplicating a MEDIA PAYLOAD STREAM by
     perceptual near-duplicate — the multimodal counterpart of
     ``neardup_dedup_sink``, sharing its idempotent-replay skeleton but
-    keyed on banded 64-bit dHash slices (operators/multimodal.py
-    ``perceptual_hash``/``phash_band_keys``) instead of MinHash bands.
+    keyed on banded 64-bit dHash slices (``multimodal.perceptual_hash``
+    then ``dedup.hamming_band_keys``, the banding of the batch
+    ``banded_hamming_pairs`` join) instead of MinHash bands.
     A payload is dropped when any of its Hamming-LSH bands collides with
     a smaller id in the batch or with anything accepted in a strictly
     earlier batch (conservative LSH-level decision, the same granularity
     as the MinHash sink; by pigeonhole this catches every pair within
     bands-1 differing bits). Batch rows need (id_col, payload)."""
-    from flyq_spark.operators.multimodal import perceptual_hash, phash_band_keys
+    from flyq_spark.operators.dedup import hamming_band_keys
+    from flyq_spark.operators.multimodal import perceptual_hash
 
     def keys(batch_df: DataFrame) -> DataFrame:
         hashes = perceptual_hash(
             batch_df.select(F.col(id_col).alias("content_id"), "payload")
         )
-        return phash_band_keys(hashes, bands=bands).select(
+        return hamming_band_keys(hashes, "content_id", "phash", 64, bands).select(
             F.col("content_id").alias(id_col), "band", "band_key"
         )
 

@@ -746,6 +746,52 @@ def test_simhash_identical_and_perturbed(spark):
         simhash_neardup_pairs(df, max_hamming=3, bands=10)  # empty band
 
 
+@pytest.mark.parametrize("bits,bands", [(32, 4), (63, 4), (63, 7), (64, 8)])
+def test_banded_hamming_pairs_equals_brute_force(spark, bits, bands):
+    """The banded join returns exactly the all-pairs set within
+    max_hamming < bands (pigeonhole completeness) at 32, 63 and 64 bits,
+    including negative longs (bit 63 set), a band count dividing 63 and
+    one that does not (the SimHash gate's 63/4); the SimHash pair join
+    leaves no persisted RDD behind."""
+    import random
+
+    from flyq_spark.operators.dedup import banded_hamming_pairs, simhash_neardup_pairs
+
+    rng = random.Random(bits)
+    max_hamming = bands - 1
+    sigs = []
+    for _ in range(40):  # clusters of near copies so the answer is not empty
+        base = rng.getrandbits(bits)
+        sigs.append(base)
+        for _ in range(3):
+            flips = rng.sample(range(bits), rng.randint(0, bands + 1))
+            sigs.append(base ^ sum(1 << f for f in flips))
+    signed = [s - (1 << 64) if s >= 1 << 63 else s for s in sigs]
+    if bits == 64:
+        assert any(s < 0 for s in signed)
+    df = spark.createDataFrame(list(enumerate(signed)), "id long, sig long")
+    got = sorted(  # a list, so a duplicate pair fails too
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in banded_hamming_pairs(df, "id", "sig", bits, bands, max_hamming).collect()
+    )
+    want = [
+        (a, b, bin(sigs[a] ^ sigs[b]).count("1"))
+        for a in range(len(sigs))
+        for b in range(a + 1, len(sigs))
+        if bin(sigs[a] ^ sigs[b]).count("1") <= max_hamming
+    ]
+    assert got == want and len(want) >= len(sigs) // 2
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f"), (3, "x y z")],
+        "doc_id long, text string",
+    )
+    simhash_neardup_pairs(docs, max_hamming=3, bands=4).collect()
+    assert set(jsc.getPersistentRDDs().keys()) == before
+
+
 def test_minhash_pairs_have_high_true_jaccard(spark, docs):
     """Every LSH-candidate pair the MinHash join emits must be a true
     near-dup under exact token-shingle Jaccard (no false 'survivors')."""
@@ -2982,11 +3028,8 @@ def test_perceptual_hash_locality_and_neardup(spark):
     """Identical payloads share a phash (hamming 0); a small byte edit
     moves few bits (near pair); random unrelated payloads don't pair.
     The hash is deterministic through the Arrow batch path."""
-    from flyq_spark.operators.multimodal import (
-        attach_media,
-        perceptual_hash,
-        phash_neardup_pairs,
-    )
+    from flyq_spark.operators.dedup import banded_hamming_pairs
+    from flyq_spark.operators.multimodal import attach_media, perceptual_hash
 
     base = bytes(range(256)) * 8
     edited = bytearray(base)
@@ -3016,7 +3059,9 @@ def test_perceptual_hash_locality_and_neardup(spark):
     }
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in phash_neardup_pairs(hashes, max_hamming=8).collect()
+        for r in banded_hamming_pairs(
+            hashes, "content_id", "phash", 64, 8, 8
+        ).collect()
     }
     near = tuple(sorted((cid[1], cid[3])))
     assert near in pairs and pairs[near] <= 8
@@ -3026,7 +3071,7 @@ def test_perceptual_hash_locality_and_neardup(spark):
 def test_phash_bands_catch_all_pairs_under_pigeonhole(spark):
     """With bands=8 every pair at hamming < 8 MUST be found (pigeonhole:
     7 differing bits cannot touch all 8 bands)."""
-    from flyq_spark.operators.multimodal import phash_neardup_pairs
+    from flyq_spark.operators.dedup import banded_hamming_pairs
 
     h = 0x0123456789ABCDEF
     flipped = h ^ 0b1011011  # 5 bits, all inside the low band
@@ -3037,7 +3082,9 @@ def test_phash_bands_catch_all_pairs_under_pigeonhole(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in phash_neardup_pairs(df, max_hamming=7).collect()
+        for r in banded_hamming_pairs(
+            df, "content_id", "phash", 64, 8, 7
+        ).collect()
     }
     assert got[("a", "b")] == 5
     assert got[("a", "c")] == 5  # 5 bits across 5 bands: 3 bands still clean

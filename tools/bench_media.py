@@ -20,13 +20,15 @@ from __future__ import annotations
 
 import io
 import json
+import os
 import struct
 import sys
 import time
 import wave
 import zlib
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def make_p6(w, h):
@@ -90,7 +92,7 @@ def make_jpeg(w, h):
     q=16 luma-only)."""
     import numpy as np
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.join(ROOT, "tests"))
     from test_ext_operators import _jpeg_encode
 
     y = np.zeros((h, w))

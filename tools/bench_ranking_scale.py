@@ -15,6 +15,7 @@ Usage: python tools/bench_ranking_scale.py [n_rows ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -30,7 +31,7 @@ def frame(spark, n):
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from flyq_spark.operators.ranking import (
         global_prefix_sums,
         grouped_ntile,

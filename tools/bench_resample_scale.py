@@ -16,6 +16,7 @@ Usage: python tools/bench_resample_scale.py [n_rows ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from flyq_spark.operators.corpus import corpus_shuffle, importance_resample
     from flyq_spark.session import get_spark
 

@@ -9,7 +9,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -71,7 +72,7 @@ def main() -> None:
     from flyq_spark.session import get_spark
 
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_for_scan", "/root/repo/__spark_entry__.py"
+        "spark_entry_for_scan", os.path.join(ROOT, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
