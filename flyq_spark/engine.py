@@ -33,6 +33,17 @@ produce/retention on the *same topic* not to race). Range reads are
 snapshot-isolated by Spark's plan-time file listing, the analog of the
 reference's Arc-based deferred deletion (segment.rs:336-351); data files
 appear only by rename, so no listing sees a partial file.
+
+Produce, point consume, retention and health read each partition's
+segment index from memory (``storage.partition_file_stats``): one
+``os.stat`` of the partition directory per call, a rescan only when the
+directory's (inode, mtime) moved. Every change this engine makes to a
+partition directory updates or invalidates that index itself; a change
+by another process is seen on the next call unless it falls within one
+mtime tick of a change of ours, and two writers that close together on
+one topic are what the single-writer contract above already excludes.
+A point read that finds no committed offset in the index, or a file
+gone, rescans once before answering.
 """
 
 from __future__ import annotations
@@ -210,7 +221,10 @@ class FlyQEngine:
 
     def delete_topic(self, topic: str) -> None:
         if self.topic_exists(topic):
-            shutil.rmtree(storage.topic_dir(self.base_dir, topic))
+            try:
+                shutil.rmtree(storage.topic_dir(self.base_dir, topic))
+            finally:
+                storage.invalidate_index(self.base_dir, topic)
 
     # ------------------------------------------------------------------ #
     # produce (A1 = A2/A3 routing + A4 offsets + partitioned append)
@@ -284,12 +298,18 @@ class FlyQEngine:
         files are the leftovers of a produce that crashed between its
         write and its meta commit: never acked, never readable (reads
         stop at LEO), and in the way of the offsets the next produce
-        assigns."""
+        assigns. They sort last in the segment index, so only its tail
+        is checked."""
         for p in range(int(meta["partitions"])):
             leo = int(meta["log_end_offsets"].get(str(p), 0))
-            for st in storage.partition_file_stats(self.base_dir, topic, p):
-                if st.min_offset is not None and st.min_offset >= leo:
-                    os.remove(st.path)
+            victims = []
+            for st in reversed(storage.partition_file_stats(self.base_dir, topic, p)):
+                if st.min_offset is None:
+                    continue  # empty files sort after every offset
+                if st.min_offset < leo:
+                    break
+                victims.append(st.path)
+            storage.remove_log_files(victims)
 
     def _produce_list(
         self,
@@ -399,15 +419,18 @@ class FlyQEngine:
         assigned = assign_offsets(routed, prev_leo)
 
         def _write(frame) -> None:
-            (
-                frame.select([f.name for f in LOG_SCHEMA.fields])
-                .repartition(max(1, min(n, 32)), "partition")
-                .sortWithinPartitions("partition", "offset")
-                .write.mode("append")
-                .option("maxRecordsPerFile", str(self.config.max_records_per_file))
-                .partitionBy("partition")
-                .parquet(storage.topic_dir(self.base_dir, topic))
-            )
+            try:
+                (
+                    frame.select([f.name for f in LOG_SCHEMA.fields])
+                    .repartition(max(1, min(n, 32)), "partition")
+                    .sortWithinPartitions("partition", "offset")
+                    .write.mode("append")
+                    .option("maxRecordsPerFile", str(self.config.max_records_per_file))
+                    .partitionBy("partition")
+                    .parquet(storage.topic_dir(self.base_dir, topic))
+                )
+            finally:
+                storage.invalidate_index(self.base_dir, topic)
 
         if n <= 64:
             # single pass: per-partition counts ride along with the write
@@ -628,39 +651,63 @@ class FlyQEngine:
         None). Reads are bounded to ``low <= offset < LEO`` from the meta
         (see _clamped_start): a file past LEO is an uncommitted leftover.
 
-        The footer stats are the sparse index (partition.rs:148-158): walk
-        the partition's files in min-offset order and read only the
-        candidates with pyarrow — no Spark job. The Row has the shape a
-        Spark ``collect()`` of ``log(topic)`` gives."""
+        The footer stats are the sparse index (partition.rs:148-158):
+        bisect the partition's segment index to the last file starting at
+        or before the offset, walk forward from there, and read only the
+        candidates with pyarrow — no Spark job. A miss, or a file gone
+        since the index was built, rescans the directory once (the index
+        may trail another process's change within one mtime tick). The
+        Row has the shape a Spark ``collect()`` of ``log(topic)`` gives."""
         low, _, leo = self.get_watermark(topic, partition)
         start = max(int(offset), low)
         if start >= leo:
             return None
+        try:
+            row = self._first_in_range(topic, partition, start, leo)
+        except FileNotFoundError:
+            row = None
+        if row is None:
+            storage.invalidate_index(self.base_dir, topic, partition)
+            row = self._first_in_range(topic, partition, start, leo)
+        return None if row is None else _log_row(row, partition)
+
+    def _first_in_range(self, topic: str, partition: int, start: int, end: int) -> dict | None:
+        """The record with the smallest offset in ``[start, end)`` as a
+        pyarrow row dict, or None. Files of a partition hold disjoint
+        offset ranges, so the walk stops at the first file starting past
+        the best offset found."""
+        stats = storage.partition_file_stats(self.base_dir, topic, partition)
         best = None
-        for st in storage.partition_file_stats(self.base_dir, topic, partition):
+        for st in stats[storage.floor_index(stats, start):]:
             if st.min_offset is not None:
-                if st.min_offset >= leo or (best is not None and st.min_offset > best["offset"]):
+                if st.min_offset >= end or (best is not None and st.min_offset > best["offset"]):
                     break
                 if st.max_offset < start:
                     continue
-            table = storage.read_offset_range(st.path, start, leo)
+            table = storage.read_offset_range(st.path, start, end)
             if table.num_rows:
                 first = pc.index(table["offset"], pc.min(table["offset"])).as_py()
                 row = table.slice(first, 1).to_pylist()[0]
                 if best is None or row["offset"] < best["offset"]:
                     best = row
-        return None if best is None else _log_row(best, partition)
+        return best
 
     # A28a client stub (flyq-client/src/client.rs:181-189)
     consume_from_partition = consume
 
     def stream_from_offset(self, topic: str, partition: int, offset: int) -> DataFrame:
-        """Ordered range scan from offset (partition.rs:144-165); starts
-        no lower than the low watermark (see _clamped_start)."""
-        offset = self._clamped_start(topic, partition, offset)
+        """Ordered range scan from offset (partition.rs:144-165) over the
+        committed records: ``low <= offset < LEO``, both read from the
+        meta when the frame is built (see _clamped_start and consume).
+        ``log()`` itself stays unbounded."""
+        low, _, leo = self.get_watermark(topic, partition)
         return (
             self.log(topic)
-            .where((F.col("partition") == partition) & (F.col("offset") >= offset))
+            .where(
+                (F.col("partition") == partition)
+                & (F.col("offset") >= max(int(offset), low))
+                & (F.col("offset") < leo)
+            )
             .orderBy("offset")
         )
 
@@ -800,16 +847,19 @@ class FlyQEngine:
         self.spark.conf.set(
             "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
         )
-        (
-            src.log(topic)
-            .select([f.name for f in LOG_SCHEMA.fields])
-            .repartition(max(1, min(int(src_meta["partitions"]), 32)), "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.mode("append")
-            .option("maxRecordsPerFile", str(self.config.max_records_per_file))
-            .partitionBy("partition")
-            .parquet(storage.topic_dir(self.base_dir, topic))
-        )
+        try:
+            (
+                src.log(topic)
+                .select([f.name for f in LOG_SCHEMA.fields])
+                .repartition(max(1, min(int(src_meta["partitions"]), 32)), "partition")
+                .sortWithinPartitions("partition", "offset")
+                .write.mode("append")
+                .option("maxRecordsPerFile", str(self.config.max_records_per_file))
+                .partitionBy("partition")
+                .parquet(storage.topic_dir(self.base_dir, topic))
+            )
+        finally:
+            storage.invalidate_index(self.base_dir, topic)
         meta = self.repair_topic(topic)
         # footers alone cannot rebuild everything: per-topic config
         # overrides, the round-robin cursor, and the LEO/low of a
@@ -962,9 +1012,9 @@ class FlyQEngine:
                 int(meta["low_watermarks"].get(str(p), 0)),
                 max(int(s.max_offset) + 1 for s in victims if s.max_offset is not None),
             )
-            for s in victims:
-                os.remove(s.path)
-                deleted.append(s.path)
+            paths = [s.path for s in victims]
+            storage.remove_log_files(paths)
+            deleted += paths
             meta["low_watermarks"][str(p)] = new_low
         storage.save_topic_meta(self.base_dir, topic, meta)
         return deleted
@@ -989,11 +1039,12 @@ class FlyQEngine:
                 f"offset {leo} for {topic}/{partition} (OFFSET_OUT_OF_RANGE)"
             )
         stats = storage.partition_file_stats(self.base_dir, topic, partition)
-        deleted: list[str] = []
-        for st in stats:
-            if st.max_offset is not None and st.max_offset < before_offset:
-                os.remove(st.path)
-                deleted.append(st.path)
+        deleted = [
+            st.path
+            for st in stats
+            if st.max_offset is not None and st.max_offset < before_offset
+        ]
+        storage.remove_log_files(deleted)
         key = str(int(partition))
         meta["low_watermarks"][key] = max(
             int(meta["low_watermarks"].get(key, 0)), int(before_offset)
@@ -1024,8 +1075,12 @@ class FlyQEngine:
         (``_rollback_uncommitted``). So the leftovers of a produce that
         crashed before its meta commit are kept if ``repair_topic``
         runs first and deleted if the next ``produce`` runs first;
-        either way the log stays dense with no duplicate offsets."""
+        either way the log stays dense with no duplicate offsets.
+
+        Recovery trusts the disk: every partition's segment index is
+        rebuilt from a fresh directory scan."""
         meta = self._meta(topic)
+        storage.invalidate_index(self.base_dir, topic)
         tdir = storage.topic_dir(self.base_dir, topic)
         n = int(meta["partitions"])
         # a crash mid-compaction leaves .compact_old/.compact_tmp dirs;
@@ -1088,6 +1143,7 @@ class FlyQEngine:
         if os.path.isdir(old):
             if not os.path.isdir(pdir):
                 os.rename(old, pdir)
+                storage.invalidate_index(self.base_dir, topic, partition)
             else:
                 shutil.rmtree(old, ignore_errors=True)
         if os.path.isdir(tmp):
@@ -1099,6 +1155,7 @@ class FlyQEngine:
         pdir, tmp, old = self._compact_paths(topic, partition)
         os.rename(pdir, old)
         os.rename(tmp, pdir)
+        storage.invalidate_index(self.base_dir, topic, partition)
         shutil.rmtree(old, ignore_errors=True)
 
     def maintain_topic(
@@ -1289,15 +1346,18 @@ class FlyQEngine:
                 .distinct()
                 .collect()
             )
-            stats[t] = erase_partition_keys(
-                self.spark,
-                storage.topic_dir(self.base_dir, t),
-                "partition",
-                flagged,
-                kdf,
-                "kb",
-                "key",
-            )
+            try:
+                stats[t] = erase_partition_keys(
+                    self.spark,
+                    storage.topic_dir(self.base_dir, t),
+                    "partition",
+                    flagged,
+                    kdf,
+                    "kb",
+                    "key",
+                )
+            finally:
+                storage.invalidate_index(self.base_dir, t)
         before_df = self.spark.createDataFrame(
             before,
             "table_name string, subject_key long, n_rows long, "

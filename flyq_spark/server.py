@@ -18,7 +18,8 @@ Parity notes:
 - non-Request frames are skipped (listener.rs:48-51 ``continue``);
 - any decode or engine error closes the connection, exactly the
   reference's ``?`` propagation out of handle_connection — no Error
-  frame is emitted because the reference never emits one;
+  frame is emitted because the reference never emits one. The error
+  and its traceback are logged first, so it is not swallowed;
 - DIVERGENCE (deliberate): consume honors the request's partition
   field. The reference hardcodes partition 0 (listener.rs:122) even
   though its own request/consume.rs ships the field — treated as one of
@@ -27,6 +28,7 @@ Parity notes:
 
 from __future__ import annotations
 
+import logging
 import socket
 import socketserver
 import threading
@@ -34,6 +36,8 @@ import time
 
 from flyq_spark import wire
 from flyq_spark.wire import Frame, FrameType, OpCode, ProtocolError
+
+_log = logging.getLogger(__name__)
 
 
 class FlyQServer:
@@ -82,7 +86,12 @@ class FlyQServer:
                             op, data = wire.decode_payload(frame.payload)
                             out = outer._dispatch(op, data)
                         except Exception:
-                            return  # engine/codec error: close, as the ? does
+                            # engine/codec error: close, as the ? does
+                            _log.exception(
+                                "request %d failed; closing the connection",
+                                frame.correlation_id,
+                            )
+                            return
                         resp = Frame(
                             wire.PROTOCOL_VERSION,
                             FrameType.RESPONSE,

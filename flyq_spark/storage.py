@@ -15,18 +15,35 @@ segment lookup (flyq-server/src/core/partition.rs:148-158):
 Metadata writes are atomic tmp+rename, same discipline as the reference's
 PartitionMeta::save (flyq-server/src/core/partiton_meta.rs:27-40). Data
 files written from the driver (``append_log_files``) follow the same
-discipline, and footers are cached per process: data files never change
-once in place.
+discipline: data files never change once in place.
+
+Segment index: each process keeps every partition's footer stats in
+memory, sorted by offset, together with the partition directory's
+identity ``(st_ino, st_mtime_ns)`` at the time the list was built
+(``partition_file_stats``). While the identity is unchanged a lookup
+costs one ``os.stat``; when it differs (another process wrote, deleted
+or swapped files) the directory is rescanned, reading only the footers
+of files not seen before. In-process changes never rely on the mtime,
+which can have jiffy granularity: ``append_log_files`` adds its files to
+the index itself, ``remove_log_files`` deletes files and marks the
+index stale, and every other change to a partition directory calls
+``invalidate_index``. So the index assumes a change made by another
+process moves the directory's identity. A foreign change within one
+mtime tick of our own is a concurrent writer, which the engine's
+single-writer contract already excludes; point reads also rescan once
+when the index holds no committed offset they ask for.
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import re
 import uuid
 from dataclasses import dataclass
 from datetime import timezone
+from typing import Iterable, NamedTuple
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -106,10 +123,9 @@ def _ts_to_ms(v) -> int | None:
         return int(v)
 
 
-def footer_stats(path: str) -> FileStats:
-    """Offset range and newest timestamp of one data file, from its
-    parquet footer alone (no data page is read)."""
-    md = pq.ParquetFile(path).metadata
+def _stats_from_metadata(path: str, md: pq.FileMetaData, size_bytes: int) -> FileStats:
+    """FileStats from a parquet footer: offset range and newest
+    timestamp over the row-group statistics."""
     schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
     idx_off = schema_names.index("offset") if "offset" in schema_names else None
     idx_ts = schema_names.index("timestamp") if "timestamp" in schema_names else None
@@ -129,7 +145,7 @@ def footer_stats(path: str) -> FileStats:
                     mxts = ts if mxts is None else max(mxts, ts)
     return FileStats(
         path=path,
-        size_bytes=os.path.getsize(path),
+        size_bytes=size_bytes,
         num_rows=md.num_rows,
         min_offset=mn,
         max_offset=mx,
@@ -137,41 +153,121 @@ def footer_stats(path: str) -> FileStats:
     )
 
 
+def footer_stats(path: str) -> FileStats:
+    """Offset range and newest timestamp of one data file, from its
+    parquet footer alone (no data page is read)."""
+    return _stats_from_metadata(path, pq.ParquetFile(path).metadata, os.path.getsize(path))
+
+
+def _min_offset(s: FileStats) -> int:
+    return s.min_offset if s.min_offset is not None else 1 << 62
+
+
 def _by_offset(s: FileStats):
-    return (s.min_offset if s.min_offset is not None else 1 << 62, s.path)
+    return (_min_offset(s), s.path)
 
 
-# Footer cache: partition dir -> {file name: (inode, FileStats)}. Data
-# files are immutable once renamed into place (a rename installs a new
-# inode), so each footer is read once per process. The identity comes from the directory listing itself:
-# one stat() per file per listing would cost more than the whole read.
-_FOOTERS: dict[str, dict[str, tuple[int, FileStats]]] = {}
+def floor_index(files: list[FileStats], offset: int) -> int:
+    """Position in a ``partition_file_stats`` list of the last file whose
+    min_offset is <= ``offset`` (0 when there is none): the floor lookup
+    of the reference's segment map (partition.rs:148-158)."""
+    return max(0, bisect.bisect_right(files, offset, key=_min_offset) - 1)
+
+
+class _Index(NamedTuple):
+    """One partition's segment index (the reference keeps the same map
+    in memory, partition.rs:19-32). ``files`` is published whole and
+    never mutated afterwards; ``footers`` maps file name -> (inode,
+    FileStats) for the files of the last scan and those written since,
+    so a rescan reads only the footers of files it has not seen. Data
+    files are immutable once renamed into place (a rename installs a
+    new inode), so a footer entry stays valid while its inode does."""
+
+    ident: tuple[int, int] | None  # (st_ino, st_mtime_ns) of the dir; None = stale
+    files: list[FileStats]  # sorted by _by_offset
+    footers: dict[str, tuple[int, FileStats]]
+
+
+# Partition dir -> its index. Valid while the directory's identity is
+# unchanged; in-process changes update it (``append_log_files``) or
+# mark it stale (``remove_log_files``, ``invalidate_index``).
+_INDEX: dict[str, _Index] = {}
+
+
+def _dir_ident(pdir: str) -> tuple[int, int]:
+    st = os.stat(pdir)
+    return st.st_ino, st.st_mtime_ns
+
+
+def _mark_stale(pdir: str) -> None:
+    idx = _INDEX.get(pdir)
+    if idx is not None:
+        _INDEX[pdir] = idx._replace(ident=None)
+
+
+def invalidate_index(base_dir: str, topic: str, partition: int | None = None) -> None:
+    """Mark the index of one partition, or of every partition of the
+    topic, stale: the next ``partition_file_stats`` call rescans its
+    directory. Every in-process change to a partition directory other
+    than ``append_log_files`` and ``remove_log_files`` calls this."""
+    if partition is not None:
+        _mark_stale(partition_dir(base_dir, topic, partition))
+        return
+    prefix = topic_dir(base_dir, topic) + os.sep
+    for pdir in [d for d in _INDEX if d.startswith(prefix)]:
+        _mark_stale(pdir)
+
+
+def remove_log_files(paths: Iterable[str]) -> None:
+    """Delete data files and mark their partitions' indexes stale, even
+    when a delete fails midway. Every removal of a single log file goes
+    through here."""
+    dirs = set()
+    try:
+        for path in paths:
+            dirs.add(os.path.dirname(path))
+            os.remove(path)
+    finally:
+        for pdir in dirs:
+            _mark_stale(pdir)
 
 
 def partition_file_stats(base_dir: str, topic: str, partition: int) -> list[FileStats]:
-    """Footer stats for every file of one partition, sorted by
-    min_offset (oldest first) — the recovery scan analog of
+    """The partition's segment index: footer stats for every file,
+    sorted by min_offset (oldest first). The list is shared; callers
+    must not mutate it.
+
+    A call costs one ``os.stat`` of the directory while its identity
+    (inode, mtime) matches the index. Otherwise it rescans the
+    directory (the recovery scan analog of
     flyq-server/src/core/segment.rs:188-237, except parquet footers are
-    self-describing so there is no tail re-scan. Names starting with
-    '.' or '_' are skipped, as Spark's file listing skips them. A
-    listing drops the cache entries of deleted files."""
+    self-describing so there is no tail re-scan) and reads the footers
+    of files it has not seen. Names starting with '.' or '_' are
+    skipped, as Spark's file listing skips them."""
     pdir = partition_dir(base_dir, topic, partition)
+    idx = _INDEX.get(pdir)
     try:
+        # identity first: a change that lands during the scan leaves
+        # the recorded identity behind the directory, so it is rescanned
+        ident = _dir_ident(pdir)
+        if idx is not None and idx.ident == ident:
+            return idx.files
         entries = list(os.scandir(pdir))
     except (FileNotFoundError, NotADirectoryError):
-        _FOOTERS.pop(pdir, None)
+        _INDEX.pop(pdir, None)
         return []
-    cached = _FOOTERS.get(pdir, {})
-    fresh: dict[str, tuple[int, FileStats]] = {}
+    cached = {} if idx is None else idx.footers
+    footers: dict[str, tuple[int, FileStats]] = {}
     for e in entries:
         if not e.name.endswith(".parquet") or e.name.startswith((".", "_")):
             continue
         hit = cached.get(e.name)
         if hit is None or hit[0] != e.inode():
             hit = (e.inode(), footer_stats(e.path))
-        fresh[e.name] = hit
-    _FOOTERS[pdir] = fresh
-    return sorted((fs for _, fs in fresh.values()), key=_by_offset)
+        footers[e.name] = hit
+    files = sorted((fs for _, fs in footers.values()), key=_by_offset)
+    _INDEX[pdir] = _Index(ident, files, footers)
+    return files
 
 
 # Arrow form of schemas.LOG_SCHEMA minus the hive `partition` column —
@@ -210,14 +306,44 @@ def append_log_files(pdir: str, columns: dict[str, list], max_records_per_file: 
     file is written under a dot-prefixed name and renamed into place,
     so a concurrent listing never sees a partial file. ``columns`` maps
     every LOG_ARROW_SCHEMA name to a list; timestamps are epoch
-    microseconds."""
+    microseconds.
+
+    Write-through: when the partition's index was current before the
+    write, each new file's FileStats comes from the writer's own footer
+    metadata and joins the index, which then records the directory
+    identity after the last rename. Otherwise the index is marked
+    stale and the next listing rescans."""
     table = pa.Table.from_pydict(columns, schema=LOG_ARROW_SCHEMA)
-    for start in range(0, table.num_rows, max_records_per_file):
-        chunk = table.slice(start, max_records_per_file)
-        name = f"part-{chunk['offset'][0].as_py():020d}-{uuid.uuid4().hex[:16]}.parquet"
-        tmp = os.path.join(pdir, f".{name}.tmp")
-        pq.write_table(chunk, tmp, write_statistics=_STATS_COLUMNS, store_schema=False)
-        os.replace(tmp, os.path.join(pdir, name))
+    idx = _INDEX.get(pdir)
+    if idx is not None and idx.ident != _dir_ident(pdir):
+        _mark_stale(pdir)
+        idx = None
+    files = None if idx is None else list(idx.files)
+    try:
+        for start in range(0, table.num_rows, max_records_per_file):
+            chunk = table.slice(start, max_records_per_file)
+            name = f"part-{chunk['offset'][0].as_py():020d}-{uuid.uuid4().hex[:16]}.parquet"
+            path = os.path.join(pdir, name)
+            tmp = os.path.join(pdir, f".{name}.tmp")
+            written: list[pq.FileMetaData] = []
+            pq.write_table(
+                chunk,
+                tmp,
+                write_statistics=_STATS_COLUMNS,
+                store_schema=False,
+                metadata_collector=written,
+            )
+            os.replace(tmp, path)
+            if files is not None:
+                st = os.stat(path)
+                fs = _stats_from_metadata(path, written[0], st.st_size)
+                idx.footers[name] = (st.st_ino, fs)
+                bisect.insort(files, fs, key=_by_offset)
+    except BaseException:
+        _mark_stale(pdir)
+        raise
+    if files is not None:
+        _INDEX[pdir] = _Index(_dir_ident(pdir), files, idx.footers)
 
 
 def read_offset_range(path: str, start: int, end: int) -> pa.Table:

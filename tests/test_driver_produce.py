@@ -10,6 +10,7 @@ Spark reader of the log still reads the driver-written files.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 import pytest
@@ -222,6 +223,10 @@ def test_uncommitted_append_is_invisible_and_rolled_back(engine, monkeypatch):
     assert len(storage.partition_file_stats(engine.base_dir, "t", 0)) == 2
     assert engine.consume("t", 0, 3) is None
     assert engine.get_watermark("t", 0) == (0, 2, 3)
+    # range reads stop at LEO too; log() itself stays unbounded
+    assert [r["offset"] for r in engine.read_from_offset("t", 0, 0)] == [0, 1, 2]
+    assert [r["offset"] for r in engine.read_from_offset("t", 0, 2, limit=5)] == [2]
+    assert engine.log("t").count() == 5
 
     assert engine.produce("t", make_messages(2)) == [(0, 3), (0, 4)]
     offsets = sorted(r["offset"] for r in engine.log("t").collect())
@@ -233,6 +238,8 @@ def _uncached_stats(base_dir, topic, partition):
     from flyq_spark import storage
 
     pdir = storage.partition_dir(base_dir, topic, partition)
+    if not os.path.isdir(pdir):
+        return []
     out = [
         storage.footer_stats(os.path.join(pdir, name))
         for name in os.listdir(pdir)
@@ -242,29 +249,277 @@ def _uncached_stats(base_dir, topic, partition):
     return out
 
 
-def test_footer_cache_tracks_deletes_swaps_and_repair(engine):
+@contextmanager
+def _within_one_mtime_tick(base_dir, topic):
+    """Run in-process changes as if the directory mtime were too coarse
+    to show them: every partition directory's mtime is set back
+    afterwards. Only the engine's own index updates can then keep the
+    segment index current."""
     from flyq_spark import storage
+
+    tdir = storage.topic_dir(base_dir, topic)
+    before = {}
+    for name in os.listdir(tdir):
+        if name.startswith("partition="):
+            st = os.stat(os.path.join(tdir, name))
+            before[name] = (st.st_atime_ns, st.st_mtime_ns)
+    yield
+    for name, ns in before.items():
+        path = os.path.join(tdir, name)
+        if os.path.isdir(path):
+            os.utime(path, ns=ns)
+
+
+def _move_mtime(path, seconds=1):
+    """A foreign writer's change as seen on a coarse clock: the
+    directory mtime moves, without sleeping."""
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + seconds * 1_000_000_000))
+
+
+def _count_scans(monkeypatch, pdir):
+    """Directory scans of ``pdir`` from here on."""
+    calls = []
+    real = os.scandir
+
+    def scandir(path="."):
+        if os.fspath(path) == pdir:
+            calls.append(path)
+        return real(path)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    return calls
+
+
+def test_footer_cache_tracks_deletes_swaps_and_repair(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from flyq_spark import storage
+    from flyq_spark.config import EngineConfig
+    from flyq_spark.engine import FlyQEngine
 
     day = 86_400_000
     now = 1_700_000_000_000 + 10 * day
+    engine = FlyQEngine(spark, str(tmp_path / "a"), EngineConfig(max_records_per_file=3))
 
-    def check():
+    def check(eng=engine, topic="f"):
         for p in range(2):
-            cached = storage.partition_file_stats(engine.base_dir, "f", p)
-            assert cached == _uncached_stats(engine.base_dir, "f", p)
+            cached = storage.partition_file_stats(eng.base_dir, topic, p)
+            assert cached == _uncached_stats(eng.base_dir, topic, p)
+
+    def same_tick(eng=engine, topic="f"):
+        return _within_one_mtime_tick(eng.base_dir, topic)
 
     engine.create_topic("f", partitions=2)
+    check()
     for i in range(4):
-        engine.produce("f", make_messages(4, ts0=now - (5 - i) * day))
+        with same_tick():
+            engine.produce("f", make_messages(4, ts0=now - (5 - i) * day))
+        check()
+    with same_tick():
+        assert engine.apply_retention("f", now_ms=now, retention_ms=3 * day)
     check()
-    assert engine.apply_retention("f", now_ms=now, retention_ms=3 * day)
+    with same_tick():
+        assert engine.delete_records("f", 0, 5) == []
     check()
-    assert engine.delete_records("f", 0, 5) == []
-    engine.compact_partition("f", 0)
+    with same_tick():
+        engine.compact_partition("f", 0)
     check()
     meta = storage.load_topic_meta(engine.base_dir, "f")
     meta["log_end_offsets"] = {}
     storage.save_topic_meta(engine.base_dir, "f", meta)
-    engine.repair_topic("f")
+    with same_tick():
+        engine.repair_topic("f")
     check()
     assert engine.get_watermark("f", 0) == (5, 7, 8)
+
+    keyed = spark.range(6).select(
+        F.encode(F.concat(F.lit("k"), (F.col("id") % 2).cast("string")), "utf-8").alias("key"),
+        F.encode(F.col("id").cast("string"), "utf-8").alias("value"),
+        F.timestamp_millis(F.lit(now) + F.col("id")).alias("timestamp"),
+    )
+    with same_tick():
+        engine.produce("f", keyed)
+    check()
+    with same_tick():
+        engine.compact_partition_by_key("f", 1)
+    check()
+
+    mirror = FlyQEngine(spark, str(tmp_path / "b"), EngineConfig(max_records_per_file=3))
+    mirror.create_topic("f", partitions=2)
+    check(mirror)
+    with same_tick(mirror):
+        mirror.mirror_topic(engine, "f")
+    check(mirror)
+
+    with same_tick():
+        engine.delete_topic("f")
+    check()
+    engine.create_topic("f", partitions=2)
+    with same_tick():
+        engine.produce("f", make_messages(2, ts0=now))
+    check()
+
+
+def test_write_through_stats_equal_footers(spark, tmp_path, monkeypatch):
+    """Files a list produce adds enter the index from the writer's own
+    footer metadata, without a directory scan, equal field by field to
+    a footer read (size_bytes and max_timestamp_ms included)."""
+    from flyq_spark import storage
+    from flyq_spark.config import EngineConfig
+    from flyq_spark.engine import FlyQEngine
+
+    engine = FlyQEngine(spark, str(tmp_path), EngineConfig(max_records_per_file=3))
+    engine.create_topic("w", partitions=2)
+    engine.produce("w", _batch(with_seq=False))
+    pdirs = [storage.partition_dir(engine.base_dir, "w", p) for p in range(2)]
+    scans = [_count_scans(monkeypatch, pdir) for pdir in pdirs]
+    micros = datetime(2024, 2, 29, 23, 59, 59, 999_999, tzinfo=timezone.utc)
+    for i in range(3):
+        msgs = _batch(with_seq=i == 1)
+        msgs[-1]["timestamp"] = micros
+        engine.produce("w", msgs)
+    assert scans == [[], []]
+    for p in range(2):
+        stats = storage.partition_file_stats(engine.base_dir, "w", p)
+        assert len(stats) >= 4
+        assert stats == [storage.footer_stats(st.path) for st in stats]
+        assert stats == _uncached_stats(engine.base_dir, "w", p)
+    assert scans == [[], []]
+
+
+def test_index_lists_once_and_sees_foreign_changes(engine, monkeypatch):
+    """Warm produce/consume pairs never scan the directory; a change by
+    another process (files written or removed directly, the directory
+    mtime moved) is seen on the next call, with exactly one scan."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flyq_spark import storage
+
+    engine.create_topic("s", partitions=1)
+    engine.produce("s", make_messages(3))
+    assert engine.consume("s", 0, 0)["offset"] == 0
+    pdir = storage.partition_dir(engine.base_dir, "s", 0)
+    scans = _count_scans(monkeypatch, pdir)
+    for i in range(200):
+        [(_, off)] = engine.produce("s", make_messages(1, ts0=1_700_000_000_000 + i))
+        assert engine.consume("s", 0, off)["offset"] == off
+    assert engine.get_partition_health("s", 0)["segment_count"] == 201
+    assert scans == []
+
+    # another process appends offsets 203..204 and commits them
+    foreign = {
+        "offset": [203, 204],
+        "key": [None, b"f"],
+        "value": [b"foreign0", b"foreign1"],
+        "timestamp": [1_800_000_000_000_000, 1_800_000_000_000_001],
+        "headers": [None, None],
+    }
+    pq.write_table(
+        pa.Table.from_pydict(foreign, schema=storage.LOG_ARROW_SCHEMA),
+        os.path.join(pdir, "part-foreign.parquet"),
+    )
+    meta = storage.load_topic_meta(engine.base_dir, "s")
+    meta["log_end_offsets"]["0"] = 205
+    storage.save_topic_meta(engine.base_dir, "s", meta)
+    _move_mtime(pdir)
+    assert bytes(engine.consume("s", 0, 204)["value"]) == b"foreign1"
+    assert len(scans) == 1
+    assert bytes(engine.consume("s", 0, 203)["value"]) == b"foreign0"
+    assert storage.partition_file_stats(engine.base_dir, "s", 0) == _uncached_stats(
+        engine.base_dir, "s", 0
+    )
+    assert len(scans) == 1
+
+    # another process removes the oldest file
+    oldest = storage.partition_file_stats(engine.base_dir, "s", 0)[0]
+    os.remove(oldest.path)
+    _move_mtime(pdir, seconds=2)
+    stats = storage.partition_file_stats(engine.base_dir, "s", 0)
+    assert oldest not in stats
+    assert stats == _uncached_stats(engine.base_dir, "s", 0)
+    assert len(scans) == 2
+
+
+def _linear_consume(engine, topic, partition, offset):
+    """Reference point read: walk every file of the partition from the
+    oldest, from a fresh footer read of the directory."""
+    from flyq_spark import storage
+    from flyq_spark.engine import _log_row
+
+    low, _, leo = engine.get_watermark(topic, partition)
+    start = max(int(offset), low)
+    if start >= leo:
+        return None
+    best = None
+    for st in _uncached_stats(engine.base_dir, topic, partition):
+        if st.min_offset is not None:
+            if st.min_offset >= leo or (best is not None and st.min_offset > best["offset"]):
+                break
+            if st.max_offset < start:
+                continue
+        table = storage.read_offset_range(st.path, start, leo)
+        for row in table.to_pylist():
+            if best is None or row["offset"] < best["offset"]:
+                best = row
+    return None if best is None else _log_row(best, partition)
+
+
+def test_seek_matches_linear_walk_on_every_layout(spark, tmp_path):
+    """The bisect seek equals the linear walk at every start offset, on
+    the layouts each writer leaves: driver files split by
+    max_records_per_file, Spark DataFrame files, a straddling
+    delete_records, compaction-by-key gaps and retention."""
+    from pyspark.sql import functions as F
+
+    from flyq_spark import storage
+    from flyq_spark.config import EngineConfig
+    from flyq_spark.engine import FlyQEngine
+
+    day = 86_400_000
+    now = 1_700_000_000_000 + 10 * day
+    engine = FlyQEngine(spark, str(tmp_path), EngineConfig(max_records_per_file=3))
+    engine.create_topic("k", partitions=2)
+
+    def check(layout):
+        for p in range(2):
+            _, _, leo = engine.get_watermark("k", p)
+            for off in range(-1, leo + 2):
+                assert engine.consume("k", p, off) == _linear_consume(engine, "k", p, off), (
+                    layout, p, off,
+                )
+
+    def keyed(n, ts0):
+        return [
+            {"key": f"key{i % 3}".encode(), "value": f"v{ts0}-{i}".encode(), "timestamp": ts0 + i}
+            for i in range(n)
+        ]
+
+    engine.produce("k", keyed(14, now - 6 * day))
+    assert max(len(storage.partition_file_stats(engine.base_dir, "k", p)) for p in range(2)) > 2
+    check("driver files")
+    frame = spark.range(12).select(
+        F.encode(F.concat(F.lit("key"), (F.col("id") % 3).cast("string")), "utf-8").alias("key"),
+        F.encode(F.col("id").cast("string"), "utf-8").alias("value"),
+        F.timestamp_millis(F.lit(now - 5 * day) + F.col("id")).alias("timestamp"),
+    )
+    engine.produce("k", frame)
+    engine.produce("k", keyed(8, now - 4 * day))
+    engine.produce("k", keyed(9, now - 3 * day)[::3])  # key0 only: gaps elsewhere
+    check("driver + Spark files")
+    for p in range(2):
+        first = storage.partition_file_stats(engine.base_dir, "k", p)[0]
+        engine.delete_records("k", p, first.max_offset)  # inside the first file
+    check("straddling delete_records")
+    for p in range(2):
+        engine.compact_partition_by_key("k", p)
+    assert any(
+        st.max_offset - st.min_offset + 1 > st.num_rows
+        for p in range(2)
+        for st in storage.partition_file_stats(engine.base_dir, "k", p)
+    )
+    check("compaction gaps")
+    engine.produce("k", keyed(10, now - 1000))
+    assert engine.apply_retention("k", now_ms=now, retention_ms=2 * day)
+    check("retention")

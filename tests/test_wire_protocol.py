@@ -233,6 +233,36 @@ def test_server_closes_on_corrupt_frame(engine):
             assert cli.watermark("wiresafe", 0)["log_end_offset"] == 0
 
 
+def test_server_logs_engine_error_before_closing(spark, tmp_path, caplog):
+    """An engine error still closes the connection without an Error
+    frame, and is logged with its traceback first."""
+    import logging
+
+    from flyq_spark.config import EngineConfig
+    from flyq_spark.engine import FlyQEngine, UnknownTopic
+    from flyq_spark.server import FlyQServer
+
+    engine = FlyQEngine(spark, str(tmp_path), EngineConfig(auto_create_topics=False))
+    caplog.set_level(logging.ERROR, logger="flyq_spark.server")
+    with FlyQServer(engine, clock_ms=lambda: 1) as srv:
+        s = socket.create_connection((srv.host, srv.port), timeout=10)
+        s.sendall(
+            Frame(
+                1, FrameType.REQUEST, 4,
+                wire.encode_payload(
+                    OpCode.PRODUCE, wire.encode_produce_request("nosuch", b"m")
+                ),
+            ).encode()
+        )
+        assert s.recv(1024) == b""  # server hung up, no Error frame
+        s.close()
+    records = [r for r in caplog.records if r.name == "flyq_spark.server"]
+    assert len(records) == 1
+    assert records[0].levelno == logging.ERROR
+    assert records[0].exc_info[0] is UnknownTopic
+    assert not engine.topic_exists("nosuch")
+
+
 def test_server_skips_non_request_frames(engine):
     """Heartbeat/Response frames are skipped (listener.rs:48-51), the
     following Request on the same connection is still served."""
