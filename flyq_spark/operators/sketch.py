@@ -152,12 +152,13 @@ def source_overlap_matrix(
     sketch partials, never shingles (hll_sketch_agg partial-aggregates
     map-side like any typed aggregate); the pairwise stage is a
     broadcast self-join over the tiny sketch table. Estimates carry
-    HLL error (~1.6% at lg_k=12) and can additionally wobble by a few
-    counts with partition merge ORDER (datasketches' sparse→dense
-    promotion path is merge-order-sensitive at small n) — so the gate
-    entry is rows-only (the PAIR SET is exact and deterministic);
-    accuracy and cross-partitioning stability are pinned with
-    tolerances against exact distinct counts in pytest.
+    HLL error (~1.6% at lg_k=12). All three estimates go through
+    ``hll_union``: datasketches estimates a directly aggregated sketch
+    and a union result with different estimators, and mixing the two
+    made the inclusion-exclusion overlap move with the partition count.
+    The gate entry is rows-only (the PAIR SET is exact and
+    deterministic); accuracy and cross-partitioning stability are
+    pinned with tolerances against exact distinct counts in pytest.
 
     Output: (group_a, group_b, est_a, est_b, est_union, est_overlap)
     with group_a < group_b, estimates as BIGINTs (floored)."""
@@ -175,8 +176,8 @@ def source_overlap_matrix(
         F.hll_sketch_agg("_h", F.lit(lg_k)).alias("_sk")
     )
     a, b = sk.alias("a"), sk.alias("b")
-    est_a = F.hll_sketch_estimate(F.col("a._sk"))
-    est_b = F.hll_sketch_estimate(F.col("b._sk"))
+    est_a = F.hll_sketch_estimate(F.hll_union(F.col("a._sk"), F.col("a._sk")))
+    est_b = F.hll_sketch_estimate(F.hll_union(F.col("b._sk"), F.col("b._sk")))
     est_u = F.hll_sketch_estimate(F.hll_union(F.col("a._sk"), F.col("b._sk")))
     return (
         a.join(F.broadcast(b), F.col("a.g") < F.col("b.g"))

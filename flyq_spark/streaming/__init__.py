@@ -1,5 +1,6 @@
-"""Structured Streaming surface: log-table tail source, produce sink,
-event-time analytics, and custom stateful operators."""
+"""Structured Streaming surface: the offset-based ``format("flyq")`` tail
+source, produce sink, event-time analytics, and custom stateful
+operators."""
 
 from flyq_spark.streaming.sink import produce_sink, write_stream_to_topic
 from flyq_spark.streaming.source import read_stream, streaming_dedup, windowed_counts

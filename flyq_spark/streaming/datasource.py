@@ -16,11 +16,15 @@ Offsets are the engine's own (partition -> next offset to read) map —
 the same numbers consumer groups commit, so a stream's checkpoint and a
 batch consumer's committed offsets are interchangeable positions.
 
+Each micro-batch is the committed range [start, end) of every partition:
+``start`` is clamped at the low watermark and ``end`` is the LEO (log end
+offset), so a batch never holds truncated or uncommitted records.
+Positions are offsets, not file paths, so compaction cannot re-deliver.
+
 Executor-side reads go straight to the partition's parquet files through
 pyarrow with an offset-range filter (row-group stats give the same
-skipping the JVM scan gets); the driver never touches data. The file
-tail source (source.py) remains the zero-code alternative; this source
-adds Kafka-shaped offset semantics on top.
+skipping the JVM scan gets) and hand Spark Arrow record batches; the
+driver never touches data.
 """
 
 from __future__ import annotations
@@ -90,12 +94,19 @@ class FlyQStreamReader(DataSourceStreamReader):
         return {str(p): int(o) for p, o in explicit.items()}
 
     def latestOffset(self) -> dict:
-        return self._leos()
+        # Spark takes a batch's end as the next batch's start, so an end
+        # below an explicit start past the LEO would rewind the stream
+        start = self.initialOffset()
+        return {p: max(leo, start.get(p, 0)) for p, leo in self._leos().items()}
 
     def partitions(self, start: dict, end: dict):
+        # clamp at the low watermark: delete_records is a logical
+        # truncation (a file straddling the cutoff keeps its lower rows on
+        # disk), the same rule as engine._clamped_start
+        low = self._meta()["low_watermarks"]
         parts = []
         for p, end_off in end.items():
-            start_off = int(start.get(p, 0))
+            start_off = max(int(start.get(p, 0)), int(low.get(p, 0)))
             if int(end_off) > start_off:
                 parts.append(
                     FlyQRangePartition(
@@ -127,6 +138,7 @@ class FlyQStreamReader(DataSourceStreamReader):
                 f"[{partition.start}, {partition.end}) — transient "
                 "(compaction swap?); task will retry"
             )
+        import pyarrow as pa
         import pyarrow.dataset as ds
 
         dataset = ds.dataset(partition.pdir, format="parquet")
@@ -135,29 +147,12 @@ class FlyQStreamReader(DataSourceStreamReader):
             filter=(ds.field("offset") >= partition.start)
             & (ds.field("offset") < partition.end),
         ).sort_by("offset")
-
-        def rows():
-            # chunked conversion: bound the Python-object footprint to
-            # one record batch at a time (a whole-partition 'earliest'
-            # first batch would otherwise hold the full history as
-            # dicts — several-x amplification over the Arrow table)
-            for batch in table.to_batches(max_chunksize=8192):
-                for r in batch.to_pylist():
-                    yield (
-                        partition.partition,
-                        r["offset"],
-                        r["key"],
-                        r["value"],
-                        r["timestamp"],
-                        # struct elements as tuples — the DataSource row
-                        # protocol positionally converts nested structs
-                        # like top-level rows
-                        [(h["key"], h["value"]) for h in r["headers"]]
-                        if r["headers"] is not None
-                        else None,
-                    )
-
-        return rows()
+        table = table.add_column(
+            0,
+            "partition",
+            pa.repeat(pa.scalar(partition.partition, pa.int32()), table.num_rows),
+        )
+        return iter(table.to_batches(max_chunksize=8192))
 
 
 class FlyQDataSource(DataSource):

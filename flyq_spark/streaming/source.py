@@ -1,10 +1,10 @@
-"""Streaming read side: tail a topic's log table.
+"""Streaming read side: tail a topic's log.
 
 The reference's continuous consumer is an iterator that follows the log
 across segment files (flyq-server/src/core/partition.rs:311-355). The
-Spark restatement is the file streaming source over the topic directory:
-every produce commit lands new parquet files, which the source picks up
-incrementally with exactly-once bookkeeping in the stream checkpoint —
+Spark restatement is the offset-based ``format("flyq")`` source
+(streaming/datasource.py): every micro-batch is a replayable range of
+committed offsets per partition, recorded in the stream checkpoint —
 the Structured Streaming analog of consumer-group offsets (SURVEY §2
 Part B streaming row).
 
@@ -14,11 +14,13 @@ aggregation under a watermark, and within-watermark dedup.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import json
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flyq_spark import storage
-from flyq_spark.schemas import LOG_SCHEMA
+from flyq_spark.streaming import datasource
 
 
 def read_stream(
@@ -26,28 +28,33 @@ def read_stream(
     base_dir: str,
     topic: str,
     from_offset: int | None = None,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Tail a topic as a stream. ``from_offset`` plays the role of the
-    Kafka source's startingOffsets (applied as a pushed-down filter;
-    files wholly below it are pruned via footer stats).
-
-    CONSTRAINT: this is a FILE-tail — Spark's file source identifies
-    input by path, so engine COMPACTION (which rewrites a partition
-    into new files carrying the same offsets) would re-deliver every
-    surviving row as new input. Do not run ``maintain``/compaction on a
-    topic while a file-tail query is live; the offset-based
-    ``format("flyq")`` source (streaming/datasource.py) tracks
-    positions by OFFSET and is immune — prefer it when maintenance
-    must run concurrently."""
-    tdir = storage.topic_dir(base_dir, topic)
-    reader = spark.readStream.schema(LOG_SCHEMA).option("basePath", tdir)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.parquet(tdir)
+    """Tail a topic as a stream of committed records. ``from_offset``
+    plays the role of the Kafka source's startingOffsets, applied to every
+    partition; without it the stream starts at the earliest retained
+    offset."""
+    starting = "earliest"
     if from_offset is not None:
-        df = df.where(F.col("offset") >= from_offset)
-    return df
+        meta = storage.load_topic_meta(base_dir, topic)
+        if meta is None:
+            raise ValueError(f"unknown topic {topic!r} under {base_dir}")
+        starting = json.dumps(
+            {str(p): int(from_offset) for p in range(int(meta["partitions"]))}
+        )
+    return _flyq_stream(spark, base_dir, topic, starting)
+
+
+def _flyq_stream(
+    spark: SparkSession, base_dir: str, topic: str, starting: str
+) -> DataFrame:
+    datasource.register(spark)
+    return (
+        spark.readStream.format("flyq")
+        .option("base_dir", base_dir)
+        .option("topic", topic)
+        .option("startingOffsets", starting)
+        .load()
+    )
 
 
 def windowed_counts(
@@ -105,94 +112,27 @@ def consume_stream_with_group(
     reference's contract, with the group's progress visible to lag/
     monitor APIs exactly like a batch consumer's.
 
-    Two bookkeeping layers cooperate: the stream checkpoint dedups file
-    input across restarts, while the committed offsets keep the FlyQ-side
-    cursor (and filter out pre-committed rows on a fresh checkpoint).
-
-    Commits are CONTIGUITY-AWARE: offsets are dense per partition, so a
-    batch that sees offsets [100, 199] while [c, 99] are not yet visible
-    (file listing races the multi-file produce commit) advances the
-    committed offset only to the first gap — never past rows that were
-    not processed. Without this, a crash + fresh-checkpoint restart
-    (which trusts the committed offsets) would permanently skip the
-    unseen range, breaking at-least-once.
+    A fresh checkpoint starts at max(committed, low watermark) per
+    partition; an existing one resumes from its own offsets. Each
+    micro-batch is the whole committed range [start, end) of every
+    partition it covers, so no offset below a batch's maximum can still
+    be missing and max + 1 is a safe commit.
     """
-    # Start at max(committed, low watermark) per partition: delete_records
-    # is a LOGICAL truncation (below-cutoff rows linger on disk until
-    # compaction), so the file-tail must clamp exactly like the batch read
-    # paths (engine._clamped_start) — both to avoid re-delivering
-    # truncated rows and so the contiguity commit can restart when
-    # retention advanced past the committed offset.
-    committed0 = {
-        p: engine._clamped_start(
+    starting = {
+        str(p): engine._clamped_start(
             topic, p, int(engine.committed_offset(group, topic, p) or 0)
         )
         for p in range(engine.topic_partitions(topic))
     }
-    start_filter = None
-    for p, off in committed0.items():
-        cond = (F.col("partition") == p) & (F.col("offset") >= off)
-        start_filter = cond if start_filter is None else (start_filter | cond)
-
-    stream = read_stream(engine.spark, engine.base_dir, topic)
-    if start_filter is not None:
-        stream = stream.where(start_filter)
-    spark_sess = engine.spark
+    stream = _flyq_stream(engine.spark, engine.base_dir, topic, json.dumps(starting))
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         process(batch_df)
-        # contiguous-prefix commit against the CURRENT committed offset
-        # (re-read per batch — it advances across batches): consider
-        # only rows at >= committed, rank them by offset, and the
-        # prefix rows satisfy offset - rn == committed - 1; max(offset)
-        # over that prefix + 1 is the largest safe commit. Late files
-        # re-delivering already-committed offsets rank below the filter
-        # and cannot stall or corrupt the cursor.
-        parts = [
-            int(r["partition"])
-            for r in batch_df.select("partition").distinct().collect()
-        ]
-        # Base = max(committed, low watermark): if retention/delete_records
-        # truncated past the committed offset, that offset never reappears
-        # and a committed-only base would leave the contiguity prefix empty
-        # forever (cursor permanently stalled). Clamping (mirroring
-        # engine._clamped_start) lets the prefix restart at the first
-        # retained offset — the truncated range is gone by policy, not
-        # skipped processing.
-        cur = spark_sess.createDataFrame(
-            [
-                (
-                    p,
-                    int(
-                        engine._clamped_start(
-                            topic, p, int(engine.committed_offset(group, topic, p) or 0)
-                        )
-                    ),
-                )
-                for p in parts
-            ],
-            "partition int, _c long",
-        )
-        w = Window.partitionBy("partition").orderBy("offset")
-        ranked = (
-            batch_df.select("partition", "offset")
-            .join(F.broadcast(cur), "partition")
-            .where(F.col("offset") >= F.col("_c"))
-            .withColumn("_rn", F.row_number().over(w))
-        )
-        tops = (
-            ranked.where(F.col("offset") - F.col("_rn") == F.col("_c") - 1)
-            .groupBy("partition")
-            .agg(F.max("offset").alias("mx"))
-            .collect()
-        )
+        tops = batch_df.groupBy("partition").agg(F.max("offset").alias("mx")).collect()
         for r in tops:
-            nxt = int(r["mx"]) + 1
-            prev = engine.committed_offset(group, topic, int(r["partition"])) or 0
-            if nxt > prev:
-                engine.commit_offset(group, topic, int(r["partition"]), nxt)
+            p, nxt = int(r["partition"]), int(r["mx"]) + 1
+            if nxt > (engine.committed_offset(group, topic, p) or 0):
+                engine.commit_offset(group, topic, p, nxt)
 
     writer = (
         stream.writeStream.outputMode("append")

@@ -201,11 +201,12 @@ def test_driver_files_serve_retention_key_reads_and_compaction(engine):
     assert engine.consume("r", 0, 0)["offset"] == 3
 
 
-def test_uncommitted_append_is_invisible_and_rolled_back(engine, monkeypatch):
+def test_uncommitted_append_is_invisible_and_rolled_back(engine, spark, monkeypatch):
     """A produce that dies between its file write and its meta commit
-    leaves a file past LEO: reads never see it, and the next produce
-    deletes it and reuses its offsets densely."""
+    leaves a file past LEO: reads and the stream never see it, and the
+    next produce deletes it and reuses its offsets densely."""
     from flyq_spark import storage
+    from flyq_spark.streaming.source import read_stream
 
     engine.produce("t", make_messages(3))
     real = storage.save_topic_meta
@@ -226,6 +227,18 @@ def test_uncommitted_append_is_invisible_and_rolled_back(engine, monkeypatch):
     # range reads stop at LEO too; log() itself stays unbounded
     assert [r["offset"] for r in engine.read_from_offset("t", 0, 0)] == [0, 1, 2]
     assert [r["offset"] for r in engine.read_from_offset("t", 0, 2, limit=5)] == [2]
+    streamed = []
+    (
+        read_stream(spark, engine.base_dir, "t")
+        .writeStream.foreachBatch(
+            lambda df, _bid: streamed.extend(r["offset"] for r in df.collect())
+        )
+        .option("checkpointLocation", os.path.join(engine.base_dir, "_ck"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
+    assert sorted(streamed) == [0, 1, 2]
     assert engine.log("t").count() == 5
 
     assert engine.produce("t", make_messages(2)) == [(0, 3), (0, 4)]

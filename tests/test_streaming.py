@@ -34,6 +34,22 @@ def _write_input_chunk(spark, path, start, n, ts0=1_700_000_000_000):
     rows.coalesce(1).write.mode("append").parquet(path)
 
 
+def _drain(stream, ckpt, mode="append"):
+    """One availableNow run of ``stream`` on checkpoint ``ckpt`` through a
+    foreachBatch sink (the memory sink cannot resume a checkpoint);
+    returns every row the run's micro-batches held."""
+    rows: list = []
+    q = (
+        stream.writeStream.outputMode(mode)
+        .foreachBatch(lambda df, _bid: rows.extend(df.collect()))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    return rows
+
+
 def test_produce_sink_roundtrip(engine, spark, tmp_path):
     """file stream -> foreachBatch produce sink -> log table has every
     record with dense offsets; a second chunk continues LEO."""
@@ -89,6 +105,12 @@ def test_tail_log_stream(engine, spark, tmp_path):
     q.awaitTermination(120)
     got = spark.sql("SELECT offset FROM tail_test2 ORDER BY offset").collect()
     assert [int(r["offset"]) for r in got] == [2, 3, 4, 5, 6, 7, 8]
+
+    # a start past the LEO waits for the log to reach it, never rewinds
+    ahead = read_stream(spark, engine.base_dir, "tl", from_offset=11)
+    assert _drain(ahead, str(tmp_path / "ckpt3")) == []
+    engine.produce("tl", make_messages(3))
+    assert [r["offset"] for r in _drain(ahead, str(tmp_path / "ckpt3"))] == [11]
 
 
 def test_windowed_counts_under_watermark(engine, spark, tmp_path):
@@ -153,30 +175,38 @@ def test_streaming_dedup_within_watermark(engine, spark, tmp_path):
 
 
 def test_running_counts_stateful(engine, spark, tmp_path):
-    """applyInPandasWithState keeps per-key counts across micro-batches."""
+    """applyInPandasWithState keeps per-key counts across micro-batches:
+    the second run on the checkpoint adds to the first run's state."""
     from flyq_spark.streaming.source import read_stream, running_counts_stateful
     from tests.conftest import make_messages
 
     engine.produce("rc", make_messages(4, key=b"k1"))
-    engine.produce("rc", make_messages(2, key=b"k2"))
-    stream = read_stream(spark, engine.base_dir, "rc", max_files_per_trigger=1)
+    stream = read_stream(spark, engine.base_dir, "rc")
     counts = running_counts_stateful(stream, key_col="key")
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("rc_test")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    final = {
-        r["key"]: int(r["n"])
-        for r in spark.sql(
-            "SELECT key, max(n) AS n FROM rc_test GROUP BY key"
-        ).collect()
-    }
-    assert final == {"k1": 4, "k2": 2}
+    ckpt = str(tmp_path / "ckpt")
+    first = _drain(counts, ckpt, "update")
+    engine.produce("rc", make_messages(2, key=b"k2") + make_messages(1, key=b"k1"))
+    second = _drain(counts, ckpt, "update")
+    assert {r["key"]: int(r["n"]) for r in first} == {"k1": 4}
+    assert {r["key"]: int(r["n"]) for r in second} == {"k1": 5, "k2": 2}
+
+
+def test_stream_clamps_at_low_watermark(engine, spark, tmp_path):
+    """delete_records is a logical truncation: the file straddling the
+    cutoff keeps its lower rows on disk. The next micro-batch still starts
+    at the low watermark, as read_from_offset does."""
+    from flyq_spark.streaming.source import read_stream
+    from tests.conftest import make_messages
+
+    engine.produce("lw", make_messages(3))
+    stream = read_stream(spark, engine.base_dir, "lw")
+    ckpt = str(tmp_path / "ckpt")
+    assert sorted(r["offset"] for r in _drain(stream, ckpt)) == [0, 1, 2]
+    engine.produce("lw", make_messages(7, ts0=1_800_000_000_000))
+    engine.delete_records("lw", 0, before_offset=6)
+    want = [r["offset"] for r in engine.read_from_offset("lw", 0, 0)]
+    assert want == [6, 7, 8, 9]
+    assert sorted(r["offset"] for r in _drain(stream, ckpt)) == want
 
 
 def test_consume_stream_with_group_commits_offsets(engine, spark, tmp_path):
@@ -209,10 +239,8 @@ def test_consume_stream_with_group_survives_retention_truncation(
 ):
     """If retention/delete_records advances the low watermark PAST a
     group's committed offset, the committed offset never reappears in any
-    batch — a committed-only contiguity base would leave the prefix empty
-    forever and stall the cursor. The base is clamped to
-    max(committed, low watermark) so the prefix restarts at the first
-    retained offset and the cursor advances to the LEO."""
+    batch. The stream starts at max(committed, low watermark), so only
+    retained offsets are delivered and the cursor advances to the LEO."""
     from flyq_spark.streaming.source import consume_stream_with_group
     from tests.conftest import make_messages
 
@@ -294,11 +322,9 @@ def test_flyq_datasource_stream(engine, spark, tmp_path):
 
 
 def test_flyq_datasource_survives_compaction(engine, spark, tmp_path):
-    """The offset-based format("flyq") source tracks positions by
-    OFFSET, so engine compaction (which rewrites a partition into new
-    FILES carrying the same offsets) must not re-deliver already-read
-    records — the documented contrast with the file-tail read_stream,
-    which identifies input by path and is compaction-unsafe."""
+    """The format("flyq") source tracks positions by OFFSET, so engine
+    compaction (which rewrites a partition into new FILES carrying the
+    same offsets) must not re-deliver already-read records."""
     from flyq_spark.streaming.datasource import register
     from tests.conftest import make_messages
 
@@ -385,24 +411,18 @@ def test_watermark_tracker_stateful_tws(engine, spark, tmp_path):
     from tests.conftest import make_messages
 
     engine.produce("wt", make_messages(5, key=b"a"))
+    tracked = watermark_tracker_stateful(read_stream(spark, engine.base_dir, "wt"))
+    ckpt = str(tmp_path / "ckpt_wt")
+    first = _drain(tracked, ckpt, "update")
     engine.produce("wt", make_messages(3, key=b"a"))
-    stream = read_stream(spark, engine.base_dir, "wt", max_files_per_trigger=1)
-    tracked = watermark_tracker_stateful(stream)
-    q = (
-        tracked.writeStream.format("memory")
-        .queryName("wt_test")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_wt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql(
-        "SELECT key, max(high) AS high, max(n_seen) AS n FROM wt_test GROUP BY key"
-    ).collect()
-    got = {r["key"]: (r["high"], r["n"]) for r in rows}
-    # single-partition topic: 8 messages, offsets 0..7
-    assert got == {0: (7, 8)}
+    second = _drain(tracked, ckpt, "update")
+
+    def bounds(rows):
+        return {r["key"]: (r["high"], r["n_seen"]) for r in rows}
+
+    # single-partition topic: 5 then 3 messages, offsets 0..7
+    assert bounds(first) == {0: (4, 5)}
+    assert bounds(second) == {0: (7, 8)}
 
 
 def test_stream_stream_interval_join(engine, spark, tmp_path):
