@@ -29,10 +29,30 @@ Spark-first restatement of the FlyQ broker:
 
 Concurrency contract: single writer per topic (the reference is stricter —
 one global engine mutex serializes every op, types.rs:4; we only require
-produce/retention on the *same topic* not to race). Range reads are
-snapshot-isolated by Spark's plan-time file listing, the analog of the
-reference's Arc-based deferred deletion (segment.rs:336-351); data files
-appear only by rename, so no listing sees a partial file.
+produce/retention on the *same topic* not to race). Reads need no lock
+and may run while the writer works. Range reads are snapshot-isolated by
+Spark's plan-time file listing, the analog of the reference's Arc-based
+deferred deletion (segment.rs:336-351); data files appear only by
+rename, so no listing sees a partial file. Point reads, watermarks, lag
+and health read the committed snapshot, by this ordering:
+
+- a produce renames its files into place and publishes them to the
+  segment index before its meta commit (the atomic rename of
+  ``_topic_meta.json`` that advances LEO);
+- a reader loads the meta first and the index second, so every file
+  below the LEO it loaded is already in the directory and the index
+  when it looks;
+- files at or past that LEO (a produce in flight, or the leftovers of a
+  crashed one) are invisible, because every read is bounded at LEO and
+  health counts only the files below it;
+- a file deleted under a reader (retention, compaction) raises
+  ``FileNotFoundError``, which a point read answers with one rescan.
+
+``commit_offset`` serializes itself and not with the writer: an
+engine-owned lock spans its in-memory upsert and the offsets file
+write and fsync, so concurrent commits (wire connections, a streaming
+``foreachBatch``) never lose one another or race on the offsets file,
+and a commit's fsync overlaps a produce instead of waiting for it.
 
 Produce, point consume, retention and health read each partition's
 segment index from memory (``storage.partition_file_stats``): one
@@ -51,6 +71,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import threading
 from datetime import datetime, timezone
 from typing import Any, Iterable
 
@@ -139,6 +160,7 @@ class FlyQEngine:
         # JSON files; log data needs no recovery scan (parquet footers are
         # self-describing).
         self._offsets: dict[str, dict[str, dict[int, int]]] = self._load_offsets()
+        self._offsets_lock = threading.Lock()
 
     # ------------------------------------------------------------------ #
     # topic management
@@ -180,8 +202,9 @@ class FlyQEngine:
     def describe_topic(self, topic: str) -> dict:
         """One-call topic summary (the CLI ``describe`` payload):
         partition count, per-partition (low, high, leo), per-topic
-        config overrides, and file/byte totals — all from meta + footer
-        stats, no data scan."""
+        config overrides, and file/byte totals over the committed files
+        (those starting below LEO) — all from meta + footer stats, no
+        data scan."""
         meta = self._meta(topic)
         n = int(meta["partitions"])
         parts = {}
@@ -189,7 +212,7 @@ class FlyQEngine:
         n_bytes = 0
         for p in range(n):
             low, high, leo = self._watermark_from_meta(meta, p)
-            stats = storage.partition_file_stats(self.base_dir, topic, p)
+            stats = self._committed_files(topic, p, leo)
             n_files += len(stats)
             n_bytes += sum(st.size_bytes for st in stats)
             parts[p] = {"low": low, "high": high, "log_end_offset": leo,
@@ -204,7 +227,7 @@ class FlyQEngine:
         }
 
     def topic_exists(self, topic: str) -> bool:
-        return storage.load_topic_meta(self.base_dir, topic) is not None
+        return os.path.exists(storage.topic_meta_path(self.base_dir, topic))
 
     def list_topics(self) -> list[str]:
         return storage.list_topics(self.base_dir)
@@ -248,11 +271,12 @@ class FlyQEngine:
         list input, and a dict ``{partition: (base_offset,
         new_log_end_offset)}`` for DataFrame input.
         """
-        if not self.topic_exists(topic):
+        meta = storage.load_topic_meta(self.base_dir, topic)
+        if meta is None:
             if not self.config.auto_create_topics:
                 raise UnknownTopic(topic)
             self.create_topic(topic)
-        meta = self._meta(topic)
+            meta = self._meta(topic)
         n = int(meta["partitions"])
         prev_leo = {int(k): int(v) for k, v in meta["log_end_offsets"].items()}
         rr_cursor = int(meta.get("rr_cursor", 0))
@@ -302,14 +326,12 @@ class FlyQEngine:
         is checked."""
         for p in range(int(meta["partitions"])):
             leo = int(meta["log_end_offsets"].get(str(p), 0))
-            victims = []
-            for st in reversed(storage.partition_file_stats(self.base_dir, topic, p)):
-                if st.min_offset is None:
-                    continue  # empty files sort after every offset
-                if st.min_offset < leo:
-                    break
-                victims.append(st.path)
-            storage.remove_log_files(victims)
+            stats = storage.partition_file_stats(self.base_dir, topic, p)
+            storage.remove_log_files(
+                st.path
+                for st in stats[storage.committed_count(stats, leo):]
+                if st.min_offset is not None  # an empty file holds no offset
+            )
 
     def _produce_list(
         self,
@@ -790,20 +812,22 @@ class FlyQEngine:
         flush window (runtime/flush.rs:9-39)."""
         if not self.topic_exists(topic):
             raise UnknownTopic(topic)
-        self._offsets.setdefault(group, {}).setdefault(topic, {})[int(partition)] = int(offset)
-        self._save_offsets()
+        with self._offsets_lock:
+            self._offsets.setdefault(group, {}).setdefault(topic, {})[int(partition)] = int(offset)
+            self._save_offsets()
 
     def committed_offset(self, group: str, topic: str, partition: int) -> int | None:
         return self._offsets.get(group, {}).get(topic, {}).get(int(partition))
 
     def consumer_offsets_df(self) -> DataFrame:
         """Control state as a (broadcastable) DataFrame for join-based lag."""
-        rows = [
-            Row(group=g, topic=t, partition=int(p), offset=int(o))
-            for g, topics in self._offsets.items()
-            for t, parts in topics.items()
-            for p, o in parts.items()
-        ]
+        with self._offsets_lock:
+            rows = [
+                Row(group=g, topic=t, partition=int(p), offset=int(o))
+                for g, topics in self._offsets.items()
+                for t, parts in topics.items()
+                for p, o in parts.items()
+            ]
         return self.spark.createDataFrame(rows, CONSUMER_OFFSETS_SCHEMA)
 
     # ------------------------------------------------------------------ #
@@ -916,7 +940,11 @@ class FlyQEngine:
         parts_out = []
         total = 0
         for t in topics:
-            meta = self._meta(t)
+            meta = storage.load_topic_meta(self.base_dir, t)
+            if meta is None:
+                if topic is not None:
+                    raise UnknownTopic(topic)
+                continue  # listed but not created yet: create_topic writes its meta last
             for p in range(int(meta["partitions"])):
                 _, high, leo = self._watermark_from_meta(meta, p)
                 committed = self.committed_offset(group, t, p) or 0
@@ -934,11 +962,19 @@ class FlyQEngine:
                 )
         return {"group": group, "total_lag": total, "partitions": parts_out}
 
+    def _committed_files(self, topic: str, partition: int, leo: int) -> list[storage.FileStats]:
+        """The partition's files that start below ``leo``, the LEO of a
+        meta loaded BEFORE this call (see the concurrency contract)."""
+        stats = storage.partition_file_stats(self.base_dir, topic, partition)
+        return stats[: storage.committed_count(stats, leo)]
+
     def get_partition_health(self, topic: str, partition: int) -> dict:
         """segment_count/size/watermarks (log_engine.rs:226-256;
-        last_cleanup is always None in the reference, :246)."""
-        stats = storage.partition_file_stats(self.base_dir, topic, partition)
+        last_cleanup is always None in the reference, :246). Counts only
+        the committed files, so the leftovers of a crashed produce and
+        the files of a produce in flight are not segments yet."""
         low, high, leo = self.get_watermark(topic, partition)
+        stats = self._committed_files(topic, partition, leo)
         return {
             "topic": topic,
             "partition": partition,

@@ -9,9 +9,17 @@ consume, commit, and inspect watermarks/lag/health against the Spark
 log without knowing the broker moved.
 
 Parity notes:
-- one thread per connection, all dispatch serialized through a single
-  engine lock — the reference's effective concurrency model (its global
-  engine mutex, types.rs:4);
+- one thread per connection, as the reference's per-connection task;
+- DIVERGENCE (deliberate): only PRODUCE takes the server's lock. The
+  reference serializes every opcode through one global engine mutex
+  (types.rs:4). Our log does not need it: the engine asks for a single
+  writer per topic, and its reads (CONSUME, CONSUME_WITH_GROUP,
+  WATERMARK, GET_CONSUMER_LAG, GET_PARTITION_HEALTH) see a
+  read-committed snapshot, bounded at the LEO of an atomically renamed
+  meta over data files that never change once renamed into place (see
+  the engine's concurrency contract). So reads never queue behind a
+  produce, nor a produce behind reads. COMMIT_OFFSET runs under the
+  engine's own commit lock, not this one;
 - wire produce is KEYLESS with a server-assigned timestamp — the
   reference handler discards nothing else because the request only
   carries (topic, value) (listener.rs:89-96);
@@ -114,9 +122,9 @@ class FlyQServer:
     # ---------------- dispatch (listener.rs:71-84) ---------------- #
 
     def _dispatch(self, op: OpCode, data: bytes) -> bytes:
-        with self._lock:
-            if op == OpCode.PRODUCE:
-                req = wire.decode_produce_request(data)
+        if op == OpCode.PRODUCE:
+            req = wire.decode_produce_request(data)
+            with self._lock:  # the engine's single writer
                 acks = self.engine.produce(
                     req["topic"],
                     [
@@ -127,66 +135,66 @@ class FlyQServer:
                         }
                     ],
                 )
-                p, off = acks[0]
-                return wire.encode_produce_ack(p, off)
-            if op == OpCode.CONSUME:
-                req = wire.decode_consume_request(data)
-                row = self.engine.consume(
-                    req["topic"], req["partition"], req["offset"]
-                )
-                if row is None:
-                    return b""
-                # the row's ACTUAL offset, not the requested one: consume
-                # returns the first record at >= offset (clamped at the
-                # low watermark), and a client paginating with
-                # response.offset + 1 must advance past it
-                return self._row_response(int(row["offset"]), row)
-            if op == OpCode.CONSUME_WITH_GROUP:
-                req = wire.decode_consume_with_group_request(data)
-                got = self.engine.consume_with_group(
-                    req["topic"], req["partition"], req["group"]
-                )
-                if got is None:
-                    return b""
-                _committed, row = got
-                # the delivered record's actual offset (see CONSUME): a
-                # client committing response.offset + 1 must move past
-                # the record it just read, even across truncation gaps
-                return self._row_response(int(row["offset"]), row)
-            if op == OpCode.COMMIT_OFFSET:
-                req = wire.decode_commit_offset_request(data)
-                self.engine.commit_offset(
-                    req["group"], req["topic"], req["partition"], req["offset"]
-                )
+            p, off = acks[0]
+            return wire.encode_produce_ack(p, off)
+        if op == OpCode.CONSUME:
+            req = wire.decode_consume_request(data)
+            row = self.engine.consume(
+                req["topic"], req["partition"], req["offset"]
+            )
+            if row is None:
                 return b""
-            if op == OpCode.WATERMARK:
-                req = wire.decode_watermark_request(data)
-                low, high, leo = self.engine.get_watermark(
-                    req["topic"], req["partition"]
-                )
-                return wire.encode_watermark_response(low, high, leo)
-            if op == OpCode.GET_CONSUMER_LAG:
-                req = wire.decode_consumer_lag_request(data)
-                topics = req["topics"]
-                if topics is None:
-                    lag = self.engine.get_consumer_lag(req["group"])
-                    total, parts = lag["total_lag"], lag["partitions"]
-                else:
-                    total, parts = 0, []
-                    for t in topics:
-                        lag = self.engine.get_consumer_lag(req["group"], t)
-                        total += lag["total_lag"]
-                        parts.extend(lag["partitions"])
-                return wire.encode_consumer_lag_response(
-                    req["group"], total, parts
-                )
-            if op == OpCode.GET_PARTITION_HEALTH:
-                req = wire.decode_partition_health_request(data)
-                h = self.engine.get_partition_health(
-                    req["topic"], req["partition"]
-                )
-                return wire.encode_partition_health_response(h)
-            raise ProtocolError(f"unhandled op {op}")
+            # the row's ACTUAL offset, not the requested one: consume
+            # returns the first record at >= offset (clamped at the
+            # low watermark), and a client paginating with
+            # response.offset + 1 must advance past it
+            return self._row_response(int(row["offset"]), row)
+        if op == OpCode.CONSUME_WITH_GROUP:
+            req = wire.decode_consume_with_group_request(data)
+            got = self.engine.consume_with_group(
+                req["topic"], req["partition"], req["group"]
+            )
+            if got is None:
+                return b""
+            _committed, row = got
+            # the delivered record's actual offset (see CONSUME): a
+            # client committing response.offset + 1 must move past
+            # the record it just read, even across truncation gaps
+            return self._row_response(int(row["offset"]), row)
+        if op == OpCode.COMMIT_OFFSET:
+            req = wire.decode_commit_offset_request(data)
+            self.engine.commit_offset(
+                req["group"], req["topic"], req["partition"], req["offset"]
+            )
+            return b""
+        if op == OpCode.WATERMARK:
+            req = wire.decode_watermark_request(data)
+            low, high, leo = self.engine.get_watermark(
+                req["topic"], req["partition"]
+            )
+            return wire.encode_watermark_response(low, high, leo)
+        if op == OpCode.GET_CONSUMER_LAG:
+            req = wire.decode_consumer_lag_request(data)
+            topics = req["topics"]
+            if topics is None:
+                lag = self.engine.get_consumer_lag(req["group"])
+                total, parts = lag["total_lag"], lag["partitions"]
+            else:
+                total, parts = 0, []
+                for t in topics:
+                    lag = self.engine.get_consumer_lag(req["group"], t)
+                    total += lag["total_lag"]
+                    parts.extend(lag["partitions"])
+            return wire.encode_consumer_lag_response(
+                req["group"], total, parts
+            )
+        if op == OpCode.GET_PARTITION_HEALTH:
+            req = wire.decode_partition_health_request(data)
+            h = self.engine.get_partition_health(
+                req["topic"], req["partition"]
+            )
+            return wire.encode_partition_health_response(h)
+        raise ProtocolError(f"unhandled op {op}")
 
     @staticmethod
     def _row_response(offset: int, row) -> bytes:

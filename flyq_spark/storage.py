@@ -32,6 +32,16 @@ process moves the directory's identity. A foreign change within one
 mtime tick of our own is a concurrent writer, which the engine's
 single-writer contract already excludes; point reads also rescan once
 when the index holds no committed offset they ask for.
+
+Readers run concurrently with the writer, so every write to the index
+goes through one mutex, and a rescan is published compare-and-set: only
+if the partition's index is still the object the rescan started from.
+A writer publishes (its write-through, or a stale mark) only after its
+last rename, and a stale mark always installs a new object. So a rescan
+that listed the directory before a write can never overwrite that
+write's index with its older listing, even when the write left the
+directory's identity unchanged; its caller still gets the listing,
+which covers every file renamed into place before the scan began.
 """
 
 from __future__ import annotations
@@ -40,6 +50,7 @@ import bisect
 import json
 import os
 import re
+import threading
 import uuid
 from dataclasses import dataclass
 from datetime import timezone
@@ -72,16 +83,20 @@ def atomic_write_json(path: str, obj: dict) -> None:
     os.replace(tmp, path)
 
 
+def topic_meta_path(base_dir: str, topic: str) -> str:
+    return os.path.join(topic_dir(base_dir, topic), TOPIC_META_FILE)
+
+
 def load_topic_meta(base_dir: str, topic: str) -> dict | None:
-    path = os.path.join(topic_dir(base_dir, topic), TOPIC_META_FILE)
-    if not os.path.exists(path):
+    try:
+        with open(topic_meta_path(base_dir, topic)) as f:
+            return json.load(f)
+    except FileNotFoundError:
         return None
-    with open(path) as f:
-        return json.load(f)
 
 
 def save_topic_meta(base_dir: str, topic: str, meta: dict) -> None:
-    atomic_write_json(os.path.join(topic_dir(base_dir, topic), TOPIC_META_FILE), meta)
+    atomic_write_json(topic_meta_path(base_dir, topic), meta)
 
 
 def list_topics(base_dir: str) -> list[str]:
@@ -174,10 +189,19 @@ def floor_index(files: list[FileStats], offset: int) -> int:
     return max(0, bisect.bisect_right(files, offset, key=_min_offset) - 1)
 
 
+def committed_count(files: list[FileStats], leo: int) -> int:
+    """Number of leading files in a ``partition_file_stats`` list that
+    start below the partition's LEO ``leo``: the files that hold
+    committed records. The files after them start at or past LEO (the
+    leftovers of a crashed produce, or a produce not yet committed) or
+    hold no rows."""
+    return bisect.bisect_left(files, leo, key=_min_offset)
+
+
 class _Index(NamedTuple):
     """One partition's segment index (the reference keeps the same map
-    in memory, partition.rs:19-32). ``files`` is published whole and
-    never mutated afterwards; ``footers`` maps file name -> (inode,
+    in memory, partition.rs:19-32). It is published whole and never
+    mutated afterwards. ``footers`` maps file name -> (inode,
     FileStats) for the files of the last scan and those written since,
     so a rescan reads only the footers of files it has not seen. Data
     files are immutable once renamed into place (a rename installs a
@@ -190,8 +214,10 @@ class _Index(NamedTuple):
 
 # Partition dir -> its index. Valid while the directory's identity is
 # unchanged; in-process changes update it (``append_log_files``) or
-# mark it stale (``remove_log_files``, ``invalidate_index``).
+# mark it stale (``remove_log_files``, ``invalidate_index``). Every
+# write holds _INDEX_LOCK; reads take no lock.
 _INDEX: dict[str, _Index] = {}
+_INDEX_LOCK = threading.Lock()
 
 
 def _dir_ident(pdir: str) -> tuple[int, int]:
@@ -200,9 +226,22 @@ def _dir_ident(pdir: str) -> tuple[int, int]:
 
 
 def _mark_stale(pdir: str) -> None:
-    idx = _INDEX.get(pdir)
-    if idx is not None:
-        _INDEX[pdir] = idx._replace(ident=None)
+    """Install a new stale index for ``pdir`` (keeping its footers), so
+    a rescan that started before this call fails its publish."""
+    with _INDEX_LOCK:
+        idx = _INDEX.get(pdir)
+        _INDEX[pdir] = _Index(None, [], {}) if idx is None else idx._replace(ident=None)
+
+
+def _publish(pdir: str, seen: _Index | None, new: _Index | None) -> None:
+    """Compare-and-set: install ``new`` (None drops the entry) only if
+    ``pdir``'s index is still ``seen``, the one the rescan started from."""
+    with _INDEX_LOCK:
+        if _INDEX.get(pdir) is seen:
+            if new is None:
+                _INDEX.pop(pdir, None)
+            else:
+                _INDEX[pdir] = new
 
 
 def invalidate_index(base_dir: str, topic: str, partition: int | None = None) -> None:
@@ -214,7 +253,9 @@ def invalidate_index(base_dir: str, topic: str, partition: int | None = None) ->
         _mark_stale(partition_dir(base_dir, topic, partition))
         return
     prefix = topic_dir(base_dir, topic) + os.sep
-    for pdir in [d for d in _INDEX if d.startswith(prefix)]:
+    with _INDEX_LOCK:
+        pdirs = [d for d in _INDEX if d.startswith(prefix)]
+    for pdir in pdirs:
         _mark_stale(pdir)
 
 
@@ -242,8 +283,10 @@ def partition_file_stats(base_dir: str, topic: str, partition: int) -> list[File
     directory (the recovery scan analog of
     flyq-server/src/core/segment.rs:188-237, except parquet footers are
     self-describing so there is no tail re-scan) and reads the footers
-    of files it has not seen. Names starting with '.' or '_' are
-    skipped, as Spark's file listing skips them."""
+    of files it has not seen. The rescan becomes the index only if
+    no write replaced the index it started from meanwhile (module
+    docstring). Names starting with '.' or '_' are skipped, as Spark's
+    file listing skips them."""
     pdir = partition_dir(base_dir, topic, partition)
     idx = _INDEX.get(pdir)
     try:
@@ -254,7 +297,7 @@ def partition_file_stats(base_dir: str, topic: str, partition: int) -> list[File
             return idx.files
         entries = list(os.scandir(pdir))
     except (FileNotFoundError, NotADirectoryError):
-        _INDEX.pop(pdir, None)
+        _publish(pdir, idx, None)
         return []
     cached = {} if idx is None else idx.footers
     footers: dict[str, tuple[int, FileStats]] = {}
@@ -266,7 +309,7 @@ def partition_file_stats(base_dir: str, topic: str, partition: int) -> list[File
             hit = (e.inode(), footer_stats(e.path))
         footers[e.name] = hit
     files = sorted((fs for _, fs in footers.values()), key=_by_offset)
-    _INDEX[pdir] = _Index(ident, files, footers)
+    _publish(pdir, idx, _Index(ident, files, footers))
     return files
 
 
@@ -310,15 +353,17 @@ def append_log_files(pdir: str, columns: dict[str, list], max_records_per_file: 
 
     Write-through: when the partition's index was current before the
     write, each new file's FileStats comes from the writer's own footer
-    metadata and joins the index, which then records the directory
-    identity after the last rename. Otherwise the index is marked
-    stale and the next listing rescans."""
+    metadata and joins a copy of the index, which is published after
+    the last rename with the directory identity at that point.
+    Otherwise the index is marked stale after the last rename and the
+    next listing rescans. Either publish fails every rescan that began
+    before it (see the module docstring)."""
     table = pa.Table.from_pydict(columns, schema=LOG_ARROW_SCHEMA)
     idx = _INDEX.get(pdir)
     if idx is not None and idx.ident != _dir_ident(pdir):
-        _mark_stale(pdir)
         idx = None
     files = None if idx is None else list(idx.files)
+    footers = None if idx is None else dict(idx.footers)
     try:
         for start in range(0, table.num_rows, max_records_per_file):
             chunk = table.slice(start, max_records_per_file)
@@ -337,13 +382,17 @@ def append_log_files(pdir: str, columns: dict[str, list], max_records_per_file: 
             if files is not None:
                 st = os.stat(path)
                 fs = _stats_from_metadata(path, written[0], st.st_size)
-                idx.footers[name] = (st.st_ino, fs)
+                footers[name] = (st.st_ino, fs)
                 bisect.insort(files, fs, key=_by_offset)
     except BaseException:
         _mark_stale(pdir)
         raise
-    if files is not None:
-        _INDEX[pdir] = _Index(_dir_ident(pdir), files, idx.footers)
+    if files is None:
+        _mark_stale(pdir)
+        return
+    new = _Index(_dir_ident(pdir), files, footers)
+    with _INDEX_LOCK:
+        _INDEX[pdir] = new
 
 
 def read_offset_range(path: str, start: int, end: int) -> pa.Table:

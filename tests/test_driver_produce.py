@@ -203,8 +203,9 @@ def test_driver_files_serve_retention_key_reads_and_compaction(engine):
 
 def test_uncommitted_append_is_invisible_and_rolled_back(engine, spark, monkeypatch):
     """A produce that dies between its file write and its meta commit
-    leaves a file past LEO: reads and the stream never see it, and the
-    next produce deletes it and reuses its offsets densely."""
+    leaves a file past LEO: reads, health, describe and the stream never
+    see it, and the next produce deletes it and reuses its offsets
+    densely."""
     from flyq_spark import storage
     from flyq_spark.streaming.source import read_stream
 
@@ -221,9 +222,14 @@ def test_uncommitted_append_is_invisible_and_rolled_back(engine, spark, monkeypa
     monkeypatch.setattr(storage, "save_topic_meta", fail_once)
     with pytest.raises(OSError, match="injected"):
         engine.produce("t", make_messages(2, ts0=1_800_000_000_000))
-    assert len(storage.partition_file_stats(engine.base_dir, "t", 0)) == 2
+    committed, _leftover = storage.partition_file_stats(engine.base_dir, "t", 0)
     assert engine.consume("t", 0, 3) is None
     assert engine.get_watermark("t", 0) == (0, 2, 3)
+    health = engine.get_partition_health("t", 0)
+    assert (health["segment_count"], health["total_size_bytes"]) == (1, committed.size_bytes)
+    desc = engine.describe_topic("t")
+    assert (desc["total_files"], desc["total_bytes"]) == (1, committed.size_bytes)
+    assert desc["partition_state"][0]["files"] == 1
     # range reads stop at LEO too; log() itself stays unbounded
     assert [r["offset"] for r in engine.read_from_offset("t", 0, 0)] == [0, 1, 2]
     assert [r["offset"] for r in engine.read_from_offset("t", 0, 2, limit=5)] == [2]
@@ -453,6 +459,41 @@ def test_index_lists_once_and_sees_foreign_changes(engine, monkeypatch):
     assert oldest not in stats
     assert stats == _uncached_stats(engine.base_dir, "s", 0)
     assert len(scans) == 2
+
+
+def test_index_rescan_never_overwrites_a_newer_write(engine, monkeypatch):
+    """A reader's rescan of a stale index and a produce interleave: the
+    produce lands between the reader's identity read and its publish,
+    within one mtime tick. The reader returns its older listing, but
+    must not publish it over the produce's index: the next listing
+    holds the new file and consume finds its offset."""
+    from flyq_spark import storage
+
+    engine.create_topic("c", partitions=1)
+    engine.produce("c", make_messages(2))
+    pdir = storage.partition_dir(engine.base_dir, "c", 0)
+    storage.invalidate_index(engine.base_dir, "c", 0)
+    real = os.scandir
+    acks = []
+
+    def scandir(path="."):
+        entries = list(real(path))
+        if os.fspath(path) == pdir and not acks:
+            acks.append(None)  # the produce's own listings pass through
+            with _within_one_mtime_tick(engine.base_dir, "c"):
+                acks[:] = engine.produce("c", make_messages(1, ts0=1_800_000_000_000))
+        return iter(entries)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    reader = storage.partition_file_stats(engine.base_dir, "c", 0)
+    assert acks == [(0, 2)]
+    assert [st.min_offset for st in reader] == [0]
+    monkeypatch.setattr(os, "scandir", real)
+
+    stats = storage.partition_file_stats(engine.base_dir, "c", 0)
+    assert [st.min_offset for st in stats] == [0, 2]
+    assert stats == _uncached_stats(engine.base_dir, "c", 0)
+    assert engine.consume("c", 0, 2)["offset"] == 2
 
 
 def _linear_consume(engine, topic, partition, offset):

@@ -67,14 +67,26 @@ def test_partition_health(engine):
 
 def test_multi_topic_lag(engine):
     """watermark_apis.rs:138-197: 2-partition topic1 + 1-partition topic2;
-    lag over all topics sums 3 partitions; topic filter scopes rows."""
+    lag over all topics sums 3 partitions; topic filter scopes rows. A
+    topic whose create has made its directory but not yet written its
+    meta (reads run beside create_topic) is not a topic yet."""
+    import os
+
+    import pytest
+
+    from flyq_spark import storage
+    from flyq_spark.engine import UnknownTopic
+
     engine.create_topic("events", partitions=2)
     engine.create_topic("logs", partitions=1)
     engine.produce("events", make_messages(30))
     engine.produce("logs", make_messages(20))
+    os.makedirs(storage.partition_dir(engine.base_dir, "half", 0))
 
     res = engine.get_consumer_lag("multi-consumer")
     assert len(res["partitions"]) == 3
+    with pytest.raises(UnknownTopic):
+        engine.get_consumer_lag("multi-consumer", "half")
     assert res["total_lag"] == sum(p["lag"] for p in res["partitions"])
     before = res["total_lag"]
 

@@ -436,9 +436,9 @@ def test_truncated_payload_raises_not_crashes(data):
 
 
 def test_server_concurrent_clients(engine):
-    """Two clients on live connections interleave produces and reads;
-    the engine lock serializes dispatch (the reference's global mutex),
-    so every ack is unique and the log ends consistent."""
+    """Two producers on live connections interleave; the server's
+    produce lock keeps the engine to one writer, so every ack is unique
+    and the log ends consistent."""
     import threading
 
     from flyq_spark.server import FlyQServer, FlyQWireClient
@@ -467,6 +467,101 @@ def test_server_concurrent_clients(engine):
             wm = cli.watermark("wirecc", 0)
     assert sorted(o for _, o in acks) == list(range(8))  # unique dense offsets
     assert wm == {"low_watermark": 0, "high_watermark": 7, "log_end_offset": 8}
+
+
+def test_server_reads_run_beside_produce(engine):
+    """A producer, a group consumer committing as it reads, and a
+    watermark/lag/health monitor share one server. Reads take no lock,
+    so they run while produces are in flight, and each still answers
+    from a committed snapshot: nothing past the LEO it reports, and
+    nothing behind what was already acked."""
+    import sys
+    import threading
+    import time
+
+    from flyq_spark.server import FlyQServer, FlyQWireClient
+
+    n = 200
+    engine.create_topic("mix", partitions=1)
+    acked: list[tuple[int, bytes]] = []
+    consumed: list[tuple[int, bytes]] = []
+    observed: list[tuple[int, int, dict, dict, dict]] = []
+    errors: list[Exception] = []
+    producing = threading.Event()
+    producing.set()
+    deadline = time.monotonic() + 240
+
+    with FlyQServer(engine, clock_ms=lambda: 7) as srv:
+
+        def run(body):
+            def loop():
+                try:
+                    with FlyQWireClient(srv.host, srv.port) as cli:
+                        body(cli)
+                except Exception as e:  # surfaced by the asserts below
+                    errors.append(e)
+
+            return threading.Thread(target=loop)
+
+        def producer(cli):
+            try:
+                for i in range(n):
+                    value = b"m%d" % i
+                    _, off = cli.produce("mix", value)
+                    acked.append((off, value))
+            finally:
+                producing.clear()
+
+        def consumer(cli):
+            while len(consumed) < n and time.monotonic() < deadline:
+                got = cli.consume_with_group("mix", 0, "g")
+                if got is not None:
+                    consumed.append((got["offset"], got["value"]))
+                    cli.commit_offset("mix", 0, "g", got["offset"] + 1)
+
+        def monitor(cli):
+            while producing.is_set() and time.monotonic() < deadline:
+                before = len(acked)
+                wm = cli.watermark("mix", 0)
+                lag = cli.consumer_lag("g", ["mix"])
+                health = cli.partition_health("mix", 0)
+                after = len(acked)
+                observed.append((before, after, wm, lag, health))
+
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            threads = [run(producer), run(consumer), run(monitor)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+        finally:
+            sys.setswitchinterval(switch)
+        assert not any(t.is_alive() for t in threads)
+        with FlyQWireClient(srv.host, srv.port) as cli:
+            final = cli.watermark("mix", 0)
+
+    assert errors == []
+    assert sorted(off for off, _ in acked) == list(range(n))
+    values = dict(acked)
+    assert [off for off, _ in consumed] == list(range(n))
+    assert all(value == values[off] for off, value in consumed)
+    assert observed
+    prev_leo = prev_segments = 0
+    for before, after, wm, lag, health in observed:
+        leo = wm["log_end_offset"]
+        # at most one produce is committed but not yet acked to the client
+        assert before <= leo <= after + 1
+        assert (wm["low_watermark"], wm["high_watermark"]) == (0, max(leo - 1, 0))
+        assert leo >= prev_leo
+        [part] = lag["partitions"]
+        assert wm["high_watermark"] <= part["high_watermark"] <= health["high_watermark"]
+        assert part["lag"] == max(0, part["high_watermark"] - part["committed_offset"])
+        assert leo <= health["log_end_offset"] <= after + 1
+        assert prev_segments <= health["segment_count"] <= health["log_end_offset"]
+        prev_leo, prev_segments = leo, health["segment_count"]
+    assert final == {"low_watermark": 0, "high_watermark": n - 1, "log_end_offset": n}
 
 
 def test_consume_reports_actual_offset_after_truncation(engine):
