@@ -2649,10 +2649,12 @@ def q_session_window_counts(spark, sf_dir):
 def q_bpe_merges(spark, sf_dir):
     """Train a BPE tokenizer on the corpus (operators/bpe.py:train_bpe):
     the word-frequency groupBy compresses the corpus to a Zipf-bounded
-    dict; the merge loop runs on that model-sized dict with
+    dict; the one exact trainer runs the merge loop on that dict (on
+    the driver when it fits, else the distributed ladder) with
     lexicographic tie-breaks, so the merge sequence is a pure function
-    of the corpus. Rows-only (a 50-iteration argmax loop has no SQL
-    form); pinned against a pure-Python reference in pytest."""
+    of the corpus; the list stops once no pair repeats. Rows-only (a
+    50-iteration argmax loop has no SQL form); pinned against a
+    pure-Python reference in pytest."""
     from flyq_spark.operators.bpe import train_bpe
 
     docs = _read(spark, sf_dir, "documents")
@@ -4663,18 +4665,18 @@ def q_bpe_pairs(spark, sf_dir):
 
 
 def q_bpe_merges_exact(spark, sf_dir):
-    """[EXT] The fully-DISTRIBUTED BPE merge loop (operators/bpe.py
-    train_bpe_exact) — `bpe_merges`' (train_bpe's) exact sibling for
-    the regime where the distinct-word dict overflows the driver:
-    25 rounds of count-pairs → argmax (lexicographic tie-break) →
-    left-to-right non-overlapping merge, the vocab table never leaving
-    the cluster (one O(|vocab|) aggregation + localCheckpoint per
-    round; driver state = the merge list). Rows-only by nature: the
-    iterative argmax loop (each round's counts depend on the previous
-    round's rewrite) is not a single SQL expression — correctness is
-    pinned instead by the pure-Python-reference pytest
-    (rank-for-rank, count-for-count, incl. cascaded merges and the aaa
-    overlap rule) plus prefix-parity with driver-dict train_bpe."""
+    """[EXT] The BPE merge table with its counts (operators/bpe.py
+    train_bpe_exact) — the trainer behind `bpe_merges` (train_bpe),
+    as a DataFrame: 25 rounds of count-pairs → argmax (lexicographic
+    tie-break) → left-to-right non-overlapping merge over the
+    distinct-word table, on the driver when the vocab fits and as the
+    distributed ladder (one O(|vocab|) Arrow pass + localCheckpoint per
+    round; driver state = the merge list) when it does not. Rows-only
+    by nature: the iterative argmax loop (each round's counts depend on
+    the previous round's rewrite) is not a single SQL expression —
+    correctness is pinned instead by the pure-Python-reference pytest
+    (rank-for-rank, count-for-count, incl. cascaded merges, the aaa
+    overlap rule and non-BMP symbols) on both paths."""
     from flyq_spark.operators.bpe import train_bpe_exact
 
     docs = _read(spark, sf_dir, "documents")
@@ -5416,40 +5418,42 @@ def entry(spark: SparkSession) -> DataFrame:
 # prior round's record. Every entry still runs in the full local sweep
 # (tools/verify_local.py) regardless of position.
 _DRIVER_WINDOW = [
-    # r12: freshness rotation (VERDICT r11 next-round #2) + the five
-    # new r12 gates (never driver-checked, staler than any green).
-    # 50 slots = (a) ALL 38 entries whose latest driver check dates to
-    # r07; (b) 11 of the 12 new r12 gates (pack_shards /
-    # contamination_units / contamination_normalized / release_audit /
-    # epoch_schedule / manual_mixture / pack_offsets / bpe_pairs /
-    # ngram_overlap / chat_offsets / fim_psm — the two newcomers left
-    # out, rows-only bpe_merges_exact and chrf_overlap (which shares
-    # its entire count/clip/join machinery with windowed
-    # ngram_overlap), are the two whose driver check adds the least
-    # marginal proof; both rotate r13); (c) value_outliers, whose
-    # ORACLE changed this round (NULL-safe IS NOT DISTINCT FROM fence
-    # join — the r11 ADVICE item), so its r11 proof ran on the
-    # superseded SQL. All 45 r08-stale greens rotate in r13.
+    # This rotation brings in five gates whose operators changed and
+    # that no driver run has checked: (d) the three BPE gates, now all
+    # on the one size-adaptive trainer with code-point symbols
+    # (bpe_merges and bpe_encode_stats run train_bpe, which used to
+    # have its own merge loop; bpe_merges_exact's trainer was
+    # rewritten twice before), and (e) the SimHash near-dup joins,
+    # rewritten onto the shared banded-Hamming primitive. Five rows
+    # green in CORRECTNESS_r13 with no code change since retire to make
+    # room: activity_trend, corr_matrix, ohlc_daily,
+    # weighted_percentiles, zorder3_codes. The rest is the r12/r13
+    # window: (a) entries last checked in r07, (b) the r12 gates,
+    # (c) value_outliers, whose oracle changed in r12.
     #
-    # -- (a) last checked r07 (38) --
-    "activity_trend", "attribution_multi_touch", "bloom_semi_prune",
-    "boilerplate_removal", "corr_matrix", "cosine_pairs", "dataset_digest",
+    # -- (a) last checked r07 (33) --
+    "attribution_multi_touch", "bloom_semi_prune",
+    "boilerplate_removal", "cosine_pairs", "dataset_digest",
     "debounce_events", "digest_repair", "entity_resolution",
     "exact_global_quantiles", "feature_time_travel", "file_pruning",
     "funnel_latency", "fuzzy_title_pairs", "histogram_quantiles",
     "incremental_agg", "incremental_retract", "join_preflight",
     "join_size_est", "k_anonymity", "kmv_overlap", "lang_heavy_hitters",
     "multi_signal_components", "multimodal_features",
-    "neardup_blast_radius", "negative_samples", "ohlc_daily",
+    "neardup_blast_radius", "negative_samples",
     "pack_documents", "paragraph_dedup", "phash_neardup", "phrase_search",
     "repetition_signals", "schema_unify", "skew_salted_event_stats",
-    "train_test_split", "weighted_percentiles", "zorder3_codes",
-    # -- (b) new r12 gates (9) --
+    "train_test_split",
+    # -- (b) r12 gates (11) --
     "pack_shards", "contamination_units", "contamination_normalized",
     "release_audit", "epoch_schedule", "manual_mixture", "pack_offsets",
     "bpe_pairs", "ngram_overlap", "chat_offsets", "fim_psm",
-    # -- (c) oracle changed this round (1) --
+    # -- (c) oracle changed in r12 (1) --
     "value_outliers",
+    # -- (d) one BPE trainer (3) --
+    "bpe_merges", "bpe_encode_stats", "bpe_merges_exact",
+    # -- (e) banded-Hamming near-dup joins (2) --
+    "simhash_neardup", "simhash_md5_neardup",
 ]
 
 

@@ -9,21 +9,27 @@ WORD FREQUENCY DICT, not on the corpus layout — so
 1. ONE distributed groupBy compresses the corpus (unbounded) to the
    distinct-word frequency table (Zipf-bounded: millions of entries at
    100 TB, not trillions of tokens);
-2. a deterministic top-``dict_cap`` cut (freq desc, word asc — a
-   TakeOrderedAndProject, per-partition top-k merged on the driver)
-   bounds driver memory like any trained-model state;
-3. the merge loop runs on that dict driver-side: count weighted
-   adjacent symbol pairs, merge the argmax, repeat. The merge table IS
-   the model — O(n_merges), broadcast back for encoding.
+2. ONE trainer runs the merge loop over that table — count weighted
+   adjacent symbol pairs, merge the argmax, repeat — sized to it: on
+   the driver when the whole table fits ``_LOCAL_VOCAB_CAP`` rows, else
+   as a distributed ladder of one Arrow pass per merge round. Either
+   way the statistics are exact over every distinct word. The merge
+   table IS the model — O(n_merges), broadcast back for encoding.
+
+:func:`train_bpe_exact` (the merge table as a DataFrame),
+:func:`train_bpe_from_counts` (a pre-aggregated word-count table) and
+:func:`train_bpe` (a corpus) are views of that one trainer.
 
 Encoding replays the merge list per word, again via the dict: encode
 each DISTINCT word once (mapInPandas over the word table, broadcast
 merge ranks), then join token counts back onto documents — per-doc work
 scales with distinct words touched, not corpus bytes re-tokenized.
 
-Determinism: ties in pair counts break lexicographically, so the merge
-sequence is a pure function of the corpus — replayable anywhere; pinned
-against a pure-Python reference in pytest.
+Symbols are Unicode code points (a non-BMP character such as an emoji
+is one symbol, as ``list(word)`` sees it). Determinism: ties in pair
+counts break lexicographically, so the merge sequence is a pure
+function of the corpus — replayable anywhere; pinned against a
+pure-Python reference in pytest.
 """
 
 from __future__ import annotations
@@ -52,53 +58,15 @@ def word_frequencies(
     )
 
 
-def _pair_counts(vocab: dict[tuple[str, ...], int]) -> dict[tuple[str, str], int]:
-    counts: dict[tuple[str, str], int] = {}
-    for sym, freq in vocab.items():
-        for i in range(len(sym) - 1):
-            p = (sym[i], sym[i + 1])
-            counts[p] = counts.get(p, 0) + freq
-    return counts
-
-
-def _merge_vocab(
-    vocab: dict[tuple[str, ...], int], pair: tuple[str, str]
-) -> dict[tuple[str, ...], int]:
-    a, b = pair
-    out: dict[tuple[str, ...], int] = {}
-    for sym, freq in vocab.items():
-        merged = []
-        i = 0
-        while i < len(sym):
-            if i + 1 < len(sym) and sym[i] == a and sym[i + 1] == b:
-                merged.append(a + b)
-                i += 2
-            else:
-                merged.append(sym[i])
-                i += 1
-        out[tuple(merged)] = out.get(tuple(merged), 0) + freq
-    return out
-
-
 def train_bpe(
     df: DataFrame,
     n_merges: int = 50,
     text_col: str = "text",
-    dict_cap: int = 100_000,
 ) -> list[tuple[str, str]]:
     """Train BPE merges on the corpus. Returns the ordered merge list
-    [(left, right), ...] — the tokenizer model.
-
-    Distributed part: the word-frequency groupBy + deterministic
-    top-``dict_cap`` cut (orderBy freq desc, word asc + limit →
-    TakeOrderedAndProject, O(dict_cap) driver memory regardless of
-    corpus size). Driver part: the classic merge loop over the dict —
-    argmax pair by (count desc, pair asc), stop early when no pair
-    repeats. Ties break lexicographically: the merge sequence is a pure
-    function of the corpus."""
-    return train_bpe_from_counts(
-        word_frequencies(df, text_col), n_merges=n_merges, dict_cap=dict_cap
-    )
+    [(left, right), ...] — the tokenizer model:
+    :func:`train_bpe_from_counts` over :func:`word_frequencies`."""
+    return train_bpe_from_counts(word_frequencies(df, text_col), n_merges)
 
 
 def train_bpe_from_counts(
@@ -106,42 +74,30 @@ def train_bpe_from_counts(
     n_merges: int = 50,
     word_col: str = "word",
     freq_col: str = "freq",
-    dict_cap: int = 100_000,
 ) -> list[tuple[str, str]]:
-    """:func:`train_bpe` over a pre-aggregated (word, freq) table —
-    the same merge loop without re-scanning a corpus, for callers that
-    already hold word counts: catalog stats, a prior groupBy, or a
+    """BPE merges over a pre-aggregated (word, freq) table, for callers
+    that already hold word counts: catalog stats, a prior groupBy, or a
     STREAMING word-count view maintained by ``aggregate_view_sink``
     (keys=("word",), n_rows = freq), which makes the tokenizer
     re-derivable from |vocab| rows of state at any stream checkpoint —
     the same from-counts composition as ``temperature_mix_from_counts``
     (parity-pinned in tests/test_streaming.py incl. a replayed
-    micro-batch and a base compaction)."""
-    rows = (
-        counts.select(
-            F.col(word_col).alias("word"),
-            F.col(freq_col).cast("long").alias("freq"),
-        )
-        .orderBy(F.col("freq").desc(), F.col("word").asc())
-        .limit(dict_cap)
-        .collect()
-    )
-    vocab: dict[tuple[str, ...], int] = {}
-    for r in rows:
-        sym = tuple(r["word"]) + (END,)
-        vocab[sym] = vocab.get(sym, 0) + r["freq"]
+    micro-batch and a base compaction).
+
+    The (left, right) prefix of :func:`train_bpe_exact`'s table up to
+    the first merge whose pair no longer repeats (count < 2): a merge
+    seen once teaches the tokenizer nothing. Past the driver cap the
+    same exact ladder runs, so no rare-word tail is dropped."""
     merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        counts = _pair_counts(vocab)
-        if not counts:
+    for _, a, b, _, c in _train_merges(
+        counts.select(
+            F.col(word_col).alias("word"), F.col(freq_col).alias("freq")
+        ),
+        n_merges,
+    ):
+        if c < 2:
             break
-        # deterministic: max count, then lexicographically SMALLEST pair
-        best_count = max(counts.values())
-        if best_count < 2:
-            break
-        best = min(p for p, c in counts.items() if c == best_count)
-        merges.append(best)
-        vocab = _merge_vocab(vocab, best)
+        merges.append((a, b))
     return merges
 
 
@@ -337,25 +293,23 @@ def bpe_encode_ids(
     )
 
 
-def _bpe_vocab(df: DataFrame, text_col: str) -> DataFrame:
-    """Shared front half of the BPE family: the distinct-word frequency
-    table with each word's initial symbol sequence — lowercased
-    whitespace words, split to characters plus a terminal ``</w>``
-    marker (the Sennrich et al. 2016 word-boundary convention, so
-    merges can't cross words and end-of-word variants stay distinct).
-    One corpus scan + one groupBy(word) (:func:`word_frequencies`) —
-    everything after runs on the |vocab|-row table, never the corpus."""
-    # split-between-every-char: Java split keeps a trailing empty
-    # element under Spark's limit=-1, hence the array_remove
+def _bpe_vocab(counts: DataFrame) -> DataFrame:
+    """The BPE family's vocab table over a (word, freq) table such as
+    :func:`word_frequencies`: each word's initial symbol sequence — its
+    code points plus a terminal ``</w>`` marker (the Sennrich et al.
+    2016 word-boundary convention, so merges can't cross words and
+    end-of-word variants stay distinct). Runs on the |vocab|-row
+    table, never the corpus."""
+    # one match per code point: Java's regex engine steps over
+    # surrogate pairs, so a non-BMP character (emoji) stays one symbol,
+    # as Python's list(word) and the DuckDB oracle's substring see it
     syms = F.concat(
-        F.array_remove(F.split(F.col("word"), "(?!^)"), ""),
+        F.regexp_extract_all(F.col("word"), F.lit("(?s)."), 0),
         F.array(F.lit(END)),
     )
-    return (
-        word_frequencies(df, text_col)
-        .select("word", F.col("freq").cast("long").alias("f"))
-        .withColumn("syms", syms)
-    )
+    return counts.select(
+        "word", F.col("freq").cast("long").alias("f")
+    ).withColumn("syms", syms)
 
 
 def _bpe_pairs_from_vocab(vocab: DataFrame) -> DataFrame:
@@ -395,7 +349,7 @@ def bpe_pair_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     runs entirely on |vocab| rows — at 100 TB the corpus contributes
     one shuffle of distinct words, and the pair table is bounded by
     |alphabet|², not data. Output: (left_sym, right_sym, pair_count)."""
-    return _bpe_pairs_from_vocab(_bpe_vocab(df, text_col))
+    return _bpe_pairs_from_vocab(_bpe_vocab(word_frequencies(df, text_col)))
 
 
 def _apply_merge(s: list, a: str, b: str, ab: str) -> list:
@@ -490,29 +444,19 @@ def _bpe_round_kernel(merge: tuple[str, str, str] | None):
     return fn
 
 
-# Small-input escape hatch for the exact ladder (r13, guide §1.2):
-# below these bounds the cluster rounds are pure scheduling/Python-
+# Vocab-row bound for the driver-local merge loop (r13, guide §1.2):
+# below it the ladder's cluster rounds are pure scheduling/Python-
 # boundary overhead (~0.23 s/round measured at sf0.1 where the vocab is
 # 31 rows) and the driver loop computes the identical table in
-# milliseconds. 64 MiB of input text is the same order as a broadcast
-# build side; 65_536 collected vocab rows is well under train_bpe's
-# default driver-side dict_cap (100_000). Past either bound the
-# distributed ladder runs unchanged.
-_LOCAL_INPUT_MAX_BYTES = 64 << 20
+# milliseconds; 65_536 collected vocab rows bounds driver memory.
 _LOCAL_VOCAB_CAP = 65_536
 
 
-def _estimated_input_bytes(df: DataFrame) -> int:
-    """Catalyst's own size estimate for the plan — file-size-backed for
-    parquet scans, known for local relations; the SAME statistic the
-    planner's broadcast decision reads. No job runs. Unknown/failed
-    estimates return huge so the caller stays on the distributed path."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 - stats are advisory only
-        return 1 << 62
+def _release(checkpointed: DataFrame) -> None:
+    """Drop a ``localCheckpoint``'s blocks. ``DataFrame.unpersist`` only
+    clears the cache manager's entry; the checkpoint's blocks belong to
+    the RDD under its LogicalRDD, so release that RDD."""
+    checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _local_bpe_merges(
@@ -548,144 +492,142 @@ def _local_bpe_merges(
     return merges
 
 
+def _ladder_merges(
+    state: DataFrame, n_merges: int
+) -> list[tuple[int, str, str, str, int]]:
+    """The distributed merge loop over a localCheckpoint'd (f, syms)
+    vocab table: each round is ONE Arrow ``mapInPandas`` pass
+    (:func:`_bpe_round_kernel`) that applies the previous round's merge
+    and emits the rewritten rows plus per-task pair partials, lazily
+    localCheckpoint'd; a tiny JVM aggregation over the partials picks
+    the argmax (a 1-row collect). Driver state is the merge list, never
+    data. ``state`` is released with the first superseded round."""
+    combined = state.mapInPandas(
+        _bpe_round_kernel(None), schema=_BPE_ROUND_SCHEMA
+    ).localCheckpoint(eager=False)
+    pending = state
+    merges = []
+    try:
+        for rank in range(1, n_merges + 1):
+            top = (
+                combined.where(F.col("_pl").isNotNull())
+                .groupBy("_pl", "_pr")
+                .agg(F.sum("_pc").cast("long").alias("pair_count"))
+                .orderBy(
+                    F.col("pair_count").desc(),
+                    F.col("_pl").asc(),
+                    F.col("_pr").asc(),
+                )
+                .limit(1)
+                .collect()
+            )
+            # this round's argmax materialized combined's lazy checkpoint
+            # as a side effect — the superseded round's blocks are safe to
+            # drop. (Lifecycle invariant, do not weaken: the argmax's
+            # full-shuffle aggregation materializes EVERY partition of the
+            # lazy checkpoint before the superseded blocks go; an action
+            # that could short-circuit — a bare limit without the
+            # aggregation — would let the release delete blocks the
+            # truncated lineage cannot recompute. Pinned by
+            # test_train_bpe_exact_multi_round_multi_partition.)
+            if pending is not None:
+                _release(pending)
+                pending = None
+            if not top:
+                break
+            a, b, c = top[0]["_pl"], top[0]["_pr"], top[0]["pair_count"]
+            merges.append((rank, a, b, a + b, c))
+            if rank == n_merges:
+                break
+            # drop the superseded round's checkpoint blocks promptly (the
+            # release above, once the NEXT argmax materializes this
+            # rewrite): without it every round's |vocab|-row array table
+            # stays pinned in storage memory for the whole loop — measured
+            # at 10^7 words (SCALE.md; the r13 scale curve is in
+            # OPTIMIZATION_r13.md) the eviction pressure makes per-round
+            # cost spiky (22-116 s) instead of flat
+            pending = combined
+            combined = (
+                combined.where(F.col("_pl").isNull())
+                .select("f", "syms")
+                .mapInPandas(
+                    _bpe_round_kernel((a, b, a + b)), schema=_BPE_ROUND_SCHEMA
+                )
+                .localCheckpoint(eager=False)
+            )
+    finally:
+        _release(combined)
+        if pending is not None:
+            _release(pending)
+    return merges
+
+
+def _train_merges(
+    counts: DataFrame, n_merges: int
+) -> list[tuple[int, str, str, str, int]]:
+    """The one BPE trainer, over a (word, freq) table: n_merges rounds
+    of (count adjacent pairs) → (argmax, ties lexicographic) → (merge
+    left-to-right, non-overlapping), exact over every distinct word.
+    Returns (rank, left, right, merged, count) in learn order; fewer
+    than n_merges rows iff the vocab ran out of adjacent pairs.
+
+    Size-adaptive on the vocab itself: the vocab table is lazily
+    localCheckpoint'd and a bounded probe collects up to
+    ``_LOCAL_VOCAB_CAP + 1`` rows. If the whole vocab came back, the
+    loop runs on the driver over those rows (one Spark job total
+    rather than one per round); otherwise :func:`_ladder_merges` runs
+    on the cluster over the same checkpointed rows, so the corpus is
+    scanned once on either path. The checkpoint is released on every
+    exit (releasing it twice is a no-op)."""
+    if n_merges < 1:
+        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
+    state = _bpe_vocab(counts).select("f", "syms").localCheckpoint(eager=False)
+    try:
+        probe = state.limit(_LOCAL_VOCAB_CAP + 1).collect()
+        if len(probe) <= _LOCAL_VOCAB_CAP:
+            return _local_bpe_merges(
+                [(r["f"], r["syms"]) for r in probe], n_merges
+            )
+        return _ladder_merges(state, n_merges)
+    finally:
+        _release(state)
+
+
 def train_bpe_exact(
     df: DataFrame,
     n_merges: int = 20,
     text_col: str = "text",
-    local_input_max_bytes: int = _LOCAL_INPUT_MAX_BYTES,
 ) -> DataFrame:
-    """The fully-DISTRIBUTED BPE merge loop — :func:`train_bpe`'s exact
-    sibling for the regime where the distinct-word dict itself
-    overflows the driver (train_bpe truncates statistics past
-    ``dict_cap``; at 100 TB web text the tail it drops is exactly the
-    rare-word mass subword tokenizers exist for). Same algorithm
-    (Sennrich et al. 2016): n_merges rounds of (count adjacent pairs)
-    → (argmax, ties lexicographic) → (merge left-to-right,
-    non-overlapping) — but the vocab table never leaves the cluster
-    and the statistics are EXACT over every distinct word.
-    Deterministic end-to-end: the tie order (pair_count desc, left
-    asc, right asc) and the left-to-right merge scan are pure
-    functions of the corpus, so two runs — or two engines — learn the
-    identical table (pinned against an independent pure-Python
-    reference in tests, and prefix-consistent with train_bpe wherever
-    the dict fits).
+    """The BPE merge table over a corpus as a DataFrame, with its
+    counts: the one trainer (Sennrich et al. 2016) over
+    :func:`word_frequencies`. The CORPUS is scanned exactly once (the
+    word-frequency groupBy); the merge loop runs on the |vocab|-row
+    table — on the driver when it fits ``_LOCAL_VOCAB_CAP`` rows, else
+    as the distributed ladder, whose statistics are EXACT over every
+    distinct word (at 100 TB web text the rare-word tail is exactly the
+    mass subword tokenizers exist for).
 
-    Distribution contract: the CORPUS is scanned exactly once (the
-    word-frequency groupBy); every merge round then runs on the
-    |vocab|-row symbol table as ONE Arrow ``mapInPandas`` pass (r13
-    optimization, guide §4.2, see :func:`_bpe_round_kernel`): the
-    kernel applies the previous round's merge left-to-right and emits
-    the rewritten rows plus per-task pre-aggregated pair partials; a
-    tiny JVM aggregation over the partials (bounded by
-    |tasks| x |alphabet|², never vocab size) picks the argmax (a
-    1-row collect). The combined round output is localCheckpoint'd
-    each round (plan truncation keeps per-round cost flat at
-    O(|vocab|); driver state is the n_merges-row merge list, never
-    data) — LAZILY (eager=False, r12 optimization, guide §1.2): the
-    next round's argmax action computes the rewrite, stores the
-    checkpoint blocks, and aggregates the pair partials in ONE pass.
-    The superseded round's blocks are dropped only AFTER the argmax
-    materializes the new checkpoint (unpersisting a local checkpoint
-    deletes its data; the truncated lineage cannot recompute it).
+    Distributed ladder (r12/r13 optimization, guide §1.2 + §4.2):
+    every round runs on the symbol table as ONE Arrow ``mapInPandas``
+    pass (see :func:`_bpe_round_kernel`); a tiny JVM aggregation over
+    the per-task pair partials (bounded by |tasks| x |alphabet|²,
+    never vocab size) picks the argmax. The round output is
+    localCheckpoint'd LAZILY, so the next argmax computes the rewrite,
+    stores the checkpoint blocks and aggregates the partials in ONE
+    pass; the superseded round's blocks are released only after that.
     Rounds are inherently sequential (merge r+1's counts depend on
     r's rewrite) — the 1-job-per-merge ladder is the standard
     distributed formulation, not a driver-side loop over data.
-
-    Small-input fast path (r13): when Catalyst's size estimate says
-    the input is under ``local_input_max_bytes`` (default 64 MiB — the
-    broadcast-small class) AND a bounded probe confirms the distinct
-    vocab fits ``_LOCAL_VOCAB_CAP`` rows, the merge loop runs on the
-    driver over the collected vocab instead — one Spark job total
-    rather than one per round, computing the IDENTICAL table (shared
-    :func:`_apply_merge` rewrite; both paths pinned against the same
-    pure-Python reference and against each other in pytest). Pass
-    ``local_input_max_bytes=0`` to force the distributed ladder.
+    Deterministic end-to-end: both paths share the tie order
+    (pair_count desc, left asc, right asc) and :func:`_apply_merge`,
+    and are pinned against an independent pure-Python reference.
 
     Output: (merge_rank, left_sym, right_sym, merged, pair_count),
     merge_rank 1-based in learn order; fewer than n_merges rows iff
     the vocabulary ran out of adjacent pairs first."""
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    spark = df.sparkSession
-    schema = (
-        "merge_rank long, left_sym string, right_sym string,"
-        " merged string, pair_count long"
+    merges = _train_merges(word_frequencies(df, text_col), n_merges)
+    return df.sparkSession.createDataFrame(
+        merges,
+        schema="merge_rank long, left_sym string, right_sym string,"
+        " merged string, pair_count long",
     )
-    state = _bpe_vocab(df, text_col).select("f", "syms")
-    # Small-input fast path (r13, guide §1.2): when Catalyst's free
-    # size estimate says the input is broadcast-small, probe the vocab
-    # with a bounded limit-collect; if the WHOLE vocab came back, run
-    # the merge loop on the driver — one Spark job total instead of one
-    # per round. Purely an execution-strategy choice (same statistic
-    # Spark's own broadcast planning uses): the table computed is
-    # identical (parity-pinned in pytest), the input is re-scanned on
-    # every invocation, and any large or unestimatable input falls
-    # through to the unchanged distributed ladder. Set
-    # ``local_input_max_bytes=0`` to force the ladder (tests do).
-    if (
-        local_input_max_bytes > 0
-        and _estimated_input_bytes(df) <= local_input_max_bytes
-    ):
-        probe = state.limit(_LOCAL_VOCAB_CAP + 1).collect()
-        if len(probe) <= _LOCAL_VOCAB_CAP:
-            merges_local = _local_bpe_merges(
-                [(r["f"], r["syms"]) for r in probe], n_merges
-            )
-            return spark.createDataFrame(merges_local, schema=schema)
-        # vocab overflowed the driver cap: fall through to the ladder
-    combined = state.mapInPandas(
-        _bpe_round_kernel(None), schema=_BPE_ROUND_SCHEMA
-    ).localCheckpoint(eager=False)
-    pending = None
-    merges = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            combined.where(F.col("_pl").isNotNull())
-            .groupBy("_pl", "_pr")
-            .agg(F.sum("_pc").cast("long").alias("pair_count"))
-            .orderBy(
-                F.col("pair_count").desc(),
-                F.col("_pl").asc(),
-                F.col("_pr").asc(),
-            )
-            .limit(1)
-            .collect()
-        )
-        # this round's argmax materialized combined's lazy checkpoint
-        # as a side effect — the superseded round's blocks are safe to
-        # drop. (Lifecycle invariant, do not weaken: the argmax's
-        # full-shuffle aggregation materializes EVERY partition of the
-        # lazy checkpoint before the superseded blocks go; an action
-        # that could short-circuit — a bare limit without the
-        # aggregation — would let unpersist delete blocks the truncated
-        # lineage cannot recompute. Pinned by
-        # test_train_bpe_exact_multi_round_multi_partition.)
-        if pending is not None:
-            pending.unpersist()
-            pending = None
-        if not top:
-            break
-        a, b, c = top[0]["_pl"], top[0]["_pr"], top[0]["pair_count"]
-        merges.append((rank, a, b, a + b, c))
-        if rank == n_merges:
-            break
-        # drop the superseded round's checkpoint blocks promptly (the
-        # unpersist above, once the NEXT argmax materializes this
-        # rewrite): without it every round's |vocab|-row array table
-        # stays pinned in storage memory for the whole loop — measured
-        # at 10^7 words (tools/bench_bpe_scale.py) the eviction
-        # pressure makes per-round cost spiky (22-116 s) instead of
-        # flat
-        pending = combined
-        combined = (
-            combined.where(F.col("_pl").isNull())
-            .select("f", "syms")
-            .mapInPandas(
-                _bpe_round_kernel((a, b, a + b)), schema=_BPE_ROUND_SCHEMA
-            )
-            .localCheckpoint(eager=False)
-        )
-    combined.unpersist()
-    if pending is not None:
-        pending.unpersist()
-    return spark.createDataFrame(merges, schema=schema)

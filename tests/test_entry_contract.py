@@ -18,10 +18,10 @@ def test_queries_and_oracles_consistent():
         "unigram_surprisal",
         "mmr_topk",
         "bpe_merges",
-        # r12: the distributed-exact merge loop shares train_bpe's
-        # blocker (iterative argmax has no single SQL form); its inner
-        # statistic IS oracle-backed (bpe_pairs) and the loop is
-        # reference-pinned + prefix-parity-pinned in pytest
+        # the merge table with counts shares bpe_merges' blocker
+        # (iterative argmax has no single SQL form); its inner
+        # statistic IS oracle-backed (bpe_pairs) and the one trainer is
+        # reference-pinned on both its driver and ladder paths in pytest
         "bpe_merges_exact",
         "bpe_encode_stats",
         "minhash_pairs",

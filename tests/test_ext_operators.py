@@ -6460,150 +6460,24 @@ def test_epoch_schedule_budget_and_annealing(spark):
     assert shares[0]["tail"] < shares[1]["tail"] < shares[2]["tail"]
 
 
-def test_train_bpe_exact_matches_python_reference(spark):
-    """The distributed BPE loop must learn the IDENTICAL merge table —
-    rank for rank, count for count — as an independent pure-Python
-    implementation of Sennrich et al.'s algorithm (count pairs over the
-    word-frequency vocab, argmax with lexicographic tie-break, merge
-    left-to-right non-overlapping), including cascaded merges
-    (es -> est -> est</w>) and the repeated-symbol overlap rule
-    (aaa merges to [aa, a], never [aa, aa])."""
+def _ref_bpe_exact(texts, n):
+    """Independent pure-Python reference for the exact trainer over
+    lowercased whitespace words: count pairs over the word-frequency
+    vocab, argmax with lexicographic tie-break, merge left-to-right
+    non-overlapping; no early stop. Returns (rank, left, right,
+    merged, count) rows."""
     from collections import Counter
-
-    from flyq_spark.operators.bpe import bpe_pair_counts, train_bpe_exact
-
-    texts = [
-        "low lower newest widest low low newest",
-        "the newest widest low the the",
-        "aaa aaa baaab",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-
-    def reference(n):
-        vocab: Counter = Counter()
-        for t in texts:
-            for w in t.lower().split():
-                if w:
-                    vocab[w] += 1
-        state: dict = {}
-        for w, f in vocab.items():
-            k = tuple(list(w) + ["</w>"])
-            state[k] = state.get(k, 0) + f
-        merges = []
-        for rank in range(1, n + 1):
-            pairs: Counter = Counter()
-            for syms, f in state.items():
-                for i in range(len(syms) - 1):
-                    pairs[(syms[i], syms[i + 1])] += f
-            if not pairs:
-                break
-            (a, b), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-            merges.append((rank, a, b, a + b, c))
-            new: dict = {}
-            for syms, f in state.items():
-                out, skip = [], False
-                for i, s in enumerate(syms):
-                    if skip:
-                        skip = False
-                        continue
-                    if s == a and i + 1 < len(syms) and syms[i + 1] == b:
-                        out.append(a + b)
-                        skip = True
-                    else:
-                        out.append(s)
-                k = tuple(out)
-                new[k] = new.get(k, 0) + f
-            state = new
-        return merges
-
-    # the DISTRIBUTED ladder (local_input_max_bytes=0 forces it) and
-    # the small-input driver-local path (default: this fixture is tiny)
-    # must BOTH match the independent reference — and hence each other
-    got_dist = [
-        (r["merge_rank"], r["left_sym"], r["right_sym"], r["merged"],
-         r["pair_count"])
-        for r in train_bpe_exact(df, 12, local_input_max_bytes=0).collect()
-    ]
-    got_local = [
-        (r["merge_rank"], r["left_sym"], r["right_sym"], r["merged"],
-         r["pair_count"])
-        for r in train_bpe_exact(df, 12).collect()
-    ]
-    assert got_dist == reference(12)
-    assert got_local == reference(12)
-
-    # pair counts agree with the reference's round-1 counter
-    ref_pairs: Counter = Counter()
-    for t in texts:
-        for w in t.lower().split():
-            syms = list(w) + ["</w>"]
-            for i in range(len(syms) - 1):
-                ref_pairs[(syms[i], syms[i + 1])] += 1
-    got_pairs = {
-        (r["left_sym"], r["right_sym"]): r["pair_count"]
-        for r in bpe_pair_counts(df).collect()
-    }
-    assert got_pairs == dict(ref_pairs)
-
-    import pytest
-
-    with pytest.raises(ValueError, match="n_merges"):
-        train_bpe_exact(df, 0)
-
-
-def test_train_bpe_exact_exhausts_vocabulary(spark):
-    """Asking for more merges than the vocabulary has adjacent pairs
-    stops early with exactly the merges that exist (a single word
-    collapses to one symbol in len(word) merges)."""
-    from flyq_spark.operators.bpe import train_bpe_exact
-
-    df = spark.createDataFrame([(1, "ab ab ab")], "doc_id long, text string")
-    # early-stop must hold on BOTH execution paths
-    for force in (0, None):
-        kw = {"local_input_max_bytes": force} if force is not None else {}
-        rows = train_bpe_exact(df, 50, **kw).collect()
-        # "ab</w>" has symbols [a, b, </w>]: 2 merges then nothing left
-        assert [r["merged"] for r in rows] == ["ab", "ab</w>"]
-        assert [r["pair_count"] for r in rows] == [3, 3]
-
-
-def test_train_bpe_exact_multi_round_multi_partition(spark):
-    """Regression net for the lazy-checkpoint lifecycle (ADVICE r12):
-    the deferred unpersist of each superseded round is only safe
-    because the next argmax's full aggregation materializes EVERY
-    partition of the new lazy checkpoint before the old blocks drop.
-    Drive >2 merge rounds with the vocab spread over several
-    partitions so a short-circuiting action (the failure mode the
-    in-code comment guards against) would visibly lose rows: the merge
-    table must still match the pure-Python reference exactly."""
-    from collections import Counter
-
-    from flyq_spark.operators.bpe import train_bpe_exact
-
-    # 40 distinct words over a 4-letter alphabet -> many rounds of
-    # dense pair statistics across 8 partitions
-    words = [
-        "".join("abcd"[(i * 7 + j * 3) % 4] for j in range(3 + i % 5))
-        for i in range(40)
-    ]
-    text_rows = [(i, " ".join(words[i : i + 5])) for i in range(36)]
-    df = spark.createDataFrame(
-        text_rows, "doc_id long, text string"
-    ).repartition(8)
 
     vocab: Counter = Counter()
-    for _, t in text_rows:
+    for t in texts:
         for w in t.lower().split():
-            if w:
-                vocab[w] += 1
+            vocab[w] += 1
     state: dict = {}
     for w, f in vocab.items():
         k = tuple(list(w) + ["</w>"])
         state[k] = state.get(k, 0) + f
-    expected = []
-    for rank in range(1, 11):
+    merges = []
+    for rank in range(1, n + 1):
         pairs: Counter = Counter()
         for syms, f in state.items():
             for i in range(len(syms) - 1):
@@ -6611,7 +6485,7 @@ def test_train_bpe_exact_multi_round_multi_partition(spark):
         if not pairs:
             break
         (a, b), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        expected.append((rank, a, b, a + b, c))
+        merges.append((rank, a, b, a + b, c))
         new: dict = {}
         for syms, f in state.items():
             out, skip = [], False
@@ -6627,69 +6501,213 @@ def test_train_bpe_exact_multi_round_multi_partition(spark):
             k = tuple(out)
             new[k] = new.get(k, 0) + f
         state = new
+    return merges
 
-    # local_input_max_bytes=0: this test exists to exercise the
-    # DISTRIBUTED checkpoint lifecycle, so force the ladder
-    got = [
+
+def _exact_rows(df, n):
+    from flyq_spark.operators.bpe import train_bpe_exact
+
+    return [
         (r["merge_rank"], r["left_sym"], r["right_sym"], r["merged"],
          r["pair_count"])
-        for r in train_bpe_exact(df, 10, local_input_max_bytes=0).collect()
+        for r in train_bpe_exact(df, n).collect()
     ]
+
+
+def _ref_pair_counts(texts):
+    from collections import Counter
+
+    ref_pairs: Counter = Counter()
+    for t in texts:
+        for w in t.lower().split():
+            syms = list(w) + ["</w>"]
+            for i in range(len(syms) - 1):
+                ref_pairs[(syms[i], syms[i + 1])] += 1
+    return dict(ref_pairs)
+
+
+def test_train_bpe_exact_matches_python_reference(spark, monkeypatch):
+    """The BPE trainer must learn the IDENTICAL merge table — rank for
+    rank, count for count — as an independent pure-Python
+    implementation of Sennrich et al.'s algorithm, including cascaded
+    merges (es -> est -> est</w>) and the repeated-symbol overlap rule
+    (aaa merges to [aa, a], never [aa, aa])."""
+    import pytest
+
+    from flyq_spark.operators import bpe as bpe_mod
+
+    texts = [
+        "low lower newest widest low low newest",
+        "the newest widest low the the",
+        "aaa aaa baaab",
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    # the small-input driver-local path (default: this fixture is tiny)
+    # and the DISTRIBUTED ladder must BOTH match the reference — and
+    # hence each other
+    got_local = _exact_rows(df, 12)
+    monkeypatch.setattr(bpe_mod, "_LOCAL_VOCAB_CAP", 0)
+    got_dist = _exact_rows(df, 12)
+    assert got_dist == _ref_bpe_exact(texts, 12)
+    assert got_local == _ref_bpe_exact(texts, 12)
+
+    # pair counts agree with the reference's round-1 counter
+    got_pairs = {
+        (r["left_sym"], r["right_sym"]): r["pair_count"]
+        for r in bpe_mod.bpe_pair_counts(df).collect()
+    }
+    assert got_pairs == _ref_pair_counts(texts)
+
+    # n_merges < 1 is rejected by every entry point
+    for train in (bpe_mod.train_bpe_exact, bpe_mod.train_bpe):
+        with pytest.raises(ValueError, match="n_merges"):
+            train(df, 0)
+
+
+def test_bpe_symbols_are_code_points(spark, monkeypatch):
+    """Words split into Unicode code points, not UTF-16 units: an emoji
+    (outside the BMP) is ONE symbol, as Python's list(word) and the
+    DuckDB bpe_pairs oracle see it — a surrogate-unit split would turn
+    it into two lone surrogates that reach Python as '?'. Accented
+    letters stay single symbols too. Both trainer paths and the pair
+    statistic must match the pure-Python reference."""
+    from flyq_spark.operators import bpe as bpe_mod
+
+    texts = [
+        "a😀b a😀b café café naïve 😀😀 über",
+        "caf\u00e9 😀😀 a😀b 𠜎𠜎x naïve über über",
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    got_pairs = {
+        (r["left_sym"], r["right_sym"]): r["pair_count"]
+        for r in bpe_mod.bpe_pair_counts(df).collect()
+    }
+    assert got_pairs == _ref_pair_counts(texts)
+    assert got_pairs[("a", "😀")] == 3
+    expected = _ref_bpe_exact(texts, 10)
+    assert any("😀" in m for _, _, _, m, _ in expected)
+    assert _exact_rows(df, 10) == expected
+    monkeypatch.setattr(bpe_mod, "_LOCAL_VOCAB_CAP", 0)
+    assert _exact_rows(df, 10) == expected
+
+
+def test_train_bpe_exact_exhausts_vocabulary(spark, monkeypatch):
+    """Asking for more merges than the vocabulary has adjacent pairs
+    stops early with exactly the merges that exist (a single word
+    collapses to one symbol in len(word) merges)."""
+    from flyq_spark.operators import bpe as bpe_mod
+
+    df = spark.createDataFrame([(1, "ab ab ab")], "doc_id long, text string")
+    # early-stop must hold on BOTH execution paths: local, then ladder
+    for force_ladder in (False, True):
+        if force_ladder:
+            monkeypatch.setattr(bpe_mod, "_LOCAL_VOCAB_CAP", 0)
+        rows = bpe_mod.train_bpe_exact(df, 50).collect()
+        # "ab</w>" has symbols [a, b, </w>]: 2 merges then nothing left
+        assert [r["merged"] for r in rows] == ["ab", "ab</w>"]
+        assert [r["pair_count"] for r in rows] == [3, 3]
+
+
+def test_train_bpe_exact_multi_round_multi_partition(spark, monkeypatch):
+    """Regression net for the lazy-checkpoint lifecycle (ADVICE r12):
+    the deferred release of each superseded round is only safe
+    because the next argmax's full aggregation materializes EVERY
+    partition of the new lazy checkpoint before the old blocks drop.
+    Drive >2 merge rounds with the vocab spread over several
+    partitions so a short-circuiting action (the failure mode the
+    in-code comment guards against) would visibly lose rows: the merge
+    table must still match the pure-Python reference exactly."""
+    from flyq_spark.operators import bpe as bpe_mod
+
+    # 40 distinct words over a 4-letter alphabet -> many rounds of
+    # dense pair statistics across 8 partitions
+    words = [
+        "".join("abcd"[(i * 7 + j * 3) % 4] for j in range(3 + i % 5))
+        for i in range(40)
+    ]
+    text_rows = [(i, " ".join(words[i : i + 5])) for i in range(36)]
+    df = spark.createDataFrame(
+        text_rows, "doc_id long, text string"
+    ).repartition(8)
+    expected = _ref_bpe_exact([t for _, t in text_rows], 10)
+
+    # this test exists to exercise the DISTRIBUTED checkpoint
+    # lifecycle, so force the ladder
+    monkeypatch.setattr(bpe_mod, "_LOCAL_VOCAB_CAP", 0)
+    got = _exact_rows(df, 10)
     assert got == expected
     assert len(got) == 10  # the fixture sustains all requested rounds
 
 
+def _cached_rdd_ids(spark) -> set:
+    return {
+        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+
+
 def test_train_bpe_exact_vocab_cap_overflow_falls_through(spark, monkeypatch):
-    """A small-bytes input whose DISTINCT vocab overflows the driver
-    cap must fall through the probe to the distributed ladder and still
-    learn the right table (the bounded limit-collect is a probe, never
-    a truncation)."""
+    """An input whose DISTINCT vocab overflows the driver cap must fall
+    through the probe to the distributed ladder and still learn the
+    right table (the bounded limit-collect is a probe, never a
+    truncation) — scanning the corpus ONCE: the probe's vocab is
+    checkpointed and handed to the ladder, not recomputed. Every
+    checkpoint the trainer made is released when it returns."""
+    from pyspark.sql import functions as F
+
     from flyq_spark.operators import bpe as bpe_mod
 
-    df = spark.createDataFrame(
-        [(1, "low lower newest low low")], "doc_id long, text string"
+    rows = [(1, "low lower newest low low"), (2, "newest widest lower")]
+    scanned = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def tap(text):
+        scanned.add(1)
+        return text
+
+    df = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", tap("text").alias("text")
     )
-    expect = [
-        (r["merge_rank"], r["merged"], r["pair_count"])
-        for r in bpe_mod.train_bpe_exact(
-            df, 5, local_input_max_bytes=0
-        ).collect()
+    texts = [t for _, t in rows]
+    before = _cached_rdd_ids(spark)
+    # vocab here is 4 distinct words; cap of 2 forces the overflow path
+    with monkeypatch.context() as m:
+        m.setattr(bpe_mod, "_LOCAL_VOCAB_CAP", 2)
+        assert _exact_rows(df, 5) == _ref_bpe_exact(texts, 5)
+    assert scanned.value == len(rows)
+    assert _cached_rdd_ids(spark) - before == set()
+    # the local path releases its probe checkpoint too
+    assert _exact_rows(df, 5) == _ref_bpe_exact(texts, 5)
+    assert scanned.value == 2 * len(rows)
+    assert _cached_rdd_ids(spark) - before == set()
+
+
+def test_train_bpe_is_the_exact_trainer_on_both_paths(spark, monkeypatch):
+    """train_bpe is a view of the one trainer: its merge list equals
+    the independent reference (which stops once no pair repeats)
+    whether the vocab runs through the driver-local loop (default) or,
+    with the driver cap below the fixture's vocab, the ladder."""
+    from flyq_spark.operators import bpe as bpe_mod
+
+    texts = [
+        "low lower newest widest low low newest",
+        "the newest widest low the the unique",
     ]
-    # vocab here is 3 distinct words; cap of 2 forces the overflow path
-    monkeypatch.setattr(bpe_mod, "_LOCAL_VOCAB_CAP", 2)
-    got = [
-        (r["merge_rank"], r["merged"], r["pair_count"])
-        for r in bpe_mod.train_bpe_exact(df, 5).collect()
-    ]
-    assert got == expect
-
-
-def test_train_bpe_exact_prefix_parity_with_driver_dict(spark):
-    """Where the distinct-word dict fits under train_bpe's dict_cap the
-    two trainers are the SAME algorithm: train_bpe's merge list equals
-    train_bpe_exact's (left, right) sequence truncated at the
-    driver-dict trainer's best_count < 2 early stop."""
-    from flyq_spark.operators.bpe import train_bpe, train_bpe_exact
-
     df = spark.createDataFrame(
-        [
-            (1, "low lower newest widest low low newest"),
-            (2, "the newest widest low the the unique"),
-        ],
-        "doc_id long, text string",
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    driver = train_bpe(df, n_merges=15)
-    exact = [
-        (r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in train_bpe_exact(df, n_merges=15).collect()
-    ]
-    exact_while_repeating = []
-    for left, right, c in exact:
-        if c < 2:
-            break
-        exact_while_repeating.append((left, right))
-    assert driver == exact_while_repeating
-    assert len(driver) >= 3  # the fixture actually exercises merges
+    freqs: dict = {}
+    for t in texts:
+        for w in t.split():
+            freqs[w] = freqs.get(w, 0) + 1
+    expected = _ref_bpe_train(freqs, 15)
+    assert len(expected) >= 3  # the fixture actually exercises merges
+    assert bpe_mod.train_bpe(df, n_merges=15) == expected
+    monkeypatch.setattr(bpe_mod, "_LOCAL_VOCAB_CAP", len(freqs) - 1)
+    assert bpe_mod.train_bpe(df, n_merges=15) == expected
 
 
 def test_ngram_overlap_stats_matches_python_model(spark):
