@@ -5418,31 +5418,31 @@ def entry(spark: SparkSession) -> DataFrame:
 # prior round's record. Every entry still runs in the full local sweep
 # (tools/verify_local.py) regardless of position.
 _DRIVER_WINDOW = [
-    # This rotation brings in five gates whose operators changed and
-    # that no driver run has checked: (d) the three BPE gates, now all
-    # on the one size-adaptive trainer with code-point symbols
-    # (bpe_merges and bpe_encode_stats run train_bpe, which used to
-    # have its own merge loop; bpe_merges_exact's trainer was
-    # rewritten twice before), and (e) the SimHash near-dup joins,
-    # rewritten onto the shared banded-Hamming primitive. Five rows
-    # green in CORRECTNESS_r13 with no code change since retire to make
-    # room: activity_trend, corr_matrix, ohlc_daily,
-    # weighted_percentiles, zorder3_codes. The rest is the r12/r13
-    # window: (a) entries last checked in r07, (b) the r12 gates,
-    # (c) value_outliers, whose oracle changed in r12.
+    # This rotation brings in (f) six gates that no driver run has
+    # checked yet, each green in tools/verify_local.py with and without
+    # --pandas: the LM-eval and chat-format family. Six rows green in
+    # CORRECTNESS_r13 whose builders and operator modules have not
+    # changed since retire to make room: debounce_events,
+    # funnel_latency, histogram_quantiles, incremental_agg,
+    # incremental_retract, schema_unify. neardup_blast_radius and
+    # multi_signal_components stay: their graph loops now release
+    # superseded checkpoints. The rest is the earlier window: (a)
+    # entries last checked in r07, (b) the r12 gates, (c)
+    # value_outliers, whose oracle changed in r12, (d) the three BPE
+    # gates on the one size-adaptive trainer, (e) the SimHash near-dup
+    # joins on the shared banded-Hamming primitive.
     #
-    # -- (a) last checked r07 (33) --
+    # -- (a) last checked r07 (27) --
     "attribution_multi_touch", "bloom_semi_prune",
     "boilerplate_removal", "cosine_pairs", "dataset_digest",
-    "debounce_events", "digest_repair", "entity_resolution",
+    "digest_repair", "entity_resolution",
     "exact_global_quantiles", "feature_time_travel", "file_pruning",
-    "funnel_latency", "fuzzy_title_pairs", "histogram_quantiles",
-    "incremental_agg", "incremental_retract", "join_preflight",
+    "fuzzy_title_pairs", "join_preflight",
     "join_size_est", "k_anonymity", "kmv_overlap", "lang_heavy_hitters",
     "multi_signal_components", "multimodal_features",
     "neardup_blast_radius", "negative_samples",
     "pack_documents", "paragraph_dedup", "phash_neardup", "phrase_search",
-    "repetition_signals", "schema_unify", "skew_salted_event_stats",
+    "repetition_signals", "skew_salted_event_stats",
     "train_test_split",
     # -- (b) r12 gates (11) --
     "pack_shards", "contamination_units", "contamination_normalized",
@@ -5454,6 +5454,9 @@ _DRIVER_WINDOW = [
     "bpe_merges", "bpe_encode_stats", "bpe_merges_exact",
     # -- (e) banded-Hamming near-dup joins (2) --
     "simhash_neardup", "simhash_md5_neardup",
+    # -- (f) never driver-checked (6) --
+    "rouge_l", "chrf_overlap", "ppl_buckets", "preference_pairs",
+    "semantic_contamination", "chat_validate",
 ]
 
 

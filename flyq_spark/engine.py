@@ -64,6 +64,16 @@ mtime tick of a change of ours, and two writers that close together on
 one topic are what the single-writer contract above already excludes.
 A point read that finds no committed offset in the index, or a file
 gone, rescans once before answering.
+
+Point reads of the files this process wrote recently decode no parquet:
+``storage.append_log_files`` keeps each new file's rows in a row cache
+bounded by one process-wide byte budget, and ``read_offset_range``
+filters those rows (see ``storage``). The cache changes none of the
+rules above. A reader still picks its files from the index, bounded at
+the LEO it loaded, and the cache answers only for a path, which always
+names the same rows. Every delete or swap this engine makes evicts the
+entries of the files it removes, through the same calls that keep the
+index current.
 """
 
 from __future__ import annotations
@@ -676,7 +686,8 @@ class FlyQEngine:
         The footer stats are the sparse index (partition.rs:148-158):
         bisect the partition's segment index to the last file starting at
         or before the offset, walk forward from there, and read only the
-        candidates with pyarrow — no Spark job. A miss, or a file gone
+        candidates with pyarrow (from the row cache when this process
+        wrote them recently) — no Spark job. A miss, or a file gone
         since the index was built, rescans the directory once (the index
         may trail another process's change within one mtime tick). The
         Row has the shape a Spark ``collect()`` of ``log(topic)`` gives."""

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flyq_spark.operators.util import release_checkpoint
+
 END = "</w>"  # end-of-word sentinel (Sennrich-style)
 
 
@@ -452,13 +454,6 @@ def _bpe_round_kernel(merge: tuple[str, str, str] | None):
 _LOCAL_VOCAB_CAP = 65_536
 
 
-def _release(checkpointed: DataFrame) -> None:
-    """Drop a ``localCheckpoint``'s blocks. ``DataFrame.unpersist`` only
-    clears the cache manager's entry; the checkpoint's blocks belong to
-    the RDD under its LogicalRDD, so release that RDD."""
-    checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)
-
-
 def _local_bpe_merges(
     rows: list[tuple[int, list[str]]], n_merges: int
 ) -> list[tuple[int, str, str, str, int]]:
@@ -531,7 +526,7 @@ def _ladder_merges(
             # truncated lineage cannot recompute. Pinned by
             # test_train_bpe_exact_multi_round_multi_partition.)
             if pending is not None:
-                _release(pending)
+                release_checkpoint(pending)
                 pending = None
             if not top:
                 break
@@ -556,9 +551,9 @@ def _ladder_merges(
                 .localCheckpoint(eager=False)
             )
     finally:
-        _release(combined)
+        release_checkpoint(combined)
         if pending is not None:
-            _release(pending)
+            release_checkpoint(pending)
     return merges
 
 
@@ -590,7 +585,7 @@ def _train_merges(
             )
         return _ladder_merges(state, n_merges)
     finally:
-        _release(state)
+        release_checkpoint(state)
 
 
 def train_bpe_exact(

@@ -23,7 +23,9 @@ GraphX/GraphFrames connectedComponents):
 - ``localCheckpoint`` after each round truncates lineage — without it
   the nested logical plan makes analysis time grow superlinearly (the
   standard trap of iterative DataFrame algorithms; GraphFrames
-  checkpoints for the same reason).
+  checkpoints for the same reason). Each round's checkpoint is released
+  once the next round's exists, and the edge and node checkpoints when
+  the call ends, so only the returned frame's own checkpoint stays.
 
 At 100 TB scale the plan per iteration is a pair of hash shuffles on
 the node key; AQE handles the skew of a super-cluster node.
@@ -33,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from flyq_spark.operators.util import release_checkpoint
 
 
 def connected_components(
@@ -85,50 +89,55 @@ def connected_components(
         ).collect()[0][0]
 
     prev_sum = _label_sum(labels) if integral else None
-    for _ in range(max_iter):
-        prev_labels = labels
-        neigh_min = (
-            edges.join(labels, edges.v == labels.node)
-            .groupBy("u")
-            .agg(F.min("label").alias("_nmin"))
-        )
-        prop = labels.join(neigh_min, labels.node == neigh_min.u, "left_outer").select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("_nmin"), F.col("label"))
-            ).alias("label"),
-        )
-        # pointer jump: also resolve each label through ITS label
-        # (label(n) := label(label(n))), collapsing chains in
-        # O(log diameter) rounds instead of O(diameter).
-        m = prop.select(F.col("node").alias("_mn"), F.col("label").alias("_ml"))
-        labels = (
-            prop.join(m, prop.label == m._mn, "left_outer")
-            .select(
+    try:
+        for _ in range(max_iter):
+            prev_labels = labels
+            neigh_min = (
+                edges.join(labels, edges.v == labels.node)
+                .groupBy("u")
+                .agg(F.min("label").alias("_nmin"))
+            )
+            prop = labels.join(neigh_min, labels.node == neigh_min.u, "left_outer").select(
                 "node",
                 F.least(
-                    F.col("label"), F.coalesce(F.col("_ml"), F.col("label"))
+                    F.col("label"), F.coalesce(F.col("_nmin"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()
-        )
-        if integral:
-            new_sum = _label_sum(labels)
-            converged = new_sum == prev_sum
-            prev_sum = new_sum
-        else:
-            # exact for every id type: any node whose label differs from
-            # last round means not converged (limit-1 short-circuits)
-            converged = (
-                labels.alias("a")
-                .join(prev_labels.alias("b"), "node")
-                .where(F.col("a.label") != F.col("b.label"))
-                .limit(1)
-                .count()
-                == 0
+            # pointer jump: also resolve each label through ITS label
+            # (label(n) := label(label(n))), collapsing chains in
+            # O(log diameter) rounds instead of O(diameter).
+            m = prop.select(F.col("node").alias("_mn"), F.col("label").alias("_ml"))
+            labels = (
+                prop.join(m, prop.label == m._mn, "left_outer")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("label"), F.coalesce(F.col("_ml"), F.col("label"))
+                    ).alias("label"),
+                )
+                .localCheckpoint()
             )
-        if converged:
-            return labels.select("node", F.col("label").alias("component"))
+            if integral:
+                new_sum = _label_sum(labels)
+                converged = new_sum == prev_sum
+                prev_sum = new_sum
+            else:
+                # exact for every id type: any node whose label differs from
+                # last round means not converged (limit-1 short-circuits)
+                converged = (
+                    labels.alias("a")
+                    .join(prev_labels.alias("b"), "node")
+                    .where(F.col("a.label") != F.col("b.label"))
+                    .limit(1)
+                    .count()
+                    == 0
+                )
+            release_checkpoint(prev_labels)
+            if converged:
+                return labels.select("node", F.col("label").alias("component"))
+        release_checkpoint(labels)
+    finally:
+        release_checkpoint(edges)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations; "
         "raise max_iter (diameter exceeds it)"
@@ -245,11 +254,13 @@ def pagerank(
     )
     n = nodes.count()
     if n == 0:
+        release_checkpoint(edges)
         return nodes.select("node", F.lit(0.0).alias("rank"))
     outdeg = edges.groupBy("u").agg(F.count("*").alias("_deg")).localCheckpoint()
     ranks = nodes.select("node", (F.lit(1.0) / F.lit(float(n))).alias("rank"))
     teleport = (1.0 - damping) / n
-    for _ in range(iters):
+    for it in range(iters):
+        prev_ranks = ranks
         with_deg = ranks.join(outdeg, ranks.node == outdeg.u, "left_outer")
         if directed:
             # dangling mass: rank sitting on nodes with no out-edges is
@@ -281,6 +292,12 @@ def pagerank(
             )
             .localCheckpoint()
         )
+        if it:  # round 0 read the uniform start, which is no checkpoint
+            release_checkpoint(prev_ranks)
+    release_checkpoint(edges)
+    release_checkpoint(outdeg)
+    if iters:  # else the uniform start, read from nodes, is returned
+        release_checkpoint(nodes)
     return ranks
 
 
@@ -323,19 +340,29 @@ def bfs_levels(
         .localCheckpoint()
     )
     frontier = settled
-    for it in range(1, max_iter + 1):
-        nxt = (
-            frontier.join(edges, frontier["node"] == edges["u"])
-            .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .join(settled.select("node"), "node", "left_anti")
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            return settled
-        settled = settled.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+    try:
+        for it in range(1, max_iter + 1):
+            nxt = (
+                frontier.join(edges, frontier["node"] == edges["u"])
+                .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"))
+                .join(settled.select("node"), "node", "left_anti")
+                .localCheckpoint()
+            )
+            if frontier is not settled:
+                release_checkpoint(frontier)
+            if nxt.isEmpty():
+                release_checkpoint(nxt)
+                return settled
+            prev_settled = settled
+            settled = settled.unionByName(nxt).localCheckpoint()
+            release_checkpoint(prev_settled)
+            frontier = nxt
+        release_checkpoint(frontier)
+        release_checkpoint(settled)
+    finally:
+        release_checkpoint(edges)
     raise RuntimeError(
         f"bfs_levels did not converge in {max_iter} rounds — graph "
         "diameter exceeds max_iter; raise it"
@@ -405,5 +432,7 @@ def label_propagation(
                 ).getField("community").alias("community")
             )
         )
-        labels = best.localCheckpoint()
+        prev_labels, labels = labels, best.localCheckpoint()
+        release_checkpoint(prev_labels)
+    release_checkpoint(edges)
     return labels

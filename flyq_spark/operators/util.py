@@ -28,6 +28,14 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     return df
 
 
+def release_checkpoint(checkpointed: DataFrame) -> None:
+    """Drop a ``localCheckpoint``'s blocks. ``DataFrame.unpersist`` only
+    clears the cache manager's entry; the checkpoint's blocks belong to
+    the RDD under its LogicalRDD, so release that RDD. Only a frame
+    that nothing still to be computed reads may be released."""
+    checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def exact_ceil_frac(n, fraction: float, max_den: int = 100_000):
     """``ceil(fraction * n)`` as EXACT integer arithmetic on a column.
 

@@ -42,6 +42,23 @@ that listed the directory before a write can never overwrite that
 write's index with its older listing, even when the write left the
 directory's identity unchanged; its caller still gets the listing,
 which covers every file renamed into place before the scan began.
+
+Row cache: ``append_log_files`` also keeps the decoded Arrow rows of
+every file it renames into place, keyed by path, and
+``read_offset_range`` filters those rows instead of opening the file.
+A wire consume usually asks for what a produce in this process wrote
+moments ago; the OS page cache already spares the disk read, and this
+spares the parquet decode, which the page cache cannot. Only writes
+fill it (a read miss decodes the file and keeps nothing), and one
+process-wide byte budget bounds it, oldest-written evicted first.
+``remove_log_files`` drops the entries of the paths it deletes and
+``invalidate_index`` those under the directories it marks stale, so
+every in-process deletion, swap or rewrite evicts what it removes.
+The cache is coherent for the reason the footer cache is: data files
+are immutable and uuid-named, so a path that exists always holds the
+rows it was written with. Readers take no lock and stay bounded at
+LEO and snapshot-consistent as of the index listing they read; writes
+hold one mutex.
 """
 
 from __future__ import annotations
@@ -220,6 +237,46 @@ _INDEX: dict[str, _Index] = {}
 _INDEX_LOCK = threading.Lock()
 
 
+# Path -> (decoded rows, retained bytes) of the data files this process
+# wrote, oldest-written first (module docstring). Reads take no lock;
+# every write holds _ROWS_LOCK.
+_ROWS_BUDGET_BYTES = 32 << 20
+# Besides its buffers, a cached table holds about 7.4 KB of Arrow and
+# Python objects whatever its row count (measured as process RSS over
+# 10k LOG_ARROW_SCHEMA tables of 1-16 rows, pyarrow 16). Each entry is
+# charged that too, so the budget bounds the memory the cache holds;
+# one-message files would otherwise fill 20x the budget.
+_ROWS_ENTRY_OVERHEAD_BYTES = 8 << 10
+_ROWS: dict[str, tuple[pa.Table, int]] = {}
+_rows_bytes = 0
+_ROWS_LOCK = threading.Lock()
+
+
+def _keep_rows(path: str, table: pa.Table) -> None:
+    """Cache a just-written file's rows, then evict oldest-written
+    entries until the cache fits its budget again."""
+    global _rows_bytes
+    size = table.get_total_buffer_size() + _ROWS_ENTRY_OVERHEAD_BYTES
+    with _ROWS_LOCK:
+        _ROWS[path] = (table, size)
+        _rows_bytes += size
+        while _rows_bytes > _ROWS_BUDGET_BYTES:
+            _rows_bytes -= _ROWS.pop(next(iter(_ROWS)))[1]
+
+
+def _forget_rows(paths: Iterable[str] = (), prefix: str | None = None) -> None:
+    """Drop the cached rows of ``paths``, or of every path under
+    ``prefix``."""
+    global _rows_bytes
+    with _ROWS_LOCK:
+        if prefix is not None:
+            paths = [p for p in _ROWS if p.startswith(prefix)]
+        for path in paths:
+            hit = _ROWS.pop(path, None)
+            if hit is not None:
+                _rows_bytes -= hit[1]
+
+
 def _dir_ident(pdir: str) -> tuple[int, int]:
     st = os.stat(pdir)
     return st.st_ino, st.st_mtime_ns
@@ -246,13 +303,17 @@ def _publish(pdir: str, seen: _Index | None, new: _Index | None) -> None:
 
 def invalidate_index(base_dir: str, topic: str, partition: int | None = None) -> None:
     """Mark the index of one partition, or of every partition of the
-    topic, stale: the next ``partition_file_stats`` call rescans its
-    directory. Every in-process change to a partition directory other
-    than ``append_log_files`` and ``remove_log_files`` calls this."""
+    topic, stale (the next ``partition_file_stats`` call rescans its
+    directory) and drop the cached rows of its files. Every in-process
+    change to a partition directory other than ``append_log_files`` and
+    ``remove_log_files`` calls this."""
     if partition is not None:
-        _mark_stale(partition_dir(base_dir, topic, partition))
+        pdir = partition_dir(base_dir, topic, partition)
+        _forget_rows(prefix=pdir + os.sep)
+        _mark_stale(pdir)
         return
     prefix = topic_dir(base_dir, topic) + os.sep
+    _forget_rows(prefix=prefix)
     with _INDEX_LOCK:
         pdirs = [d for d in _INDEX if d.startswith(prefix)]
     for pdir in pdirs:
@@ -260,16 +321,18 @@ def invalidate_index(base_dir: str, topic: str, partition: int | None = None) ->
 
 
 def remove_log_files(paths: Iterable[str]) -> None:
-    """Delete data files and mark their partitions' indexes stale, even
-    when a delete fails midway. Every removal of a single log file goes
-    through here."""
-    dirs = set()
+    """Delete data files, drop their cached rows and mark their
+    partitions' indexes stale, even when a delete fails midway. Every
+    removal of a single log file goes through here."""
+    removed = []
     try:
         for path in paths:
-            dirs.add(os.path.dirname(path))
+            removed.append(path)
             os.remove(path)
     finally:
-        for pdir in dirs:
+        if removed:
+            _forget_rows(removed)
+        for pdir in {os.path.dirname(path) for path in removed}:
             _mark_stale(pdir)
 
 
@@ -357,16 +420,23 @@ def append_log_files(pdir: str, columns: dict[str, list], max_records_per_file: 
     the last rename with the directory identity at that point.
     Otherwise the index is marked stale after the last rename and the
     next listing rescans. Either publish fails every rescan that began
-    before it (see the module docstring)."""
-    table = pa.Table.from_pydict(columns, schema=LOG_ARROW_SCHEMA)
+    before it (see the module docstring).
+
+    Each file's rows enter the row cache once it is in place. Every file
+    gets its own table, built from its slice of ``columns``, so an entry
+    retains only its own rows, not the whole batch."""
+    n_rows = len(columns["offset"])
     idx = _INDEX.get(pdir)
     if idx is not None and idx.ident != _dir_ident(pdir):
         idx = None
     files = None if idx is None else list(idx.files)
     footers = None if idx is None else dict(idx.footers)
     try:
-        for start in range(0, table.num_rows, max_records_per_file):
-            chunk = table.slice(start, max_records_per_file)
+        for start in range(0, n_rows, max_records_per_file):
+            stop = start + max_records_per_file
+            chunk = pa.Table.from_pydict(
+                {k: v[start:stop] for k, v in columns.items()}, schema=LOG_ARROW_SCHEMA
+            )
             name = f"part-{chunk['offset'][0].as_py():020d}-{uuid.uuid4().hex[:16]}.parquet"
             path = os.path.join(pdir, name)
             tmp = os.path.join(pdir, f".{name}.tmp")
@@ -379,6 +449,7 @@ def append_log_files(pdir: str, columns: dict[str, list], max_records_per_file: 
                 metadata_collector=written,
             )
             os.replace(tmp, path)
+            _keep_rows(path, chunk)
             if files is not None:
                 st = os.stat(path)
                 fs = _stats_from_metadata(path, written[0], st.st_size)
@@ -396,16 +467,22 @@ def append_log_files(pdir: str, columns: dict[str, list], max_records_per_file: 
 
 
 def read_offset_range(path: str, start: int, end: int) -> pa.Table:
-    """Rows of one data file with ``start <= offset < end``. Only the row
-    groups whose footer offset stats overlap the range are read."""
-    f = pq.ParquetFile(path)
-    md = f.metadata
-    col = next(i for i in range(md.num_columns) if md.schema.column(i).path == "offset")
-    groups = []
-    for g in range(md.num_row_groups):
-        st = md.row_group(g).column(col).statistics
-        if st is None or not st.has_min_max or (st.max >= start and st.min < end):
-            groups.append(g)
-    table = f.read_row_groups(groups)
+    """Rows of one data file with ``start <= offset < end``: filtered
+    from the row cache when this process wrote the file recently, else
+    read from the file, where only the row groups whose footer offset
+    stats overlap the range are decoded, on the calling thread."""
+    hit = _ROWS.get(path)
+    if hit is not None:
+        table = hit[0]
+    else:
+        f = pq.ParquetFile(path)
+        md = f.metadata
+        col = next(i for i in range(md.num_columns) if md.schema.column(i).path == "offset")
+        groups = []
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(col).statistics
+            if st is None or not st.has_min_max or (st.max >= start and st.min < end):
+                groups.append(g)
+        table = f.read_row_groups(groups, use_threads=False)
     offsets = table["offset"]
     return table.filter(pc.and_(pc.greater_equal(offsets, start), pc.less(offsets, end)))

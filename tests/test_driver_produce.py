@@ -1,7 +1,8 @@
-"""Driver-side produce and footer-selected point reads.
+"""Driver-side produce, footer-selected point reads and the row cache.
 
 List batches are routed, offset-assigned and written from the driver
-with pyarrow; point consumes read the one file the footer stats select.
+with pyarrow; point consumes read the one file the footer stats select,
+from the row cache when this process wrote it recently.
 These tests pin both against the Spark forms they replace (``route`` +
 ``assign_offsets``, a ``log(topic)`` collect) and check that every
 Spark reader of the log still reads the driver-written files.
@@ -577,3 +578,305 @@ def test_seek_matches_linear_walk_on_every_layout(spark, tmp_path):
     engine.produce("k", keyed(10, now - 1000))
     assert engine.apply_retention("k", now_ms=now, retention_ms=2 * day)
     check("retention")
+
+
+# ----------------------------- row cache ------------------------------ #
+
+
+@contextmanager
+def _disk_only(monkeypatch):
+    """Point reads inside the block see an empty row cache, so every
+    ``read_offset_range`` decodes its file."""
+    from flyq_spark import storage
+
+    with monkeypatch.context() as m:
+        m.setattr(storage, "_ROWS", {})
+        yield
+
+
+def _all_consumes(engine, topic):
+    out = {}
+    for p in range(engine.topic_partitions(topic)):
+        low, _, leo = engine.get_watermark(topic, p)
+        for off in range(low - 1, leo + 1):
+            out[(p, off)] = engine.consume(topic, p, off)
+    return out
+
+
+def _assert_warm_equals_cold(engine, topic, monkeypatch):
+    warm = _all_consumes(engine, topic)
+    with _disk_only(monkeypatch):
+        cold = _all_consumes(engine, topic)
+    assert warm == cold
+    return warm
+
+
+def _assert_cache_matches_disk(engine, topic):
+    """Every cached file of the topic is on disk and holds exactly the
+    cached rows: the cache serves nothing a file read would not."""
+    import pyarrow.parquet as pq
+
+    from flyq_spark import storage
+
+    prefix = storage.topic_dir(engine.base_dir, topic) + os.sep
+    for path, (rows, _) in list(storage._ROWS.items()):
+        if path.startswith(prefix):
+            assert rows.equals(pq.read_table(path)), path
+
+
+def _assert_gone(paths):
+    """Removed files read as removed: the cache no longer answers for them."""
+    from flyq_spark import storage
+
+    assert paths
+    for path in paths:
+        with pytest.raises(FileNotFoundError):
+            storage.read_offset_range(path, 0, 1 << 62)
+
+
+def test_row_cache_reads_equal_file_reads(spark, tmp_path, monkeypatch):
+    """Every committed offset consumed from the row cache equals the same
+    consume with the cache empty, field by field: keys (None, empty,
+    numeric), headers (None, empty, several), microsecond timestamps,
+    files split by max_records_per_file, and Spark-written files of a
+    DataFrame produce beside them."""
+    from pyspark.sql import functions as F
+
+    from flyq_spark import storage
+    from flyq_spark.config import EngineConfig
+    from flyq_spark.engine import FlyQEngine
+
+    engine = FlyQEngine(spark, str(tmp_path), EngineConfig(max_records_per_file=3))
+    engine.create_topic("rc", partitions=2)
+    frame = spark.range(5).select(
+        F.encode(F.col("id").cast("string"), "utf-8").alias("key"),
+        F.encode(F.concat(F.lit("df"), F.col("id").cast("string")), "utf-8").alias("value"),
+        F.timestamp_millis(F.lit(1_700_000_100_000) + F.col("id")).alias("timestamp"),
+    )
+    # a DataFrame produce drops the topic's cached rows, so it goes first
+    engine.produce("rc", frame)
+    msgs = _batch(with_seq=False)
+    msgs[1]["headers"] = []
+    msgs[2]["timestamp"] = datetime(2024, 2, 29, 23, 59, 59, 999_999, tzinfo=timezone.utc)
+    engine.produce("rc", msgs)
+    engine.produce("rc", _batch(with_seq=True))
+    engine.produce("rc", make_messages(4, key=b"9"))
+    cached = [p for p in storage._ROWS if p.startswith(storage.topic_dir(engine.base_dir, "rc"))]
+    assert len(cached) >= 6  # the 3-row split gave several files per partition
+    got = _assert_warm_equals_cold(engine, "rc", monkeypatch)
+    spark_rows = {(r["partition"], r["offset"]): r for r in engine.log("rc").collect()}
+    assert {k: got[k] for k in spark_rows} == spark_rows
+    _assert_cache_matches_disk(engine, "rc")
+
+
+def test_row_cache_hit_opens_no_file(engine, monkeypatch):
+    """Consumes of this process's recent produces open no parquet file;
+    with the topic's cached rows dropped, each consume opens one."""
+    import pyarrow.parquet as pq
+
+    from flyq_spark import storage
+
+    engine.create_topic("h", partitions=1)
+    engine.produce("h", make_messages(1))
+    storage.partition_file_stats(engine.base_dir, "h", 0)  # index current: write-through
+    for i in range(20):
+        engine.produce("h", make_messages(1, key=b"k", ts0=1_700_000_001_000 + i))
+    opens = []
+    real = pq.ParquetFile
+
+    def counting(*args, **kwargs):
+        opens.append(args[0])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(storage.pq, "ParquetFile", counting)
+    for off in range(21):
+        assert engine.consume("h", 0, off)["offset"] == off
+    assert opens == []
+    storage.invalidate_index(engine.base_dir, "h")
+    storage.partition_file_stats(engine.base_dir, "h", 0)  # rescan: footer opens
+    opens.clear()
+    for off in range(21):
+        assert engine.consume("h", 0, off)["offset"] == off
+    assert len(opens) == 21
+
+
+def test_row_cache_drops_what_each_change_removes(spark, tmp_path, monkeypatch):
+    """After retention, delete_records, compaction by key, delete_topic
+    and re-create, and a produce that died before its meta commit, the
+    removed files read as removed, warm consumes equal cold ones, and
+    every cached file still matches its file on disk."""
+    from flyq_spark import storage
+    from flyq_spark.config import EngineConfig
+    from flyq_spark.engine import FlyQEngine
+
+    day = 86_400_000
+    now = 1_700_000_000_000 + 10 * day
+    engine = FlyQEngine(spark, str(tmp_path), EngineConfig(max_records_per_file=2))
+    engine.create_topic("e", partitions=1)
+
+    def check():
+        _assert_warm_equals_cold(engine, "e", monkeypatch)
+        _assert_cache_matches_disk(engine, "e")
+
+    def keyed(n, ts0):
+        return [
+            {"key": f"k{i % 2}".encode(), "value": f"{ts0}-{i}".encode(), "timestamp": ts0 + i}
+            for i in range(n)
+        ]
+
+    for i in range(4):
+        engine.produce("e", keyed(4, now - (5 - i) * day))
+    check()
+    _assert_gone(engine.apply_retention("e", now_ms=now, retention_ms=4 * day))
+    check()
+    _assert_gone(engine.delete_records("e", 0, 7))
+    check()
+
+    before = [st.path for st in storage.partition_file_stats(engine.base_dir, "e", 0)]
+    engine.compact_partition_by_key("e", 0)
+    _assert_gone(before)
+    check()
+
+    engine.produce("e", keyed(3, now))
+    before = [st.path for st in storage.partition_file_stats(engine.base_dir, "e", 0)]
+    engine.delete_topic("e")
+    _assert_gone(before)
+    engine.create_topic("e", partitions=1)
+    engine.produce("e", make_messages(3, ts0=now))
+    check()
+
+    real = storage.save_topic_meta
+
+    def fail(*args):
+        raise OSError("injected meta commit failure")
+
+    monkeypatch.setattr(storage, "save_topic_meta", fail)
+    with pytest.raises(OSError, match="injected"):
+        engine.produce("e", make_messages(2, key=b"lost", ts0=now + 1000))
+    monkeypatch.setattr(storage, "save_topic_meta", real)
+    leftovers = [st.path for st in storage.partition_file_stats(engine.base_dir, "e", 0)][2:]
+    assert engine.consume("e", 0, 3) is None
+    assert engine.produce("e", make_messages(1, ts0=now + 2000)) == [(0, 3)]
+    _assert_gone(leftovers)
+    assert engine.consume("e", 0, 3)["key"] is None
+    assert engine.consume("e", 0, 4) is None
+    check()
+
+
+def test_row_cache_stays_within_budget(spark, tmp_path, monkeypatch):
+    """Retained bytes never exceed the budget, each file's entry retains
+    only its own rows, and offsets whose rows were evicted still read
+    from their files."""
+    import pyarrow as pa
+
+    from flyq_spark import storage
+    from flyq_spark.config import EngineConfig
+    from flyq_spark.engine import FlyQEngine
+
+    budget = 64 << 10
+    monkeypatch.setattr(storage, "_ROWS_BUDGET_BYTES", budget)
+    engine = FlyQEngine(spark, str(tmp_path), EngineConfig(max_records_per_file=4))
+    engine.create_topic("b", partitions=1)
+    want = {}
+    for i in range(12):
+        msgs = make_messages(40, value_size=100, ts0=1_700_000_000_000 + 100 * i)
+        for j, m in enumerate(msgs):
+            m["value"] = f"{i}-{j}".encode() + m["value"]
+        for (_, off), m in zip(engine.produce("b", msgs), msgs):
+            want[off] = m["value"]
+        assert storage._rows_bytes <= budget
+        assert storage._rows_bytes == sum(size for _, size in storage._ROWS.values())
+
+    prefix = storage.topic_dir(engine.base_dir, "b") + os.sep
+    cached = {p: rows for p, (rows, _) in storage._ROWS.items() if p.startswith(prefix)}
+    assert 0 < len(cached) < len(storage.partition_file_stats(engine.base_dir, "b", 0))
+    batch = pa.Table.from_pylist(
+        [{"offset": 0, "key": None, "value": want[0], "timestamp": 0, "headers": None}] * 40,
+        schema=storage.LOG_ARROW_SCHEMA,
+    )
+    # a slice of the batch would retain all 40 rows' buffers
+    assert max(r.get_total_buffer_size() for r in cached.values()) * 4 < (
+        batch.get_total_buffer_size()
+    )
+    for off, value in want.items():
+        assert bytes(engine.consume("b", 0, off)["value"]) == value
+
+
+def test_row_cache_count_holds_under_concurrent_writers(tmp_path, monkeypatch):
+    """Writer threads append and remove files while reader threads read
+    them back, with a short switch interval: every read returns the
+    file's own rows or FileNotFoundError, and afterwards the retained
+    bytes equal the entries' sum and fit the budget (a lost update to
+    the count would break both)."""
+    import random
+    import sys
+    import threading
+
+    from flyq_spark import storage
+
+    budget = 96 << 10
+    monkeypatch.setattr(storage, "_ROWS_BUDGET_BYTES", budget)
+    written: list[str] = []
+    errors: list[BaseException] = []
+    done = threading.Event()
+
+    def writer(w):
+        pdir = str(tmp_path / f"w{w}")
+        os.makedirs(pdir)
+        rng = random.Random(w)
+        off = 0
+        try:
+            for _ in range(40):
+                n = rng.randint(1, 3)
+                cols = {
+                    "offset": list(range(off, off + n)),
+                    "key": [None] * n,
+                    "value": [f"w{w}-{o}".encode() * 8 for o in range(off, off + n)],
+                    "timestamp": [1_700_000_000_000_000 + o for o in range(off, off + n)],
+                    "headers": [None] * n,
+                }
+                off += n
+                storage.append_log_files(pdir, cols, 2)
+                names = sorted(x for x in os.listdir(pdir) if not x.startswith("."))
+                written.extend(os.path.join(pdir, x) for x in names)
+                if rng.random() < 0.5:
+                    storage.remove_log_files([os.path.join(pdir, names[0])])
+        except BaseException as e:  # noqa: BLE001 - reported by the main thread
+            errors.append(e)
+
+    def reader(r):
+        rng = random.Random(100 + r)
+        try:
+            while not done.is_set() or rng.random() < 0.5:
+                if not written:
+                    continue
+                path = written[rng.randrange(len(written))]
+                w = os.path.basename(os.path.dirname(path))
+                try:
+                    rows = storage.read_offset_range(path, 0, 1 << 62).to_pylist()
+                except FileNotFoundError:
+                    continue
+                assert rows
+                for row in rows:
+                    assert row["value"] == f"{w}-{row['offset']}".encode() * 8
+        except BaseException as e:  # noqa: BLE001 - reported by the main thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        writers = [threading.Thread(target=writer, args=(w,)) for w in range(8)]
+        readers = [threading.Thread(target=reader, args=(r,)) for r in range(4)]
+        for t in writers + readers:
+            t.start()
+        for t in writers:
+            t.join(timeout=120)
+        done.set()
+        for t in readers:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in writers + readers)
+    assert errors == []
+    assert storage._rows_bytes == sum(size for _, size in storage._ROWS.values())
+    assert 0 < storage._rows_bytes <= budget

@@ -1597,6 +1597,64 @@ def test_dedup_components_keep_min(spark):
     assert rows == {2: (2, True), 5: (2, False), 9: (2, False)}
 
 
+def _checkpoints_read_by(df) -> set[int]:
+    """Ids of the RDDs under the LogicalRDD leaves of ``df``'s plan: the
+    local checkpoints that reading ``df`` still needs."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    ids = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            ids.add(leaf.rdd().id())
+    return ids
+
+
+def test_graph_rounds_release_superseded_checkpoints(spark):
+    """Every graph loop releases the checkpoints it supersedes: after a
+    call, the only new persisted RDDs are the checkpoints the returned
+    frame reads, and the frame still reads back the same rows. A loop
+    that raises releases all of its own."""
+    from flyq_spark.operators.graph import (
+        bfs_levels,
+        connected_components,
+        label_propagation,
+        pagerank,
+    )
+
+    jsc = spark.sparkContext._jsc
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12)], "id_a long, id_b long"
+    )
+    named = pairs.select(
+        F.concat(F.lit("n"), F.col("id_a")).alias("id_a"),
+        F.concat(F.lit("n"), F.col("id_b")).alias("id_b"),
+    )
+    src = spark.createDataFrame([(1,), (10,)], "node long")
+    calls = {
+        "components": lambda: connected_components(pairs),
+        "components of string ids": lambda: connected_components(named),
+        "pagerank": lambda: pagerank(pairs, iters=4),
+        "directed pagerank": lambda: pagerank(pairs, iters=3, directed=True),
+        "pagerank without rounds": lambda: pagerank(pairs, iters=0),
+        "bfs": lambda: bfs_levels(pairs, src),
+        "label propagation": lambda: label_propagation(pairs, n_iter=4),
+    }
+    for name, call in calls.items():
+        before = set(jsc.getPersistentRDDs().keys())
+        out = call()
+        left = set(jsc.getPersistentRDDs().keys()) - before
+        assert left <= _checkpoints_read_by(out), name
+        assert out.count() == 8, name  # every node; each source reaches its chain
+    for call in (
+        lambda: connected_components(pairs, max_iter=1),
+        lambda: bfs_levels(pairs, src, max_iter=1),
+    ):
+        before = set(jsc.getPersistentRDDs().keys())
+        with pytest.raises(RuntimeError, match="did not converge"):
+            call()
+        assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
 # -------------------------- corpus preparation ------------------------ #
 
 
