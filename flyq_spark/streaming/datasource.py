@@ -156,6 +156,14 @@ class FlyQStreamReader(DataSourceStreamReader):
 
 
 class FlyQDataSource(DataSource):
+    """``format("flyq")``: the engine's log as a streaming source.
+
+    ``trigger(availableNow=True)`` is not honoured as such: on PySpark
+    4.1 a Python streaming source has no ``Trigger.AvailableNow`` hook,
+    so Spark falls back to one single batch, up to the LEO seen when that
+    batch is planned. After a restart that finds an uncommitted batch,
+    records produced since may wait for the next start."""
+
     @classmethod
     def name(cls) -> str:
         return "flyq"

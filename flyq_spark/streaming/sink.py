@@ -1,20 +1,58 @@
-"""Streaming write side: the produce sink.
+"""Streaming write side: the ``foreachBatch`` sinks.
 
-``foreachBatch`` + the engine's produce commit protocol: every micro-batch
-is routed, offset-assigned continuing from the persisted LEO, appended,
-and the metadata commit advances LEO + the round-robin cursor — so a
-crashed query resumes from its checkpoint and re-produces only unacked
-batches (at-least-once, matching the reference's delivery contract; the
-reference additionally loses up to 5 s of *commits* on crash,
-runtime/flush.rs:9-39, which we do not).
+- :func:`produce_sink` / :func:`write_stream_to_topic` append each
+  micro-batch to a topic through the engine's produce commit protocol:
+  routed, offset-assigned from the persisted LEO, appended, and the
+  metadata commit advances LEO + the round-robin cursor, so a crashed
+  query resumes from its checkpoint and re-produces only unacked batches
+  (at-least-once, the reference's delivery contract; the reference
+  additionally loses up to 5 s of *commits* on crash,
+  runtime/flush.rs:9-39, which we do not).
+- :func:`upsert_sink` keeps a latest-wins snapshot table by a
+  two-rename swap.
+- :func:`neardup_dedup_sink` / :func:`phash_dedup_sink` drop near-dups
+  against ``batch_id``-partitioned band-key state.
+- Five compacting VIEW sinks keep their state in one view store
+  (:class:`_ViewStore`): :func:`contamination_monitor_sink`,
+  :func:`aggregate_view_sink`, :func:`heavy_hitter_sink`,
+  :func:`golden_record_sink` and :func:`late_arrival_monitor_sink`,
+  with readers :func:`read_aggregate_view`,
+  :func:`read_heavy_hitter_view`, :func:`read_golden_record_view` and
+  :func:`read_late_arrival_monitor`. Each sink supplies only its
+  per-batch state and its fold.
 
-Single-writer-per-topic discipline holds by construction: one streaming
-query owns the topic, and foreachBatch invocations are serial within a
-query.
+View-store protocol (Structured Streaming's idempotent-sink recipe:
+output keyed by the epoch id):
+
+- Layout. Batch N's state lands in ``delta/batch_id=N``. Once
+  ``compact_every`` deltas are newer than the ready base, the base and
+  those deltas fold into ``base_upto_B`` (B = the newest folded batch
+  id), which an empty ``_VIEW_READY`` file publishes after the fold is
+  written; the old base and the folded deltas are then deleted. The
+  live state is the ready base plus the deltas newer than it.
+- Replay rule. Nothing is merged in place: a replayed batch id
+  overwrites its own delta (Structured Streaming re-delivers the same
+  data for the same batch id), so nothing counts twice. A delta at or
+  below B is a stale replay of an already-folded batch; readers and
+  folds skip it.
+- Crash rule. Only the newest marked base is read. Before each batch
+  the writer deletes every other base (an unmarked one is a fold that
+  crashed before its marker) and every delta the ready base covers.
+  Names that do not parse (``base_upto_3.bak``, ``batch_id=7.old``)
+  are never read nor deleted.
+- Driver-local. The marker and the deletions are os-level, so a view
+  path must be driver-local: a scheme-qualified path, and
+  ``compact_every < 1``, are rejected when the sink is built.
+
+Single-writer discipline holds by construction: one streaming query
+owns a topic or a view, and foreachBatch invocations are serial within
+a query.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -45,7 +83,14 @@ def write_stream_to_topic(
     trigger_once: bool = False,
 ):
     """Start a streaming query that produces ``stream`` into ``topic``.
-    Input needs the message shape (key/value/timestamp[/headers][/seq])."""
+    Input needs the message shape (key/value/timestamp[/headers][/seq]).
+
+    ``trigger_once`` runs ``trigger(availableNow=True)``. When ``stream``
+    comes from the ``format("flyq")`` source on PySpark 4.1, a Python
+    streaming source has no ``Trigger.AvailableNow`` hook, so Spark falls
+    back to one single batch, up to the LEO seen when that batch is
+    planned; after a restart that finds an uncommitted batch, records
+    produced since may wait for the next start."""
     writer = (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
@@ -292,51 +337,119 @@ def _banded_dedup_sink(
     return write
 
 
-def _view_bases(root: str) -> list[tuple[int, str]]:
-    """Numerically-sorted (upto, path) base dirs under a view root;
-    unparseable names (debug copies like base_upto_3.bak) are skipped,
-    never crashed on."""
-    import os
+class _ViewStore:
+    """The view-state layout and its recovery rule — the one
+    implementation of the protocol in the module docstring, shared by
+    the five compacting sinks and their readers. Sinks keep only their
+    own per-batch state and fold; the store owns where state lives,
+    which of it is live, and how a fold is published."""
 
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for d in os.listdir(root):
-        if d.startswith("base_upto_"):
-            try:
-                out.append((int(d.rsplit("_", 1)[1]), os.path.join(root, d)))
-            except ValueError:
-                continue
-    return sorted(out)
+    _BASE = "base_upto_"
+    _READY = "_VIEW_READY"
 
+    def __init__(self, path: str, owner: str, compact_every: int = 1):
+        if "://" in path:
+            raise ValueError(
+                f"{owner} needs a driver-local path (the view store's "
+                f"marker and deletes are os-level); got scheme-qualified "
+                f"{path!r}"
+            )
+        if compact_every < 1:
+            raise ValueError(f"compact_every must be >= 1, got {compact_every}")
+        self.root = path.rstrip("/")
+        self._delta_dir = os.path.join(self.root, "delta")
 
-def _view_deltas(root: str) -> list[tuple[int, str]]:
-    """Numerically-sorted (batch_id, path) delta dirs; tolerant like
-    :func:`_view_bases`."""
-    import os
+    @staticmethod
+    def _listing(parent: str, prefix: str) -> list[tuple[int, str]]:
+        """Numerically-sorted (id, path) dirs named ``prefix<int>``
+        (lexicographic order would rank 9 above 10); other names, such
+        as debug copies, are skipped, never crashed on."""
+        if not os.path.isdir(parent):
+            return []
+        out = []
+        for d in os.listdir(parent):
+            if d.startswith(prefix):
+                try:
+                    out.append((int(d[len(prefix):]), os.path.join(parent, d)))
+                except ValueError:
+                    continue
+        return sorted(out)
 
-    ddir = os.path.join(root, "delta")
-    if not os.path.isdir(ddir):
-        return []
-    out = []
-    for d in os.listdir(ddir):
-        if d.startswith("batch_id="):
-            try:
-                out.append((int(d.split("=", 1)[1]), os.path.join(ddir, d)))
-            except ValueError:
-                continue
-    return sorted(out)
+    def _bases(self) -> list[tuple[int, str]]:
+        return self._listing(self.root, self._BASE)
 
+    def _deltas(self) -> list[tuple[int, str]]:
+        return self._listing(self._delta_dir, "batch_id=")
 
-def _view_ready_base(root: str) -> tuple[int, str] | None:
-    """Newest base whose _VIEW_READY marker exists (completed write)."""
-    import os
+    def ready(self) -> tuple[int, str] | None:
+        """Newest (upto, path) base whose marker exists: a completed
+        fold. Read-only."""
+        ready = None
+        for upto, path in self._bases():
+            if os.path.exists(os.path.join(path, self._READY)):
+                ready = (upto, path)
+        return ready
 
-    ready = None
-    for upto, path in _view_bases(root):
-        if os.path.exists(os.path.join(path, "_VIEW_READY")):
-            ready = (upto, path)
-    return ready
+    def recover(self) -> tuple[int, str] | None:
+        """Writer-side crash rule, run before each batch: keep the ready
+        base, delete every other base (unmarked = a fold that crashed
+        before its marker; older marked = stranded between marker and
+        cleanup) and every delta the ready base covers."""
+        ready = self.ready()
+        for base in self._bases():
+            if base != ready:
+                shutil.rmtree(base[1], ignore_errors=True)
+        for bid, path in self._deltas():
+            if ready is not None and bid <= ready[0]:
+                shutil.rmtree(path, ignore_errors=True)
+        return ready
+
+    def write_delta(self, batch_id: int, state: DataFrame) -> None:
+        """Replay rule: a batch's state OVERWRITES its own delta."""
+        state.write.mode("overwrite").parquet(
+            os.path.join(self._delta_dir, f"batch_id={batch_id}")
+        )
+
+    def _uncovered(self, ready: tuple[int, str] | None) -> list[tuple[int, str]]:
+        # a delta at or below the ready base is a stale replay of a
+        # batch the base already folded: never read, never refolded
+        return [(b, p) for b, p in self._deltas() if ready is None or b > ready[0]]
+
+    def live(
+        self, ready: tuple[int, str] | None, upto: int | None = None
+    ) -> list[str]:
+        """The view's state paths: the ready base, then the uncovered
+        deltas in batch order — only those ``<= upto`` when given."""
+        return ([ready[1]] if ready is not None else []) + [
+            p for b, p in self._uncovered(ready) if upto is None or b <= upto
+        ]
+
+    def snapshot(self) -> list[str]:
+        """Live paths for a reader (no recovery: readers never delete)."""
+        paths = self.live(self.ready())
+        if not paths:
+            raise FileNotFoundError(f"no view state under {self.root!r}")
+        return paths
+
+    def compact(
+        self,
+        ready: tuple[int, str] | None,
+        compact_every: int,
+        fold: Callable[[list[str]], DataFrame],
+    ) -> None:
+        """Once ``compact_every`` deltas are uncovered, write
+        ``fold(live paths)`` as the base named after the newest folded
+        delta, publish it with the marker, then delete what it
+        replaces."""
+        deltas = self._uncovered(ready)
+        if len(deltas) < compact_every:
+            return
+        paths = self.live(ready)
+        new_base = os.path.join(self.root, f"{self._BASE}{deltas[-1][0]}")
+        fold(paths).write.mode("overwrite").parquet(new_base)
+        open(os.path.join(new_base, self._READY), "w").close()
+        for path in paths:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def _store_probe_hits(
@@ -393,61 +506,26 @@ def contamination_monitor_sink(
     final audit. Docs with < n words have no shingles and emit no row
     (identical to the batch operator).
 
-    Scale: state is per-batch-DISTINCT 60-bit shingle keys laid out
-    like ``aggregate_view_sink``'s view (``delta/batch_id=N``
-    partitions folding into a ``base_upto_B`` dir with a
-    ``_VIEW_READY`` marker every ``compact_every`` batches), so both
-    the file count and the store's duplicate multiplicity stay bounded
-    as the stream ages. The per-batch check broadcasts the BATCH's
-    eval shingles and streams the store through a BroadcastHashJoin
-    (see :func:`_store_probe_hits`) — one store scan, zero store-side
-    Exchange, never corpus x corpus. Compaction is one distinct over
-    base + accumulated deltas, amortized O(|store| / compact_every)
-    per batch; pass ``compact_every=0`` to disable it, which also
-    lifts the driver-local ``state_path`` requirement (the fold's
-    marker/rename discipline is os-level, same as
-    ``aggregate_view_sink``). Replay safety: a replayed batch
-    overwrites its own ``delta/batch_id=N`` partition before the store
-    read, and the read covers exactly base + deltas ``<= N`` — a
-    crash-and-replay recomputes byte-identical output even if the
-    crash landed mid-compaction (only a marker-complete base is ever
-    read; an incomplete one is deleted on the next batch)."""
-    import os
-    import shutil
-
+    State: ``state_path`` is a view store (module docstring) whose
+    per-batch state is the batch's DISTINCT 60-bit train shingle keys
+    and whose fold is one distinct, so both the file count and the
+    store's duplicate multiplicity stay bounded as the stream ages.
+    The per-batch check reads the live state up to this batch id and
+    broadcasts the BATCH's eval shingles, streaming the store through
+    a BroadcastHashJoin (see :func:`_store_probe_hits`) — one store
+    scan, zero store-side Exchange, never corpus x corpus. Compaction
+    is amortized O(|store| / compact_every) per batch."""
     from flyq_spark.operators.corpus import _h60, split_shingled
 
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    if compact_every < 0:
-        raise ValueError(f"compact_every must be >= 0, got {compact_every}")
-    if compact_every and "://" in state_path:
-        raise ValueError(
-            f"contamination_monitor_sink with compaction needs a "
-            f"driver-local state_path (os.rename/marker fold); got "
-            f"scheme-qualified {state_path!r} — pass compact_every=0 "
-            f"to keep the raw delta layout on an object store"
-        )
-
-    root = state_path.rstrip("/")
-
-    def _recover() -> tuple[int, str] | None:
-        """Newest READY base; drop incomplete bases + covered deltas."""
-        ready = _view_ready_base(root)
-        for upto, path in _view_bases(root):
-            if (upto, path) != ready:
-                shutil.rmtree(path, ignore_errors=True)
-        if ready is not None:
-            for bid, path in _view_deltas(root):
-                if bid <= ready[0]:
-                    shutil.rmtree(path, ignore_errors=True)
-        return ready
+    store = _ViewStore(state_path, "contamination_monitor_sink", compact_every)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        ready = _recover() if compact_every else _view_ready_base(root)
+        ready = store.recover()
         base = split_shingled(
             batch_df, n, id_col, text_col, test_prefix_below,
             val_prefix_below, normalize=normalize,
@@ -461,18 +539,10 @@ def contamination_monitor_sink(
         # own delta is written BEFORE the store read, so the read below
         # always succeeds (even a zero-train batch leaves a
         # schema-bearing empty file) and covers this batch's own train
-        # shingles per the contract; the <= N delta filter keeps replay
+        # shingles per the contract; the <= N bound keeps replay
         # deterministic
-        train_ng.write.mode("overwrite").parquet(
-            os.path.join(root, "delta", f"batch_id={batch_id}")
-        )
-        store_paths = [] if ready is None else [ready[1]]
-        store_paths += [
-            p
-            for bid, p in _view_deltas(root)
-            if (ready is None or bid > ready[0]) and bid <= batch_id
-        ]
-        known = spark.read.parquet(*store_paths).select("ng")
+        store.write_delta(batch_id, train_ng)
+        known = spark.read.parquet(*store.live(ready, upto=batch_id)).select("ng")
         eval_ng = (
             base.where(F.col("split") != "train")
             .select("split", F.col(id_col), F.explode("_ng").alias("_g"))
@@ -510,28 +580,14 @@ def contamination_monitor_sink(
             out_path.rstrip("/") + f"/batch_id={batch_id}"
         )
         eval_ng.unpersist()
-        if not compact_every:
-            return
-        deltas = [
-            (bid, p)
-            for bid, p in _view_deltas(root)
-            if ready is None or bid > ready[0]
-        ]
-        if len(deltas) < compact_every:
-            return
-        state = spark.read.parquet(*[p for _, p in deltas]).select("ng")
-        if ready is not None:
-            state = spark.read.parquet(ready[1]).select("ng").unionByName(state)
         # ONE distinct folds base + deltas: the store's only global
         # dedup, paid every compact_every batches, and it also shrinks
         # every later probe's matched-row multiplicity to 1
-        new_base = os.path.join(root, f"base_upto_{deltas[-1][0]}")
-        state.distinct().write.mode("overwrite").parquet(new_base)
-        open(os.path.join(new_base, "_VIEW_READY"), "w").close()
-        if ready is not None:
-            shutil.rmtree(ready[1], ignore_errors=True)
-        for _, p in deltas:
-            shutil.rmtree(p, ignore_errors=True)
+        store.compact(
+            ready,
+            compact_every,
+            lambda paths: spark.read.parquet(*paths).select("ng").distinct(),
+        )
 
     return write
 
@@ -553,6 +609,15 @@ def read_contamination_monitor(spark, out_path: str) -> DataFrame:
     )
 
 
+def _aggregate_fold(spark, paths: list[str], keys, measures) -> DataFrame:
+    """One re-aggregate folds any number of ``summarize`` states
+    (merge_increment over an N-way union is the same single groupBy)."""
+    from flyq_spark.operators.incremental import merge_increment
+
+    state = spark.read.parquet(*paths)
+    return merge_increment(state.limit(0), state, keys, tuple(measures))
+
+
 def aggregate_view_sink(
     view_path: str,
     keys: tuple[str, ...],
@@ -563,83 +628,30 @@ def aggregate_view_sink(
     """foreachBatch callback maintaining a continuously-updated
     AGGREGATE view (a streaming materialized view) with the
     :mod:`incremental` state layout: each micro-batch is summarized
-    once and lands as a DELTA partition; every ``compact_every``
-    batches the base and accumulated deltas fold into a new base.
-
-    Replay safety: additive merge is NOT idempotent (re-applying a
-    batch double-counts), so nothing is ever merged in place — a
-    replayed batch OVERWRITES its own ``delta/batch_id=N`` partition
-    (Structured Streaming re-delivers the same data for the same
-    batch_id), and compaction folds each delta exactly once. Crash
-    safety: a new base is complete only when its ``_VIEW_READY`` marker
-    exists; recovery keeps the newest ready base and deletes newer
-    incomplete ones plus any deltas the ready base already covers.
-    Read the view with :func:`read_aggregate_view`.
+    once into the view store (module docstring), whose fold is one
+    additive re-aggregate. Additive merge is not idempotent, which is
+    why the store never merges in place. Read the view with
+    :func:`read_aggregate_view`.
 
     Scale: the per-batch work is one partial-aggregated summarize of
     the batch (key-cardinality output) — the view never rescans
     history; compaction cost is keys × (compact_every + 1) state rows,
-    amortized O(keys) per batch. ``view_path`` must be driver-local
-    (same os.rename/marker discipline as ``upsert_sink``)."""
-    import os
-    import shutil
+    amortized O(keys) per batch."""
+    from flyq_spark.operators.incremental import summarize
 
-    from flyq_spark.operators.incremental import merge_increment, summarize
-
-    if "://" in view_path:
-        raise ValueError(
-            f"aggregate_view_sink needs a driver-local view_path; got "
-            f"scheme-qualified {view_path!r}"
-        )
-    if compact_every < 1:
-        raise ValueError(f"compact_every must be >= 1, got {compact_every}")
-
-    root = view_path.rstrip("/")
-
-    def _recover() -> tuple[int, str] | None:
-        """Newest READY base; drop incomplete bases and covered deltas."""
-        ready = _view_ready_base(root)
-        # every other base is either incomplete (no marker) or an older
-        # ready base stranded by a crash between marker and cleanup
-        for upto, path in _view_bases(root):
-            if (upto, path) != ready:
-                shutil.rmtree(path, ignore_errors=True)
-        if ready is not None:
-            for bid, path in _view_deltas(root):
-                if bid <= ready[0]:
-                    shutil.rmtree(path, ignore_errors=True)
-        return ready
+    store = _ViewStore(view_path, "aggregate_view_sink", compact_every)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ready = _recover()
-        summary = summarize(batch_df, keys, measures, approx_distinct)
-        delta_dir = os.path.join(root, "delta", f"batch_id={batch_id}")
-        summary.write.mode("overwrite").parquet(delta_dir)
-        deltas = [
-            (b, p)
-            for b, p in _view_deltas(root)
-            if ready is None or b > ready[0]
-        ]
-        if len(deltas) < compact_every:
-            return
-        merged = spark.read.parquet(*[p for _, p in deltas])
-        state = merged
-        if ready is not None:
-            state = spark.read.parquet(ready[1]).unionByName(merged)
-        # one re-aggregate folds base + all deltas (merge_increment over
-        # an N-way union is the same single groupBy)
-        folded = merge_increment(
-            state.limit(0), state, keys, tuple(measures)
+        ready = store.recover()
+        store.write_delta(
+            batch_id, summarize(batch_df, keys, measures, approx_distinct)
         )
-        upto = deltas[-1][0]
-        new_base = os.path.join(root, f"base_upto_{upto}")
-        folded.write.mode("overwrite").parquet(new_base)
-        open(os.path.join(new_base, "_VIEW_READY"), "w").close()
-        if ready is not None:
-            shutil.rmtree(ready[1], ignore_errors=True)
-        for bid, path in deltas:
-            shutil.rmtree(path, ignore_errors=True)
+        store.compact(
+            ready,
+            compact_every,
+            lambda paths: _aggregate_fold(spark, paths, keys, measures),
+        )
 
     return write
 
@@ -653,27 +665,8 @@ def read_aggregate_view(
     """Current contents of an ``aggregate_view_sink`` view: newest ready
     base merged with uncompacted deltas (one key-sized aggregation —
     never the raw stream)."""
-    import os
-
-    from pyspark.sql import DataFrame as _DF  # noqa: F401
-
-    from flyq_spark.operators.incremental import merge_increment
-
-    root = view_path.rstrip("/")
-    paths = []
-    # shared tolerant listing: numeric order (lexicographic would rank
-    # base_upto_9 above base_upto_10) and stray names skipped, matching
-    # the writer's own parsers
-    ready = _view_ready_base(root)
-    if ready is not None:
-        paths.append(ready[1])
-    for bid, path in _view_deltas(root):
-        if ready is None or bid > ready[0]:
-            paths.append(path)
-    if not paths:
-        raise FileNotFoundError(f"no view state under {view_path!r}")
-    state = spark.read.parquet(*paths)
-    return merge_increment(state.limit(0), state, keys, tuple(measures))
+    paths = _ViewStore(view_path, "read_aggregate_view").snapshot()
+    return _aggregate_fold(spark, paths, keys, measures)
 
 
 def heavy_hitter_sink(
@@ -691,76 +684,43 @@ def heavy_hitter_sink(
     exact per-item aggregate view when the item space is unbounded
     (URLs, queries, tokens).
 
-    Layout and replay discipline mirror ``aggregate_view_sink``: each
-    micro-batch's OWN summary lands as ``delta/batch_id=N`` (replay
-    overwrites it — same batch, same summary), and compaction folds
-    base + deltas in strict batch_id order every ``compact_every``
-    batches (MG folding is order-sensitive, so the fold order is
-    pinned). Counts are lower bounds within total/k of truth — the
-    documented MG trade; exact re-verification requires a batch pass
-    over retained history (``sketch.heavy_hitters``).
+    Each micro-batch's own MG summary is a view-store delta (module
+    docstring); the fold merges base + deltas in strict batch_id order
+    (MG folding is order-sensitive, so the order is pinned). Counts
+    are lower bounds within total/k of truth — the documented MG
+    trade; exact re-verification requires a batch pass over retained
+    history (``sketch.heavy_hitters``).
 
     Read with :func:`read_heavy_hitter_view`."""
-    import shutil
-
     from flyq_spark.operators.sketch import mg_summary
 
-    if "://" in view_path:
-        raise ValueError(
-            f"heavy_hitter_sink needs a driver-local view_path; got "
-            f"scheme-qualified {view_path!r}"
-        )
-    if k < 1 or compact_every < 1:
-        raise ValueError(f"need k >= 1 and compact_every >= 1; got {k}, {compact_every}")
-    root = view_path.rstrip("/")
-
-    def _recover() -> tuple[int, str] | None:
-        ready = _view_ready_base(root)
-        for upto, path in _view_bases(root):
-            if (upto, path) != ready:
-                shutil.rmtree(path, ignore_errors=True)
-        if ready is not None:
-            for bid, path in _view_deltas(root):
-                if bid <= ready[0]:
-                    shutil.rmtree(path, ignore_errors=True)
-        return ready
+    store = _ViewStore(view_path, "heavy_hitter_sink", compact_every)
+    if k < 1:
+        raise ValueError(f"need k >= 1; got {k}")
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ready = _recover()
+        ready = store.recover()
         counter, total = mg_summary(batch_df, item_col, k)
         item_type = batch_df.select(item_col).schema[0].dataType.simpleString()
-        _write_hh_state(
-            spark, f"{root}/delta/batch_id={batch_id}", item_type, counter, total
+        store.write_delta(batch_id, _hh_state(spark, item_type, counter, total))
+        store.compact(
+            ready,
+            compact_every,
+            lambda paths: _hh_state(
+                spark, item_type, *_fold_hh_state(spark, paths, k)
+            ),
         )
-        deltas = [
-            d
-            for d in _view_deltas(root)
-            if d[0] <= batch_id and (ready is None or d[0] > ready[0])
-        ]
-        if len(deltas) >= compact_every:
-            state, n = _fold_hh_state(
-                spark, ([ready[1]] if ready else []) + [p for _, p in sorted(deltas)], k
-            )
-            import os
-
-            new_base = os.path.join(root, f"base_upto_{batch_id}")
-            _write_hh_state(spark, new_base, item_type, state, n)
-            open(os.path.join(new_base, "_VIEW_READY"), "w").close()
-            for bid, path in deltas:
-                shutil.rmtree(path, ignore_errors=True)
-            if ready:
-                shutil.rmtree(ready[1], ignore_errors=True)
 
     return write
 
 
-def _write_hh_state(spark, path: str, item_type: str, counter: dict, total: int) -> None:
+def _hh_state(spark, item_type: str, counter: dict, total: int) -> DataFrame:
     rows = [(item, int(cnt), None) for item, cnt in counter.items()]
     rows.append((None, None, int(total)))
-    spark.createDataFrame(
+    return spark.createDataFrame(
         rows, schema=f"item {item_type}, cnt long, total long"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    ).coalesce(1)
 
 
 def _fold_hh_state(spark, paths: list[str], k: int) -> tuple[dict, int]:
@@ -782,19 +742,8 @@ def _fold_hh_state(spark, paths: list[str], k: int) -> tuple[dict, int]:
 def read_heavy_hitter_view(spark, view_path: str, k: int) -> DataFrame:
     """Current bounded-state frequency view as (item, count_lb, total):
     newest ready base + uncompacted deltas folded in strict batch_id
-    order (recovery already guarantees remaining deltas postdate the
-    base). The item column keeps the type the sink wrote."""
-    root = view_path.rstrip("/")
-    ready = _view_ready_base(root)
-    # skip deltas the base already covers (a stale replayed delta of an
-    # already-compacted batch must not double-fold)
-    paths = ([ready[1]] if ready else []) + [
-        p
-        for bid, p in sorted(_view_deltas(root))
-        if ready is None or bid > ready[0]
-    ]
-    if not paths:
-        raise FileNotFoundError(f"no heavy-hitter state under {root}")
+    order. The item column keeps the type the sink wrote."""
+    paths = _ViewStore(view_path, "read_heavy_hitter_view").snapshot()
     item_type = (
         spark.read.parquet(paths[0]).schema["item"].dataType.simpleString()
     )
@@ -814,12 +763,10 @@ def golden_record_sink(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch callback maintaining a streaming GOLDEN-RECORD
     view — field-level survivorship (cdc.golden_record) kept current
-    over a change stream, with the same delta/base/marker discipline
-    as :func:`aggregate_view_sink`: each batch lands as ONE
-    key-cardinality state summary under ``delta/batch_id=N`` (replay
-    OVERWRITES, so at-least-once redelivery cannot double-count
-    n_rows or resurrect older survivors), and every ``compact_every``
-    batches fold into a marker-gated base.
+    over a change stream: each batch lands as ONE key-cardinality
+    state summary in the view store (module docstring), so an
+    at-least-once redelivery cannot double-count n_rows or resurrect
+    older survivors.
 
     The state merges losslessly because it keeps each survivor's
     order columns (max-of-structs is associative and commutative —
@@ -828,60 +775,26 @@ def golden_record_sink(
 
     Per-batch cost: one map-side-combined aggregation of the batch.
     The view never rescans history."""
-    import os
-    import shutil
-
     from flyq_spark.operators.cdc import golden_record_merge, golden_record_state
 
-    if "://" in view_path:
-        raise ValueError(
-            f"golden_record_sink needs a driver-local view_path; got "
-            f"scheme-qualified {view_path!r}"
-        )
-    if compact_every < 1:
-        raise ValueError(f"compact_every must be >= 1, got {compact_every}")
+    store = _ViewStore(view_path, "golden_record_sink", compact_every)
     if not fields:
         raise ValueError("golden_record_sink needs at least one field")
-
-    root = view_path.rstrip("/")
     names = list(fields)
-
-    def _recover():
-        ready = _view_ready_base(root)
-        for upto, path in _view_bases(root):
-            if (upto, path) != ready:
-                shutil.rmtree(path, ignore_errors=True)
-        if ready is not None:
-            for bid, path in _view_deltas(root):
-                if bid <= ready[0]:
-                    shutil.rmtree(path, ignore_errors=True)
-        return ready
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ready = _recover()
-        state = golden_record_state(batch_df, key_cols, order_cols, fields)
-        delta_dir = os.path.join(root, "delta", f"batch_id={batch_id}")
-        state.write.mode("overwrite").parquet(delta_dir)
-        deltas = [
-            (b, p)
-            for b, p in _view_deltas(root)
-            if ready is None or b > ready[0]
-        ]
-        if len(deltas) < compact_every:
-            return
-        merged = spark.read.parquet(*[p for _, p in deltas])
-        if ready is not None:
-            merged = spark.read.parquet(ready[1]).unionByName(merged)
-        folded = golden_record_merge(merged, key_cols, names)
-        upto = deltas[-1][0]
-        new_base = os.path.join(root, f"base_upto_{upto}")
-        folded.write.mode("overwrite").parquet(new_base)
-        open(os.path.join(new_base, "_VIEW_READY"), "w").close()
-        if ready is not None:
-            shutil.rmtree(ready[1], ignore_errors=True)
-        for bid, path in deltas:
-            shutil.rmtree(path, ignore_errors=True)
+        ready = store.recover()
+        store.write_delta(
+            batch_id, golden_record_state(batch_df, key_cols, order_cols, fields)
+        )
+        store.compact(
+            ready,
+            compact_every,
+            lambda paths: golden_record_merge(
+                spark.read.parquet(*paths), key_cols, names
+            ),
+        )
 
     return write
 
@@ -890,22 +803,28 @@ def read_golden_record_view(
     spark, view_path: str, key_cols: tuple[str, ...], field_names: list[str]
 ) -> DataFrame:
     """Current golden records from a :func:`golden_record_sink` view:
-    fold the ready base plus any uncompacted deltas (skipping deltas
-    the base already covers) and finalize the survivor values."""
+    fold the live state and finalize the survivor values."""
     from flyq_spark.operators.cdc import golden_record_finalize, golden_record_merge
 
-    root = view_path.rstrip("/")
-    ready = _view_ready_base(root)
-    paths = ([ready[1]] if ready else []) + [
-        p
-        for bid, p in sorted(_view_deltas(root))
-        if ready is None or bid > ready[0]
-    ]
-    if not paths:
-        raise FileNotFoundError(f"no golden-record state under {root}")
-    state = spark.read.parquet(*paths)
+    paths = _ViewStore(view_path, "read_golden_record_view").snapshot()
     return golden_record_finalize(
-        golden_record_merge(state, key_cols, field_names), field_names
+        golden_record_merge(spark.read.parquet(*paths), key_cols, field_names),
+        field_names,
+    )
+
+
+def _late_fold(state: DataFrame, group_col: str, thresholds) -> DataFrame:
+    """Per-group merge of lateness states: counters add, maxima max
+    (the max of ``batch_max_us`` is the group's watermark)."""
+    return state.groupBy(group_col).agg(
+        F.sum("n_events").cast("long").alias("n_events"),
+        F.max("batch_max_us").cast("long").alias("batch_max_us"),
+        F.max("max_late_us").cast("long").alias("max_late_us"),
+        F.sum("total_late_us").cast("long").alias("total_late_us"),
+        *[
+            F.sum(f"n_late_{int(t)}us").cast("long").alias(f"n_late_{int(t)}us")
+            for t in thresholds
+        ],
     )
 
 
@@ -932,12 +851,9 @@ def late_arrival_monitor_sink(
         n_late_t    += rows with lateness > t   (exactly the rows
                        ``withWatermark(t)`` would drop in batch b)
 
-    Replay safety: wm_before reads only STRICTLY-OLDER state, so a
-    re-delivered batch (same batch_id after a pre-commit crash)
-    recomputes an identical delta and OVERWRITES its own
-    ``delta/batch_id=N`` partition — the same never-merge-in-place
-    discipline as :func:`aggregate_view_sink`; compaction folds every
-    delta exactly once behind a ``_VIEW_READY`` marker.
+    Replay safety: wm_before reads only STRICTLY-OLDER live state of
+    the view store (module docstring), so a re-delivered batch
+    recomputes an identical delta.
 
     Scale: per-batch work is one group-sized aggregation of the batch
     plus one broadcast of the ≤|groups|-row watermark table; state is
@@ -946,52 +862,13 @@ def late_arrival_monitor_sink(
     primitives (their per-call localCheckpoint would leak per batch —
     operators/ranking.py lifecycle note); the running max lives in the
     view itself. Read with :func:`read_late_arrival_monitor`."""
-    import os
-    import shutil
-
-    if "://" in view_path:
-        raise ValueError(
-            f"late_arrival_monitor_sink needs a driver-local view_path; "
-            f"got scheme-qualified {view_path!r}"
-        )
-    if compact_every < 1:
-        raise ValueError(f"compact_every must be >= 1, got {compact_every}")
-    root = view_path.rstrip("/")
+    store = _ViewStore(view_path, "late_arrival_monitor_sink", compact_every)
     thresholds = tuple(int(t) for t in thresholds_us)
-
-    def _fold(state: DataFrame) -> DataFrame:
-        aggs = [
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.max("batch_max_us").cast("long").alias("batch_max_us"),
-            F.max("max_late_us").cast("long").alias("max_late_us"),
-            F.sum("total_late_us").cast("long").alias("total_late_us"),
-        ] + [
-            F.sum(f"n_late_{t}us").cast("long").alias(f"n_late_{t}us")
-            for t in thresholds
-        ]
-        return state.groupBy(group_col).agg(*aggs)
-
-    def _recover() -> tuple[int, str] | None:
-        ready = _view_ready_base(root)
-        for upto, path in _view_bases(root):
-            if (upto, path) != ready:
-                shutil.rmtree(path, ignore_errors=True)
-        if ready is not None:
-            for bid, path in _view_deltas(root):
-                if bid <= ready[0]:
-                    shutil.rmtree(path, ignore_errors=True)
-        return ready
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ready = _recover()
-        # strictly-older state only: the ready base (covers batches <=
-        # upto < batch_id in any non-corrupt run) + older deltas
-        prior = ([ready[1]] if ready is not None else []) + [
-            p
-            for b, p in _view_deltas(root)
-            if b < batch_id and (ready is None or b > ready[0])
-        ]
+        ready = store.recover()
+        prior = store.live(ready, upto=batch_id - 1)
         src = batch_df.select(
             F.col(group_col),
             F.col(ts_col).cast("long").alias("_ts_us"),
@@ -1025,27 +902,14 @@ def late_arrival_monitor_sink(
             F.sum(late).cast("long").alias("total_late_us"),
             *counters,
         )
-        delta_dir = os.path.join(root, "delta", f"batch_id={batch_id}")
-        delta.write.mode("overwrite").parquet(delta_dir)
-        deltas = [
-            (b, p)
-            for b, p in _view_deltas(root)
-            if ready is None or b > ready[0]
-        ]
-        if len(deltas) < compact_every:
-            return
-        state = spark.read.parquet(*[p for _, p in deltas])
-        if ready is not None:
-            state = spark.read.parquet(ready[1]).unionByName(state)
-        folded = _fold(state)
-        upto = deltas[-1][0]
-        new_base = os.path.join(root, f"base_upto_{upto}")
-        folded.write.mode("overwrite").parquet(new_base)
-        open(os.path.join(new_base, "_VIEW_READY"), "w").close()
-        if ready is not None:
-            shutil.rmtree(ready[1], ignore_errors=True)
-        for bid, path in deltas:
-            shutil.rmtree(path, ignore_errors=True)
+        store.write_delta(batch_id, delta)
+        store.compact(
+            ready,
+            compact_every,
+            lambda paths: _late_fold(
+                spark.read.parquet(*paths), group_col, thresholds
+            ),
+        )
 
     return write
 
@@ -1059,25 +923,8 @@ def read_late_arrival_monitor(
     """Current per-group lateness profile from a
     :func:`late_arrival_monitor_sink` view: (group, n_events,
     watermark_us, max_late_us, total_late_us, n_late_<t>us...) — one
-    group-sized aggregation over the ready base + uncompacted
-    deltas."""
-    root = view_path.rstrip("/")
-    ready = _view_ready_base(root)
-    paths = ([ready[1]] if ready else []) + [
-        p
-        for bid, p in _view_deltas(root)
-        if ready is None or bid > ready[0]
-    ]
-    if not paths:
-        raise FileNotFoundError(f"no late-arrival state under {root}")
-    state = spark.read.parquet(*paths)
-    aggs = [
-        F.sum("n_events").cast("long").alias("n_events"),
-        F.max("batch_max_us").cast("long").alias("watermark_us"),
-        F.max("max_late_us").cast("long").alias("max_late_us"),
-        F.sum("total_late_us").cast("long").alias("total_late_us"),
-    ] + [
-        F.sum(f"n_late_{int(t)}us").cast("long").alias(f"n_late_{int(t)}us")
-        for t in thresholds_us
-    ]
-    return state.groupBy(group_col).agg(*aggs)
+    group-sized aggregation over the live state."""
+    paths = _ViewStore(view_path, "read_late_arrival_monitor").snapshot()
+    return _late_fold(
+        spark.read.parquet(*paths), group_col, thresholds_us
+    ).withColumnRenamed("batch_max_us", "watermark_us")

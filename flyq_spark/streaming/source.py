@@ -117,6 +117,12 @@ def consume_stream_with_group(
     micro-batch is the whole committed range [start, end) of every
     partition it covers, so no offset below a batch's maximum can still
     be missing and max + 1 is a safe commit.
+
+    ``trigger_once`` runs ``trigger(availableNow=True)``. On PySpark 4.1
+    a Python streaming source has no ``Trigger.AvailableNow`` hook, so
+    Spark falls back to one single batch, up to the LEO seen when that
+    batch is planned; after a restart that finds an uncommitted batch,
+    records produced since may wait for the next start.
     """
     starting = {
         str(p): engine._clamped_start(

@@ -1089,6 +1089,176 @@ def test_heavy_hitter_sink_stale_replayed_delta_ignored(spark, tmp_path):
     assert after == before
 
 
+def _view_sink_specs():
+    """The five compacting view sinks, each as (build, four batches,
+    snapshot). ``build(path, compact_every)`` makes the sink,
+    ``snapshot(spark, path)`` reads its view as a row multiset. The
+    contamination store has no reader of its own (its output is the
+    per-doc scores), so its snapshot is the multiset of live store
+    rows, where a double-read delta shows as doubled rows."""
+    import hashlib
+    from collections import Counter
+
+    from flyq_spark.streaming import sink as S
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    train_ids = [
+        i for i in range(1, 400)
+        if hashlib.md5(str(i).encode()).hexdigest()[:2] >= "1a"
+    ]
+    words = [f"w{j}" for j in range(12)]
+    # four batches of three train docs whose shingles overlap across
+    # batches, so a fold's distinct is not a no-op
+    docs = [
+        [
+            (i, " ".join(words[(i + b) % 6 : (i + b) % 6 + 4]))
+            for i in train_ids[3 * b : 3 * b + 3]
+        ]
+        for b in range(4)
+    ]
+    return {
+        "contamination": (
+            lambda p, c: S.contamination_monitor_sink(
+                p + ".out", p, n=2, compact_every=c
+            ),
+            [(d, "doc_id long, text string") for d in docs],
+            lambda spark, p: Counter(
+                r["ng"]
+                for r in spark.read.parquet(
+                    *S._ViewStore(p, "snapshot").snapshot()
+                ).collect()
+            ),
+        ),
+        "aggregate": (
+            lambda p, c: S.aggregate_view_sink(
+                p, ("k",), {"v": F.col("v")}, compact_every=c
+            ),
+            [
+                ([("a", 1), ("b", 2)], "k string, v long"),
+                ([("a", 3)], "k string, v long"),
+                ([("b", 4), ("c", 5)], "k string, v long"),
+                ([("a", 10), ("c", 1)], "k string, v long"),
+            ],
+            lambda spark, p: rows(
+                S.read_aggregate_view(spark, p, ("k",), ("v",))
+            ),
+        ),
+        "heavy_hitter": (
+            lambda p, c: S.heavy_hitter_sink(p, "item", k=16, compact_every=c),
+            [
+                ([(x,) for x in items], "item string")
+                for items in (
+                    ["a", "a", "b"], ["a", "c"], ["b", "d"], ["a", "e", "e"]
+                )
+            ],
+            lambda spark, p: rows(S.read_heavy_hitter_view(spark, p, 16)),
+        ),
+        "golden_record": (
+            lambda p, c: S.golden_record_sink(
+                p, ("k",), ("o", "t"),
+                {"a": F.col("a"), "b": F.col("b")}, compact_every=c,
+            ),
+            [
+                (r, "k long, o long, t long, a string, b long")
+                for r in (
+                    [(1, 10, 1, "a0", None), (2, 10, 2, None, 20)],
+                    [(1, 20, 3, None, 99), (3, 5, 4, "x", None)],
+                    [(1, 30, 5, "a2", None), (2, 5, 6, "late", 7)],
+                    [(3, 40, 7, "y", 1)],
+                )
+            ],
+            lambda spark, p: rows(
+                S.read_golden_record_view(spark, p, ("k",), ["a", "b"])
+            ),
+        ),
+        "late_arrival": (
+            lambda p, c: S.late_arrival_monitor_sink(
+                p, "g", "ts_us", thresholds_us=(5,), compact_every=c
+            ),
+            [
+                (r, "g string, ts_us long")
+                for r in (
+                    [("a", 100), ("b", 50)],
+                    [("a", 90), ("a", 120)],
+                    [("a", 100), ("b", 10)],
+                    [("b", 60), ("a", 200)],
+                )
+            ],
+            lambda spark, p: rows(
+                S.read_late_arrival_monitor(spark, p, "g", (5,))
+            ),
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_view_sink_specs()))
+def test_view_sink_replay_and_crash_protocol(spark, tmp_path, name):
+    """The shared view-store protocol, pinned for every compacting
+    sink against a clean serial run of the same batches: a replayed
+    batch overwrites its own delta (no double count); a stale replay
+    of an already-compacted batch is ignored by reader and writer; an
+    unmarked base (a fold that crashed before its marker) is never
+    read and is discarded, with the refold still seeing all history;
+    stray debug copies are tolerated by both sides."""
+    import shutil
+
+    build, batches, snapshot = _view_sink_specs()[name]
+    frames = [spark.createDataFrame(r, schema) for r, schema in batches]
+    view, ref = str(tmp_path / "view"), str(tmp_path / "ref")
+    sink, ref_sink = build(view, 2), build(ref, 2)
+
+    for bid in range(3):
+        sink(frames[bid], bid)  # batch 1 folds 0..1 into base_upto_1
+        ref_sink(frames[bid], bid)
+    want = snapshot(spark, ref)
+    assert snapshot(spark, view) == want
+
+    sink(frames[2], 2)  # replay: overwrites delta 2
+    assert snapshot(spark, view) == want
+    sink(frames[1], 1)  # stale replay: batch 1 is in base_upto_1
+    assert snapshot(spark, view) == want
+
+    # crashed fold: a complete-looking base with no marker; stray copies
+    # of a marked base and of a delta under names that do not parse
+    shutil.copytree(
+        os.path.join(view, "delta", "batch_id=2"),
+        os.path.join(view, "base_upto_99"),
+    )
+    shutil.copytree(
+        os.path.join(view, "base_upto_1"), os.path.join(view, "base_upto_3.bak")
+    )
+    shutil.copytree(
+        os.path.join(view, "delta", "batch_id=2"),
+        os.path.join(view, "delta", "batch_id=7.old"),
+    )
+    assert snapshot(spark, view) == want
+
+    sink(frames[3], 3)  # folds base_upto_1 + deltas 2..3
+    ref_sink(frames[3], 3)
+    assert snapshot(spark, view) == snapshot(spark, ref)
+    assert sorted(d for d in os.listdir(view) if d.startswith("base_upto_")) == [
+        "base_upto_3",
+        "base_upto_3.bak",
+    ]
+    assert os.path.exists(os.path.join(view, "base_upto_3", "_VIEW_READY"))
+    assert os.listdir(os.path.join(view, "delta")) == ["batch_id=7.old"]
+
+
+@pytest.mark.parametrize("name", sorted(_view_sink_specs()))
+def test_view_sink_rejects_object_store_path_and_no_compaction(tmp_path, name):
+    """The view store's marker and deletes are os-level, so every view
+    sink refuses a scheme-qualified path, and compaction cannot be
+    switched off: both are rejected before anything is written."""
+    build = _view_sink_specs()[name][0]
+    with pytest.raises(ValueError):
+        build("file://" + str(tmp_path / "view"), 16)
+    with pytest.raises(ValueError):
+        build(str(tmp_path / "view"), 0)
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_streaming_quantiles_composition(spark, tmp_path):
     """Mergeable-state quantiles END TO END through the streaming
     materialized view: per-batch value histograms land as deltas,
