@@ -1282,8 +1282,8 @@ def q_embedding_neardup(spark, sf_dir):
     (similarity.neardup_pairs_exact): triangle-inequality cell-pair
     pruning gives 100% recall with an equi-join plan — no corpus x
     corpus cross join anywhere. The oracle stays the all-pairs SQL
-    (fine at oracle scale); the LSH-bucketed approximate path
-    (similarity.neardup_pairs) is pinned separately in pytest."""
+    (fine at oracle scale); the pair set is pinned against the
+    brute-force join in pytest."""
     emb = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return V.neardup_pairs_exact(emb, min_cosine=0.4).select("id_a", "id_b")
 
@@ -1650,7 +1650,11 @@ def q_source_overlap(spark, sf_dir):
 
 
 def q_minhash_pairs(spark, sf_dir):
-    return D.minhash_lsh_pairs(_read(spark, sf_dir, "documents"), jaccard_threshold=0.4)
+    """MinHash-LSH near-dup pairs at the lower threshold: the same
+    md5-family band join and exact verify as `minhash_jaccard_pairs`,
+    at J >= 0.4."""
+    docs = _read(spark, sf_dir, "documents")
+    return D.minhash_band_pairs(docs, min_jaccard=0.4, k=32, bands=8)
 
 
 def q_simhash_neardup(spark, sf_dir):
@@ -2094,7 +2098,7 @@ def q_minhash_sig(spark, sf_dir):
     components per document joined to one string (operators/dedup.py:
     minhash_signatures — ONE md5 per shingle + k affine mod-prime
     permutations, one map-side-combined groupBy shuffle; the family
-    replays in ANSI SQL, unlike the Scala-side pyspark.ml hashes)."""
+    replays in ANSI SQL)."""
     docs = _read(spark, sf_dir, "documents")
     sig = D.minhash_signatures(docs, k=32)
     return sig.select(
@@ -2109,9 +2113,8 @@ def q_minhash_jaccard_pairs(spark, sf_dir):
     """End-to-end ORACLE-CHECKED MinHash-LSH near-dup join: md5
     permutation signatures, 8 bands x 4 rows banding (candidates from
     an equi-join on the band key), exact shingle-Jaccard verify
-    (operators/dedup.py:minhash_band_pairs). The pyspark.ml variant
-    (`minhash_pairs`) stays rows-only because its hash family lives in
-    Scala; this one is deterministic SQL at every stage."""
+    (operators/dedup.py:minhash_band_pairs) — deterministic SQL at
+    every stage."""
     docs = _read(spark, sf_dir, "documents")
     return D.minhash_band_pairs(docs, min_jaccard=0.5, k=32, bands=8)
 
@@ -2681,7 +2684,7 @@ def q_bpe_encode_stats(spark, sf_dir):
 def q_hashed_doc_vectors(spark, sf_dir):
     """Feature-hashing featurizer (operators/text.py:
     hashing_trick_vectors): dense 64-bucket token-count vectors,
-    bucket = md5-derived hash mod dim — the SQL-replayable HashingTF.
+    bucket = md5-derived hash mod dim — SQL-replayable feature hashing.
     Integer counts, two integer-keyed shuffles; vector emitted as a
     joined string for the hash gate."""
     docs = _read(spark, sf_dir, "documents")
@@ -5418,31 +5421,31 @@ def entry(spark: SparkSession) -> DataFrame:
 # prior round's record. Every entry still runs in the full local sweep
 # (tools/verify_local.py) regardless of position.
 _DRIVER_WINDOW = [
-    # This rotation brings in (f) six gates that no driver run has
-    # checked yet, each green in tools/verify_local.py with and without
-    # --pandas: the LM-eval and chat-format family. Six rows green in
-    # CORRECTNESS_r13 whose builders and operator modules have not
-    # changed since retire to make room: debounce_events,
-    # funnel_latency, histogram_quantiles, incremental_agg,
-    # incremental_retract, schema_unify. neardup_blast_radius and
-    # multi_signal_components stay: their graph loops now release
-    # superseded checkpoints. The rest is the earlier window: (a)
-    # entries last checked in r07, (b) the r12 gates, (c)
-    # value_outliers, whose oracle changed in r12, (d) the three BPE
-    # gates on the one size-adaptive trainer, (e) the SimHash near-dup
-    # joins on the shared banded-Hamming primitive.
+    # This rotation brings in (g) the four MinHash gates, now all on
+    # the one md5-family stack and its one SQL generator; none has been
+    # driver-checked in r12 or r13, and minhash_pairs is newly
+    # oracle-checked. Each is green in tools/verify_local.py with and
+    # without --pandas. Four rows green in CORRECTNESS_r13 whose
+    # builders and operator modules (cdc, joinaudit, sketch, skew) have
+    # not changed since retire to make room: feature_time_travel,
+    # join_size_est, kmv_overlap, skew_salted_event_stats. The rest is
+    # the earlier window: (a) entries last checked in r07, (b) the r12
+    # gates, (c) value_outliers, whose oracle changed in r12, (d) the
+    # three BPE gates on the one size-adaptive trainer, (e) the SimHash
+    # near-dup joins on the shared banded-Hamming primitive, (f) the
+    # LM-eval and chat-format family, never driver-checked before.
     #
-    # -- (a) last checked r07 (27) --
+    # -- (a) last checked r07 (23) --
     "attribution_multi_touch", "bloom_semi_prune",
     "boilerplate_removal", "cosine_pairs", "dataset_digest",
     "digest_repair", "entity_resolution",
-    "exact_global_quantiles", "feature_time_travel", "file_pruning",
+    "exact_global_quantiles", "file_pruning",
     "fuzzy_title_pairs", "join_preflight",
-    "join_size_est", "k_anonymity", "kmv_overlap", "lang_heavy_hitters",
+    "k_anonymity", "lang_heavy_hitters",
     "multi_signal_components", "multimodal_features",
     "neardup_blast_radius", "negative_samples",
     "pack_documents", "paragraph_dedup", "phash_neardup", "phrase_search",
-    "repetition_signals", "skew_salted_event_stats",
+    "repetition_signals",
     "train_test_split",
     # -- (b) r12 gates (11) --
     "pack_shards", "contamination_units", "contamination_normalized",
@@ -5457,6 +5460,9 @@ _DRIVER_WINDOW = [
     # -- (f) never driver-checked (6) --
     "rouge_l", "chrf_overlap", "ppl_buckets", "preference_pairs",
     "semantic_contamination", "chat_validate",
+    # -- (g) one MinHash stack (4) --
+    "minhash_pairs", "minhash_jaccard_pairs", "minhash_sig",
+    "incremental_dedup",
 ]
 
 
@@ -5730,19 +5736,23 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def _minhash_oracle(k: int = 32, bands: int = 8) -> tuple[str, str]:
-    """DuckDB replay of the universal-hash MinHash family: (signature
-    SQL, banded-LSH pair SQL). Generated from the SAME LCG-derived
-    (a_i, b_i) coefficients the Spark operators use
-    (operators/dedup.py:minhash_params), so the 32 min-components and 8
-    band keys stay mechanically in sync."""
+def _minhash_ctes(carry: str = "", where: str = "") -> str:
+    """DuckDB replay of the md5 MinHash family as CTEs: toks -> grams
+    (distinct word 3-grams) -> hashed (md5 h32) -> sigs (k mins) ->
+    banded (one md5 band key per band). Generated from the SAME
+    LCG-derived (a_i, b_i) coefficients the Spark operators use
+    (operators/dedup.py:minhash_params), so the k min-components and
+    the band keys stay mechanically in sync; k = 32 and 8 bands, as in
+    every MinHash gate. ``carry`` names a documents column kept on
+    every CTE row; ``where`` filters the documents read."""
+    k, bands = 32, 8
     r = k // bands
     p = D.MINHASH_PRIME
-    params = D.minhash_params(k)
+    c = f", {carry}" if carry else ""
     mins = ",\n         ".join(
-        f"min(({a} * h + {b}) % {p}) AS m{i}" for i, (a, b) in enumerate(params)
+        f"min(({a} * h + {b}) % {p}) AS m{i}"
+        for i, (a, b) in enumerate(D.minhash_params(k))
     )
-    allm = ", ".join(f"m{i}" for i in range(k))
     band_vals = ",\n    ".join(
         "({b}, md5(concat_ws('|', {cols})))".format(
             b=b,
@@ -5750,33 +5760,44 @@ def _minhash_oracle(k: int = 32, bands: int = 8) -> tuple[str, str]:
         )
         for b in range(bands)
     )
-    head = f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
+    return f"""
+toks AS (
+  SELECT doc_id{c}, string_split(text, ' ') AS w
+  FROM documents{f" WHERE {where}" if where else ""}
 ),
 grams AS (
-  SELECT DISTINCT doc_id,
+  SELECT DISTINCT doc_id{c},
          array_to_string(w[CAST(i AS BIGINT):CAST(i AS BIGINT)+2], ' ') AS g
   FROM toks, UNNEST(range(1, len(w) - 1)) AS t(i)
 ),
 hashed AS (
-  SELECT doc_id, g,
+  SELECT doc_id{c}, g,
          CAST(concat('0x', substr(md5(g), 1, 8)) AS BIGINT) AS h
   FROM grams
 ),
 sigs AS (
-  SELECT doc_id, {mins}
-  FROM hashed GROUP BY doc_id
-)"""
-    sig_sql = head + f"""
-SELECT doc_id, concat_ws('|', {allm}) AS minhash_sig FROM sigs
-"""
-    pairs_sql = head + f""",
+  SELECT doc_id{c}, {mins}
+  FROM hashed GROUP BY doc_id{c}
+),
 banded AS (
-  SELECT doc_id, v.band, v.bits
+  SELECT doc_id{c}, v.band, v.bits
   FROM sigs, LATERAL (VALUES
     {band_vals}) AS v(band, bits)
-),
+)"""
+
+
+_MINHASH_SIG_SQL = f"""
+WITH {_minhash_ctes()}
+SELECT doc_id, concat_ws('|', {", ".join(f"m{i}" for i in range(32))}) AS minhash_sig
+FROM sigs
+"""
+
+
+def _minhash_pairs_sql(min_jaccard: float) -> str:
+    """Replay of ``minhash_band_pairs`` (k=32, 8 bands): band-key
+    candidates, then exact shingle-Jaccard verify at ``min_jaccard``."""
+    return f"""
+WITH {_minhash_ctes()},
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM banded a JOIN banded b
@@ -5795,54 +5816,14 @@ SELECT x.id_a, x.id_b,
 FROM inter x
 JOIN sizes sa ON sa.doc_id = x.id_a
 JOIN sizes sb ON sb.doc_id = x.id_b
-WHERE CAST(x.i AS DOUBLE) / (sa.n + sb.n - x.i) >= 0.5
+WHERE CAST(x.i AS DOUBLE) / (sa.n + sb.n - x.i) >= CAST({min_jaccard!r} AS DOUBLE)
 """
-    return sig_sql, pairs_sql
 
 
-_MINHASH_SIG_SQL, _MINHASH_PAIRS_SQL = _minhash_oracle()
-
-
-def _incremental_dedup_oracle(k: int = 32, bands: int = 8) -> str:
-    """DuckDB replay of ``dedup_against`` (src1 deduped against src0):
-    same LCG coefficients, same band keys, LSH-level anti-join."""
-    r = k // bands
-    p = D.MINHASH_PRIME
-    params = D.minhash_params(k)
-    mins = ",\n         ".join(
-        f"min(({a} * h + {b}) % {p}) AS m{i}" for i, (a, b) in enumerate(params)
-    )
-    band_vals = ",\n    ".join(
-        "({b}, md5(concat_ws('|', {cols})))".format(
-            b=b,
-            cols=", ".join(f"CAST(m{b * r + j} AS VARCHAR)" for j in range(r)),
-        )
-        for b in range(bands)
-    )
-    return f"""
-WITH toks AS (
-  SELECT doc_id, source, string_split(text, ' ') AS w
-  FROM documents WHERE source IN ('src0', 'src1')
-),
-grams AS (
-  SELECT DISTINCT doc_id, source,
-         array_to_string(w[CAST(i AS BIGINT):CAST(i AS BIGINT)+2], ' ') AS g
-  FROM toks, UNNEST(range(1, len(w) - 1)) AS t(i)
-),
-hashed AS (
-  SELECT doc_id, source, g,
-         CAST(concat('0x', substr(md5(g), 1, 8)) AS BIGINT) AS h
-  FROM grams
-),
-sigs AS (
-  SELECT doc_id, source, {mins}
-  FROM hashed GROUP BY doc_id, source
-),
-banded AS (
-  SELECT doc_id, source, v.band, v.bits
-  FROM sigs, LATERAL (VALUES
-    {band_vals}) AS v(band, bits)
-),
+# replay of ``dedup_against`` (src1 deduped against src0): same
+# signatures and band keys, LSH-level anti-join
+_INCREMENTAL_DEDUP_SQL = f"""
+WITH {_minhash_ctes(carry="source", where="source IN ('src0', 'src1')")},
 hits AS (
   SELECT DISTINCT a.doc_id
   FROM banded a
@@ -5854,9 +5835,6 @@ SELECT d.doc_id, d.lang, d.n_chars
 FROM documents d
 WHERE d.source = 'src1' AND d.doc_id NOT IN (SELECT doc_id FROM hits)
 """
-
-
-_INCREMENTAL_DEDUP_SQL = _incremental_dedup_oracle()
 
 
 def oracle_sql() -> dict[str, str]:
@@ -7444,7 +7422,8 @@ WHERE o.o_orderkey IS NULL OR n.o_orderkey IS NULL
    OR (o.o_orderstatus, o.price_c, o.ts) IS DISTINCT FROM
       (n.o_orderstatus, n.price_c, n.ts)
 """,
-        "minhash_jaccard_pairs": _MINHASH_PAIRS_SQL,
+        "minhash_jaccard_pairs": _minhash_pairs_sql(0.5),
+        "minhash_pairs": _minhash_pairs_sql(0.4),
         "cohort_retention": """
 WITH cohort AS (
   SELECT user_id, date_trunc('week', min(ts)) AS cw

@@ -44,7 +44,7 @@ def build_training_corpus(
         pack_documents,
         train_test_split,
     )
-    from flyq_spark.operators.dedup import dedup_exact_rows, minhash_lsh_pairs
+    from flyq_spark.operators.dedup import dedup_exact_rows, minhash_band_pairs
     from flyq_spark.operators.graph import dedup_components_keep_min
     from flyq_spark.operators.text import quality_filter, redact_pii
 
@@ -67,8 +67,8 @@ def build_training_corpus(
         kept.drop("text"), "doc_id"
     ).withColumnRenamed("clean_text", "text").drop("n_removed_tokens")
     exact = dedup_exact_rows(excised, text_col="text", id_col="doc_id")
-    pairs = minhash_lsh_pairs(
-        exact, text_col="text", id_col="doc_id", jaccard_threshold=jaccard_threshold
+    pairs = minhash_band_pairs(
+        exact, min_jaccard=jaccard_threshold, text_col="text", id_col="doc_id"
     )
     survivors = dedup_components_keep_min(pairs)
     deduped = exact.join(

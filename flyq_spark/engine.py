@@ -866,17 +866,29 @@ class FlyQEngine:
     def mirror_topic(self, src: "FlyQEngine", topic: str) -> dict:
         """Replicate a topic from another engine PRESERVING partitions
         and offsets — the MirrorMaker capability (a consumer on the
-        mirror resumes at the same committed offsets). One distributed
-        read → partitioned write of the source log (no re-routing, no
-        offset re-assignment: the columns ARE the layout), then the
-        standard crash-recovery path (``repair_topic``) rebuilds
-        LEO/low from the copied footers — replication reuses recovery
-        instead of a second metadata protocol. Returns the rebuilt
-        meta. Idempotence: mirror into a fresh topic (re-mirroring
-        appends duplicate files)."""
+        mirror resumes at the same committed offsets). The source meta
+        is read once; one distributed read copies each partition's
+        committed ``[low, LEO)`` range in a partitioned write (no
+        re-routing, no offset re-assignment: the columns ARE the
+        layout), so a crashed produce's leftovers at the source are
+        never copied. The destination meta is then that source meta
+        (partitions, LEOs, lows, round-robin cursor, config), which
+        also keeps the watermark triple of a partition whose files
+        were all truncated. Returns the written meta. Idempotence:
+        mirror into a fresh topic (re-mirroring appends duplicate
+        files)."""
         src_meta = src._meta(topic)
+        n = int(src_meta["partitions"])
         if not self.topic_exists(topic):
-            self.create_topic(topic, partitions=int(src_meta["partitions"]))
+            self.create_topic(topic, partitions=n)
+        committed = F.lit(False)
+        for p in range(n):
+            low, _, leo = self._watermark_from_meta(src_meta, p)
+            committed = committed | (
+                (F.col("partition") == p)
+                & (F.col("offset") >= low)
+                & (F.col("offset") < leo)
+            )
         # same defensive conf produce() sets: an INT96 mirror write
         # would erase footer timestamp stats and kill time retention
         self.spark.conf.set(
@@ -885,8 +897,9 @@ class FlyQEngine:
         try:
             (
                 src.log(topic)
+                .where(committed)
                 .select([f.name for f in LOG_SCHEMA.fields])
-                .repartition(max(1, min(int(src_meta["partitions"]), 32)), "partition")
+                .repartition(max(1, min(n, 32)), "partition")
                 .sortWithinPartitions("partition", "offset")
                 .write.mode("append")
                 .option("maxRecordsPerFile", str(self.config.max_records_per_file))
@@ -895,26 +908,14 @@ class FlyQEngine:
             )
         finally:
             storage.invalidate_index(self.base_dir, topic)
-        meta = self.repair_topic(topic)
-        # footers alone cannot rebuild everything: per-topic config
-        # overrides, the round-robin cursor, and the LEO/low of a
-        # partition whose files were fully truncated at the source
-        # (zero files but a live watermark triple consumers depend on).
-        # Merge those from the SOURCE meta — offsets-preserved means the
-        # whole triple, not just what the copied data implies.
+        meta = {
+            "partitions": n,
+            "log_end_offsets": dict(src_meta["log_end_offsets"]),
+            "low_watermarks": dict(src_meta["low_watermarks"]),
+            "rr_cursor": int(src_meta.get("rr_cursor", 0)),
+        }
         if src_meta.get("config"):
             meta["config"] = dict(src_meta["config"])
-        meta["rr_cursor"] = int(src_meta.get("rr_cursor", 0))
-        for p in range(int(src_meta["partitions"])):
-            key = str(p)
-            meta["log_end_offsets"][key] = max(
-                int(meta["log_end_offsets"].get(key, 0)),
-                int(src_meta["log_end_offsets"].get(key, 0)),
-            )
-            meta["low_watermarks"][key] = max(
-                int(meta["low_watermarks"].get(key, 0)),
-                int(src_meta["low_watermarks"].get(key, 0)),
-            )
         storage.save_topic_meta(self.base_dir, topic, meta)
         return meta
 
@@ -1117,12 +1118,12 @@ class FlyQEngine:
         recorded count (partial create). Returns the repaired meta.
 
         Files past the recorded LEO are rolled FORWARD here: their
-        offsets become committed and readable (``mirror_topic`` relies
-        on this). ``produce`` rolls the same files BACK instead
-        (``_rollback_uncommitted``). So the leftovers of a produce that
-        crashed before its meta commit are kept if ``repair_topic``
-        runs first and deleted if the next ``produce`` runs first;
-        either way the log stays dense with no duplicate offsets.
+        offsets become committed and readable. ``produce`` rolls the
+        same files BACK instead (``_rollback_uncommitted``). So the
+        leftovers of a produce that crashed before its meta commit are
+        kept if ``repair_topic`` runs first and deleted if the next
+        ``produce`` runs first; either way the log stays dense with no
+        duplicate offsets.
 
         Recovery trusts the disk: every partition's segment index is
         rebuilt from a fresh directory scan."""

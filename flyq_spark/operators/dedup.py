@@ -5,9 +5,10 @@ LLM-pipeline extensions, designed shuffle-conscious for 100 TB:
 
 - exact dedup: one hash-groupBy on a fingerprint (never on the full text —
   group keys should be 16 B, not 1 MB documents);
-- MinHash-LSH near-dup: pyspark.ml MinHashLSH with banding via
-  approxSimilarityJoin — candidate generation is a bucket join, never the
-  O(n^2) all-pairs cross join;
+- MinHash-LSH near-dup: Broder's md5 permutation family
+  (``minhash_signatures``), banded into md5 band keys and joined on
+  them (``minhash_band_pairs``) — candidate generation is a bucket join,
+  never the O(n^2) all-pairs cross join, and every stage replays in SQL;
 - SimHash: 63-bit signature built JVM-side (explode + 63 codegen'd sums),
   near-dups via ``banded_hamming_pairs`` — the one banded self-join +
   popcount(xor) Hamming filter, shared with the pHash media path;
@@ -15,8 +16,7 @@ LLM-pipeline extensions, designed shuffle-conscious for 100 TB:
   prefix filtering (AllPairs/PPJoin) — 100% recall with skew-bounded
   candidate generation, never an all-pairs cross join.
 
-All randomness is seeded; all hot paths are built-in functions (the only
-ml dependency is MinHashLSH, which is Scala-side).
+All randomness is seeded; all hot paths are built-in functions.
 """
 
 from __future__ import annotations
@@ -63,65 +63,6 @@ def dedup_exact_rows(
     survivors = dedup_exact(df, text_col, id_col)
     # null-keys-impossible: id_col is the row identity (caller contract)
     return df.join(survivors, on=id_col, how="left_semi")
-
-
-# --------------------------------------------------------------------- #
-# MinHash-LSH near-dup (pyspark.ml)
-# --------------------------------------------------------------------- #
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    num_features: int = 1 << 18,
-    # 6 tables ~ the precision/recall knee at threshold 0.4-0.5 on the
-    # fixture corpus (identical pair set to 8 tables at half the cost);
-    # raise for lower thresholds.
-    num_hash_tables: int = 6,
-    jaccard_threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-duplicate pairs via shingle → HashingTF → MinHashLSH.
-
-    ``approxSimilarityJoin`` generates candidates by joining on LSH band
-    buckets (shuffle keyed by bucket), then filters by exact distance —
-    the scale path: candidate count is data-dependent, never n^2. Output:
-    (id_a, id_b, jaccard_dist) with id_a < id_b.
-
-    The shingle→TF feature pipeline is the CPU-heavy narrow stage:
-    ``fan_out`` spreads it across cores (no-op on already-parallel
-    inputs) and the prepared features are persisted so the self-join's
-    two sides share one computation instead of shingling the corpus
-    twice — the standard shape for any self-similarity join.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH, NGram, RegexTokenizer
-
-    tok = RegexTokenizer(inputCol=text_col, outputCol="_tokens", pattern="\\s+")
-    ng = NGram(n=shingle_n, inputCol="_tokens", outputCol="_shingles")
-    tf = HashingTF(
-        inputCol="_shingles", outputCol="_features", numFeatures=num_features, binary=True
-    )
-    prepared = tf.transform(ng.transform(tok.transform(fan_out(df))))
-    # MinHashLSH requires at least one non-zero feature
-    prepared = prepared.where(F.size("_shingles") > 0).select(id_col, "_features")
-    prepared = prepared.persist()
-    mh = MinHashLSH(
-        inputCol="_features", outputCol="_hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = mh.fit(prepared)
-    joined = model.approxSimilarityJoin(
-        prepared, prepared, 1.0 - jaccard_threshold, distCol="jaccard_dist"
-    )
-    return (
-        joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.col("jaccard_dist"),
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-    )
 
 
 # --------------------------------------------------------------------- #
@@ -579,6 +520,41 @@ def minhash_params(k: int, seed: int = 1) -> list[tuple[int, int]]:
     return out
 
 
+def _shingle_sets(
+    df: DataFrame, shingle_n: int, id_col: str, text_col: str
+) -> DataFrame:
+    """(id, _grams) for every document with at least one shingle: the
+    input of both the signatures and the exact-Jaccard verify."""
+    return (
+        fan_out(df)
+        .select(F.col(id_col), shingle_set(F.col(text_col), shingle_n).alias("_grams"))
+        .where(F.size("_grams") > 0)
+    )
+
+
+def _signatures(grams: DataFrame, k: int, id_col: str) -> DataFrame:
+    """(id, minhash) from ``_shingle_sets`` rows — the one Spark form of
+    the md5 permutation family (see ``minhash_signatures``)."""
+    h32 = F.conv(F.substring(F.md5(F.col("_g")), 1, 8), 16, 10).cast("long")
+    hashed = grams.select(F.col(id_col), F.explode("_grams").alias("_g")).select(
+        F.col(id_col), h32.alias("_h")
+    )
+    mins = [
+        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
+            f"_m{i}"
+        )
+        for i, (a, b) in enumerate(minhash_params(k))
+    ]
+    return (
+        hashed.groupBy(id_col)
+        .agg(*mins)
+        .select(
+            F.col(id_col),
+            F.array(*[F.col(f"_m{i}") for i in range(k)]).alias("minhash"),
+        )
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     k: int = 32,
@@ -593,36 +569,17 @@ def minhash_signatures(
     LCG-derived (a_i, b_i) and p = 4294967311 (the classic Broder
     construction).
 
-    Unlike the pyspark.ml MinHashLSH variant (whose hash family lives
-    in Scala), every component is a deterministic SQL expression — the
-    exact signature replays on any engine with md5 + 64-bit integers,
-    which is what makes this family ORACLE-CHECKABLE end to end. ONE
-    md5 per shingle; the k permutations are integer multiply-add-mod
+    Every component is a deterministic SQL expression — the exact
+    signature replays on any engine with md5 + 64-bit integers, which
+    is what makes this family ORACLE-CHECKABLE end to end. ONE md5 per
+    shingle; the k permutations are integer multiply-add-mod
     (codegen'd), so k scales arithmetic width, not hashing cost.
 
     Plan: one narrow shingle explode, then ONE groupBy(id) computing
     all k mins with map-side partial aggregation — never more than one
     shuffle row per (doc, shingle). Documents with no shingles emit no
     row. Output: (id, minhash array<long> of length k)."""
-    grams = fan_out(df).select(
-        F.col(id_col), F.explode(shingle_set(F.col(text_col), shingle_n)).alias("_g")
-    )
-    h32 = F.conv(F.substring(F.md5(F.col("_g")), 1, 8), 16, 10).cast("long")
-    grams = grams.select(F.col(id_col), h32.alias("_h"))
-    mins = [
-        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
-            f"_m{i}"
-        )
-        for i, (a, b) in enumerate(minhash_params(k))
-    ]
-    return (
-        grams.groupBy(id_col)
-        .agg(*mins)
-        .select(
-            F.col(id_col),
-            F.array(*[F.col(f"_m{i}") for i in range(k)]).alias("minhash"),
-        )
-    )
+    return _signatures(_shingle_sets(df, shingle_n, id_col, text_col), k, id_col)
 
 
 def minhash_band_pairs(
@@ -635,8 +592,7 @@ def minhash_band_pairs(
     text_col: str = "text",
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pairs with the md5 permutation
-    family — the fully deterministic, oracle-replayable counterpart of
-    ``minhash_lsh_pairs``.
+    family — fully deterministic and oracle-replayable.
 
     Banding: the k-component signature splits into ``bands`` bands of
     r = k/bands rows; a pair is a candidate iff some band's r
@@ -648,41 +604,23 @@ def minhash_band_pairs(
     1 - (1 - s^r)^bands.
 
     Verify: exact shingle-set Jaccard (array_intersect arithmetic) on a
-    join back to the persisted gram sets; output only pairs with
-    J >= min_jaccard. Recall below the LSH knee is probabilistic BY
-    DESIGN, but it is the SAME deterministic pair set on every engine —
-    both candidate generation and verify replay in ANSI SQL.
+    join back to the gram sets; output only pairs with J >= min_jaccard.
+    Recall below the LSH knee is probabilistic BY DESIGN, but it is the
+    SAME deterministic pair set on every engine — both candidate
+    generation and verify replay in ANSI SQL. Nothing is cached: the
+    signatures and both verify sides re-derive the narrow gram
+    projection, so a call leaves no storage pinned.
 
     Output: (id_a, id_b, jaccard) with id_a < id_b."""
     if k % bands:
         raise ValueError(f"k={k} not divisible by bands={bands}")
-    r = k // bands
-    base = (
-        fan_out(df)
-        .select(F.col(id_col), shingle_set(F.col(text_col), shingle_n).alias("_grams"))
-        .where(F.size("_grams") > 0)
-        .persist()  # three consumers: signatures + both verify sides
-    )
-    grams = base.select(id_col, F.explode("_grams").alias("_g"))
-    h32 = F.conv(F.substring(F.md5(F.col("_g")), 1, 8), 16, 10).cast("long")
-    hashed = grams.select(F.col(id_col), h32.alias("_h"))
-    mins = [
-        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
-            f"_m{i}"
-        )
-        for i, (a, b) in enumerate(minhash_params(k))
-    ]
-    sigs = hashed.groupBy(id_col).agg(*mins)
+    base = _shingle_sets(df, shingle_n, id_col, text_col)
     # ONE banding implementation repo-wide: the same minhash_band_keys
     # the streaming sink and dedup_against use (and the oracle replays)
     # — a divergence between two copies would silently break
     # cross-operator and oracle agreement
-    sig_arr = sigs.select(
-        F.col(id_col),
-        F.array(*[F.col(f"_m{i}") for i in range(k)]).alias("minhash"),
-    )
     banded = minhash_band_keys(
-        sig_arr, k=k, bands=bands, id_col=id_col
+        _signatures(base, k, id_col), k=k, bands=bands, id_col=id_col
     ).withColumnRenamed("band_key", "bits")
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -1429,7 +1367,7 @@ def cosine_pairs(
                         "corpus has too little term rarity for the L2 "
                         "prefix filter (every term near-stopword). Use "
                         "ngram>=2, or the MinHash-LSH path "
-                        "(minhash_neardup_pairs) which bounds candidates "
+                        "(minhash_band_pairs) which bounds candidates "
                         "by banding, or raise max_candidates explicitly.",
                         F.col("_cand_bound").cast("string"),
                     )

@@ -216,51 +216,6 @@ def threshold_match_counts(
     return partials.groupBy("query_id").agg(*aggs)
 
 
-def neardup_pairs(
-    embeddings: DataFrame,
-    min_cosine: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding near-duplicate pairs: LSH-bucketed candidates + exact
-    cosine verify. Output (id_a, id_b, score). Pass ``dim`` to skip the
-    driver-side dimension sniff (done on the RAW frame — sniffing after
-    fan_out would execute the corpus-wide repartition just to read one
-    row). Norms are computed once per ROW before the self-join: a
-    vector in a hot bucket would otherwise pay its O(d) norm aggregate
-    once per candidate PAIR."""
-    if dim is None:
-        d_row = embeddings.select(F.size(vec_col).alias("d")).first()
-        dim = int(d_row["d"]) if d_row else 0
-    sigs = with_lsh_signature(
-        fan_out(embeddings), vec_col=vec_col, n_planes=n_planes, seed=seed, dim=dim
-    ).withColumn("_norm", F.greatest(norm(F.col(vec_col)), F.lit(1e-12)))
-    a, b = sigs.alias("a"), sigs.alias("b")
-    score = dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")) / (
-        F.col("a._norm") * F.col("b._norm")
-    )
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a._sig") == F.col("b._sig"),
-                # null-keys-impossible: row-identity contract; a NULL
-                # id cannot satisfy the < pair order
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            score.alias("score"),
-        )
-        .where(F.col("score") >= min_cosine)
-    )
-
-
 def _deterministic_pivots(
     df: DataFrame, n_pivots: int, id_col: str, out_cols: tuple[str, str]
 ) -> DataFrame:

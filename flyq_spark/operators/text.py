@@ -505,7 +505,7 @@ def hashing_trick_vectors(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Feature-hashing featurizer (the HashingTF / Vowpal-Wabbit trick,
+    """Feature-hashing featurizer (the Vowpal-Wabbit hashing trick,
     SQL-replayable): each document becomes a dense ``dim``-bucket token
     COUNT vector, bucket = first-8-md5-hex-digits(token) mod dim — the
     bridge from the text stack to the embedding/ANN stack when no

@@ -708,7 +708,7 @@ def heavy_hitter_sink(
             ready,
             compact_every,
             lambda paths: _hh_state(
-                spark, item_type, *_fold_hh_state(spark, paths, k)
+                spark, item_type, *_fold_hh_state(_read_hh_states(paths), k)
             ),
         )
 
@@ -723,14 +723,23 @@ def _hh_state(spark, item_type: str, counter: dict, total: int) -> DataFrame:
     ).coalesce(1)
 
 
-def _fold_hh_state(spark, paths: list[str], k: int) -> tuple[dict, int]:
+def _read_hh_states(paths: list[str]) -> list:
+    """The heavy-hitter state tables in batch order, read with pyarrow
+    on the driver (view-store paths are driver-local): a fold is a few
+    k-row tables, not worth a Spark job per path."""
+    import pyarrow.parquet as pq
+
+    return [pq.read_table(p, columns=["item", "cnt", "total"]) for p in paths]
+
+
+def _fold_hh_state(tables: list, k: int) -> tuple[dict, int]:
     from flyq_spark.operators.sketch import mg_merge
 
     state: dict = {}
     total = 0
-    for p in paths:
+    for table in tables:
         counter = {}
-        for r in spark.read.parquet(p).collect():
+        for r in table.to_pylist():
             if r["total"] is not None:
                 total += r["total"]
             else:
@@ -742,12 +751,15 @@ def _fold_hh_state(spark, paths: list[str], k: int) -> tuple[dict, int]:
 def read_heavy_hitter_view(spark, view_path: str, k: int) -> DataFrame:
     """Current bounded-state frequency view as (item, count_lb, total):
     newest ready base + uncompacted deltas folded in strict batch_id
-    order. The item column keeps the type the sink wrote."""
-    paths = _ViewStore(view_path, "read_heavy_hitter_view").snapshot()
-    item_type = (
-        spark.read.parquet(paths[0]).schema["item"].dataType.simpleString()
+    order on the driver — no Spark job. The item column keeps the type
+    the sink wrote."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    tables = _read_hh_states(
+        _ViewStore(view_path, "read_heavy_hitter_view").snapshot()
     )
-    state, total = _fold_hh_state(spark, paths, k)
+    item_type = from_arrow_type(tables[0].schema.field("item").type).simpleString()
+    state, total = _fold_hh_state(tables, k)
     rows = [(item, int(cnt), int(total)) for item, cnt in state.items()]
     return spark.createDataFrame(
         rows, schema=f"item {item_type}, count_lb long, total long"

@@ -254,6 +254,36 @@ def test_uncommitted_append_is_invisible_and_rolled_back(engine, spark, monkeypa
     assert engine.consume("t", 0, 3)["timestamp"] == engine.consume("t", 0, 0)["timestamp"]
 
 
+def test_mirror_copies_only_committed_records(engine, spark, tmp_path, monkeypatch):
+    """A crashed produce's leftover file past the source LEO is never
+    mirrored: the mirror keeps the source's watermark triple and serves
+    only the acked records."""
+    from flyq_spark import storage
+    from flyq_spark.engine import FlyQEngine
+
+    engine.create_topic("m", partitions=1)
+    engine.produce("m", make_messages(5))
+    real = storage.save_topic_meta
+
+    def fail(*args):
+        raise OSError("injected meta commit failure")
+
+    monkeypatch.setattr(storage, "save_topic_meta", fail)
+    with pytest.raises(OSError, match="injected"):
+        engine.produce("m", make_messages(2, ts0=1_800_000_000_000))
+    monkeypatch.setattr(storage, "save_topic_meta", real)
+    leftover = storage.partition_file_stats(engine.base_dir, "m", 0)[-1]
+    assert (leftover.min_offset, leftover.max_offset) == (5, 6)
+    assert engine.get_watermark("m", 0) == (0, 4, 5)
+
+    mirror = FlyQEngine(spark, str(tmp_path / "mirror"))
+    meta = mirror.mirror_topic(engine, "m")
+    assert meta["log_end_offsets"] == {"0": 5}
+    assert mirror.get_watermark("m", 0) == (0, 4, 5)
+    assert sorted(r["offset"] for r in mirror.log("m").collect()) == [0, 1, 2, 3, 4]
+    assert mirror.consume("m", 0, 5) is None
+
+
 def _uncached_stats(base_dir, topic, partition):
     from flyq_spark import storage
 

@@ -24,7 +24,6 @@ def test_queries_and_oracles_consistent():
         # reference-pinned on both its driver and ladder paths in pytest
         "bpe_merges_exact",
         "bpe_encode_stats",
-        "minhash_pairs",
         "simhash_neardup",
         "ann_lsh_topk",
         "ann_ivf_topk",

@@ -793,16 +793,33 @@ def test_banded_hamming_pairs_equals_brute_force(spark, bits, bands):
 
 
 def test_minhash_pairs_have_high_true_jaccard(spark, docs):
-    """Every LSH-candidate pair the MinHash join emits must be a true
-    near-dup under exact token-shingle Jaccard (no false 'survivors')."""
-    from flyq_spark.operators.dedup import minhash_lsh_pairs
+    """Every pair the MinHash band join emits at the `minhash_pairs`
+    gate's threshold is a true near-dup under exact shingle Jaccard (no
+    false 'survivors'), and the pair set is deterministic."""
+    from flyq_spark.operators.dedup import minhash_band_pairs
 
-    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.4)
-    rows = pairs.collect()
-    assert all(r["jaccard_dist"] <= 0.6 for r in rows)
-    # determinism (seeded): same pair set on a second run
-    again = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs, jaccard_threshold=0.4).collect()}
+    rows = minhash_band_pairs(docs, min_jaccard=0.4).collect()
+    assert rows and all(0.4 <= r["jaccard"] <= 1.0 for r in rows)
+    assert all(r["id_a"] < r["id_b"] for r in rows)
+    again = {(r["id_a"], r["id_b"]) for r in minhash_band_pairs(docs, min_jaccard=0.4).collect()}
     assert {(r["id_a"], r["id_b"]) for r in rows} == again
+
+
+def test_minhash_band_pairs_and_sweep_leave_no_cache(spark):
+    """Neither the band join nor the LSH sweep built on it leaves a
+    cached frame behind (the sweep releases its own sample caches)."""
+    from flyq_spark.operators.dedup import lsh_parameter_sweep, minhash_band_pairs
+
+    jsc = spark.sparkContext._jsc
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f"), (3, "a b c d e g"), (4, "x y z")],
+        "doc_id long, text string",
+    )
+    before = set(jsc.getPersistentRDDs().keys())
+    assert minhash_band_pairs(docs, min_jaccard=0.5).count() >= 1
+    assert set(jsc.getPersistentRDDs().keys()) == before
+    lsh_parameter_sweep(docs, configs=((8, 4),), sample_size=4).collect()
+    assert set(jsc.getPersistentRDDs().keys()) == before
 
 
 def test_ngram_jaccard_bounds(spark, docs):
@@ -917,27 +934,6 @@ def test_lsh_topk_is_subset_of_bucketmates_with_exact_scores(spark, emb):
         assert abs(truth[(r["query_id"], r["neighbor_id"])] - r["score"]) < 1e-9
     self_hits = {r["query_id"] for r in ann if r["neighbor_id"] == r["query_id"]}
     assert self_hits == {r["query_id"] for r in queries.collect()}
-
-
-def test_lsh_neardup_subset_of_bruteforce(spark, emb):
-    from flyq_spark.operators.similarity import cosine, neardup_pairs
-
-    small = emb.limit(120)
-    lsh_pairs = {(r["id_a"], r["id_b"]) for r in neardup_pairs(small, 0.2, n_planes=3).collect()}
-    a, b = small.alias("a"), small.alias("b")
-    brute = {
-        (r["id_a"], r["id_b"])
-        for r in a.crossJoin(b)
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            cosine(F.col("a.embedding"), F.col("b.embedding")).alias("s"),
-        )
-        .where(F.col("s") >= 0.2)
-        .collect()
-    }
-    assert lsh_pairs <= brute
 
 
 def test_neardup_exact_equals_bruteforce(spark, emb):

@@ -1089,6 +1089,29 @@ def test_heavy_hitter_sink_stale_replayed_delta_ignored(spark, tmp_path):
     assert after == before
 
 
+def test_heavy_hitter_view_read_runs_no_spark_job(spark, tmp_path):
+    """Reading the heavy-hitter view folds its base and deltas on the
+    driver: no Spark job runs until the result frame is used."""
+    from flyq_spark.streaming.sink import (
+        heavy_hitter_sink,
+        read_heavy_hitter_view,
+    )
+
+    root = str(tmp_path / "hh3")
+    sink = heavy_hitter_sink(root, "item", k=4, compact_every=3)
+    for bid in range(5):  # base_upto_2 + deltas 3 and 4: three live paths
+        sink(spark.createDataFrame([("a",), (f"x{bid}",)], "item string"), bid)
+    sc = spark.sparkContext
+    sc.setJobGroup("hh_view_read", "heavy-hitter view read")
+    try:
+        view = read_heavy_hitter_view(spark, root, 4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("hh_view_read")) == []
+    rows = view.collect()
+    assert {r["total"] for r in rows} == {10} and "a" in {r["item"] for r in rows}
+
+
 def _view_sink_specs():
     """The five compacting view sinks, each as (build, four batches,
     snapshot). ``build(path, compact_every)`` makes the sink,
