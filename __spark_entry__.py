@@ -5421,32 +5421,31 @@ def entry(spark: SparkSession) -> DataFrame:
 # prior round's record. Every entry still runs in the full local sweep
 # (tools/verify_local.py) regardless of position.
 _DRIVER_WINDOW = [
-    # This rotation brings in (g) the four MinHash gates, now all on
-    # the one md5-family stack and its one SQL generator; none has been
-    # driver-checked in r12 or r13, and minhash_pairs is newly
-    # oracle-checked. Each is green in tools/verify_local.py with and
-    # without --pandas. Four rows green in CORRECTNESS_r13 whose
-    # builders and operator modules (cdc, joinaudit, sketch, skew) have
-    # not changed since retire to make room: feature_time_travel,
-    # join_size_est, kmv_overlap, skew_salted_event_stats. The rest is
-    # the earlier window: (a) entries last checked in r07, (b) the r12
-    # gates, (c) value_outliers, whose oracle changed in r12, (d) the
-    # three BPE gates on the one size-adaptive trainer, (e) the SimHash
+    # This rotation brings in (h) the two erasure gates, whose commit
+    # now runs through storage.replace_dir; neither has been
+    # driver-checked in r12 or r13. Both are green in
+    # tools/verify_local.py with and without --pandas. Two rows green
+    # in CORRECTNESS_r13 whose builders, oracles and operator modules
+    # (corpus, profile) have not changed since retire to make room:
+    # k_anonymity, train_test_split. The rest is the earlier window:
+    # (a) entries last checked in r07, (b) the r12 gates,
+    # (c) value_outliers, whose oracle changed in r12, (d) the three
+    # BPE gates on the one size-adaptive trainer, (e) the SimHash
     # near-dup joins on the shared banded-Hamming primitive, (f) the
-    # LM-eval and chat-format family, never driver-checked before.
+    # LM-eval and chat-format family, never driver-checked before,
+    # (g) the four MinHash gates on the one md5-family stack.
     #
-    # -- (a) last checked r07 (23) --
+    # -- (a) last checked r07 (21) --
     "attribution_multi_touch", "bloom_semi_prune",
     "boilerplate_removal", "cosine_pairs", "dataset_digest",
     "digest_repair", "entity_resolution",
     "exact_global_quantiles", "file_pruning",
     "fuzzy_title_pairs", "join_preflight",
-    "k_anonymity", "lang_heavy_hitters",
+    "lang_heavy_hitters",
     "multi_signal_components", "multimodal_features",
     "neardup_blast_radius", "negative_samples",
     "pack_documents", "paragraph_dedup", "phash_neardup", "phrase_search",
     "repetition_signals",
-    "train_test_split",
     # -- (b) r12 gates (11) --
     "pack_shards", "contamination_units", "contamination_normalized",
     "release_audit", "epoch_schedule", "manual_mixture", "pack_offsets",
@@ -5463,6 +5462,8 @@ _DRIVER_WINDOW = [
     # -- (g) one MinHash stack (4) --
     "minhash_pairs", "minhash_jaccard_pairs", "minhash_sig",
     "incremental_dedup",
+    # -- (h) one directory swap (2) --
+    "erase_execute", "erase_subject_loop",
 ]
 
 

@@ -48,6 +48,12 @@ and health read the committed snapshot, by this ordering:
 - a file deleted under a reader (retention, compaction) raises
   ``FileNotFoundError``, which a point read answers with one rescan.
 
+Compaction and keyed erasure replace a partition directory whole: the
+rewrite is staged in a dot-prefixed directory and swapped in by
+``storage.replace_dir``, whose crash rule ``storage`` states.
+``repair_topic``, every compaction and every ``erase_subject`` first
+resolve a swap a crash interrupted (``storage.restore_dir``).
+
 ``commit_offset`` serializes itself and not with the writer: an
 engine-owned lock spans its in-memory upsert and the offsets file
 write and fsync, so concurrent commits (wire connections, a streaming
@@ -83,7 +89,7 @@ import re
 import shutil
 import threading
 from datetime import datetime, timezone
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
 import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
@@ -425,16 +431,6 @@ class FlyQEngine:
         """Route, offset and append a DataFrame batch with Spark.
         Returns (rows per partition, keyless row count or None when the
         caller supplied ``seq``)."""
-        # INT96 timestamps (Spark's default parquet output) carry no usable
-        # footer min/max stats; retention (quirk Q5) reads them. Harmless
-        # no-op when the session factory already set it.
-        try:
-            self.spark.conf.set(
-                "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-            )
-        except Exception:
-            pass
-
         for field in ("key", "headers"):
             if field not in df.columns:
                 df = df.withColumn(field, F.lit(None).cast(MESSAGE_SCHEMA[field].dataType))
@@ -449,21 +445,6 @@ class FlyQEngine:
 
         routed = route(df, n, method=method, rr_cursor=rr_cursor)
         assigned = assign_offsets(routed, prev_leo)
-
-        def _write(frame) -> None:
-            try:
-                (
-                    frame.select([f.name for f in LOG_SCHEMA.fields])
-                    .repartition(max(1, min(n, 32)), "partition")
-                    .sortWithinPartitions("partition", "offset")
-                    .write.mode("append")
-                    .option("maxRecordsPerFile", str(self.config.max_records_per_file))
-                    .partitionBy("partition")
-                    .parquet(storage.topic_dir(self.base_dir, topic))
-                )
-            finally:
-                storage.invalidate_index(self.base_dir, topic)
-
         if n <= 64:
             # single pass: per-partition counts ride along with the write
             # action via the Observation API — no separate count job, no
@@ -478,7 +459,7 @@ class FlyQEngine:
                     for p in range(n)
                 ],
             )
-            _write(observed)
+            self._append_frame(topic, observed, n)
             got = obs.get
             counts = {
                 p: int(got[f"p{p}"] or 0) for p in range(n) if int(got[f"p{p}"] or 0) > 0
@@ -492,10 +473,30 @@ class FlyQEngine:
                     .agg(F.count("*").alias("cnt"))
                     .collect()
                 }
-                _write(assigned)
+                self._append_frame(topic, assigned, n)
             finally:
                 assigned.unpersist()
         return counts, n_keyless
+
+    def _append_frame(self, topic: str, frame: DataFrame, n: int) -> None:
+        """Append ``frame``'s log rows to the topic's partition
+        directories with Spark: one writer task per partition (at most
+        32), each file sorted by offset."""
+        # INT96 timestamps (Spark's default parquet output) carry no
+        # usable footer min/max stats; retention (quirk Q5) reads them.
+        self.spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        try:
+            (
+                frame.select([f.name for f in LOG_SCHEMA.fields])
+                .repartition(max(1, min(n, 32)), "partition")
+                .sortWithinPartitions("partition", "offset")
+                .write.mode("append")
+                .option("maxRecordsPerFile", str(self.config.max_records_per_file))
+                .partitionBy("partition")
+                .parquet(storage.topic_dir(self.base_dir, topic))
+            )
+        finally:
+            storage.invalidate_index(self.base_dir, topic)
 
     def _with_dense_seq(self, df: DataFrame) -> tuple[DataFrame, int, int]:
         """Stamp dense scan-order ``seq`` (0..m-1) and the keyless
@@ -889,25 +890,7 @@ class FlyQEngine:
                 & (F.col("offset") >= low)
                 & (F.col("offset") < leo)
             )
-        # same defensive conf produce() sets: an INT96 mirror write
-        # would erase footer timestamp stats and kill time retention
-        self.spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-        try:
-            (
-                src.log(topic)
-                .where(committed)
-                .select([f.name for f in LOG_SCHEMA.fields])
-                .repartition(max(1, min(n, 32)), "partition")
-                .sortWithinPartitions("partition", "offset")
-                .write.mode("append")
-                .option("maxRecordsPerFile", str(self.config.max_records_per_file))
-                .partitionBy("partition")
-                .parquet(storage.topic_dir(self.base_dir, topic))
-            )
-        finally:
-            storage.invalidate_index(self.base_dir, topic)
+        self._append_frame(topic, src.log(topic).where(committed), n)
         meta = {
             "partitions": n,
             "log_end_offsets": dict(src_meta["log_end_offsets"]),
@@ -1125,27 +1108,26 @@ class FlyQEngine:
         ``produce`` runs first; either way the log stays dense with no
         duplicate offsets.
 
-        Recovery trusts the disk: every partition's segment index is
-        rebuilt from a fresh directory scan."""
+        Recovery trusts the disk: every partition directory a crashed
+        rewrite left mid-swap is restored (``storage.restore_dir``),
+        every dot-prefixed staging directory is deleted, and every
+        partition's segment index is rebuilt from a fresh directory
+        scan."""
         meta = self._meta(topic)
         storage.invalidate_index(self.base_dir, topic)
         tdir = storage.topic_dir(self.base_dir, topic)
         n = int(meta["partitions"])
-        # a crash mid-compaction leaves .compact_old/.compact_tmp dirs;
-        # roll those back before trusting the footer scan
-        for name in os.listdir(tdir):
-            if name.startswith(".compact_old_p") or name.startswith(".compact_tmp_p"):
-                try:
-                    p = int(name.rsplit("_p", 1)[1])
-                except ValueError:
-                    continue
-                self._recover_compaction(topic, p)
         for name in os.listdir(tdir):
             if name.startswith("partition="):
                 try:
                     n = max(n, int(name.split("=", 1)[1]) + 1)
                 except ValueError:
                     pass
+        for p in range(n):
+            storage.restore_dir(storage.partition_dir(self.base_dir, topic, p))
+        for name in os.listdir(tdir):
+            if name.startswith(".") and os.path.isdir(os.path.join(tdir, name)):
+                shutil.rmtree(os.path.join(tdir, name))
         meta["partitions"] = n
         for p in range(n):
             stats = storage.partition_file_stats(self.base_dir, topic, p)
@@ -1167,44 +1149,6 @@ class FlyQEngine:
     # ------------------------------------------------------------------ #
     # maintenance: compaction (A5 analog)
     # ------------------------------------------------------------------ #
-
-    def _compact_paths(self, topic: str, partition: int) -> tuple[str, str, str]:
-        """(live, tmp, old) dirs for a compaction swap. tmp/old are
-        DOT-PREFIXED siblings inside the topic dir: Spark's file index
-        skips '.'/'_' names, so a concurrent log() read can never list
-        half a rewrite or parse them as a hive partition value."""
-        pdir = storage.partition_dir(self.base_dir, topic, partition)
-        tdir = storage.topic_dir(self.base_dir, topic)
-        tmp = os.path.join(tdir, f".compact_tmp_p{int(partition)}")
-        old = os.path.join(tdir, f".compact_old_p{int(partition)}")
-        return pdir, tmp, old
-
-    def _recover_compaction(self, topic: str, partition: int) -> None:
-        """Roll back a compaction interrupted mid-swap. The swap is
-        rename(live→old); rename(tmp→live); rmtree(old) — a crash
-        leaves at most: a stale tmp (before the swap: remove it), a
-        missing live dir with old present (between the renames: roll
-        OLD back — always safe, compaction is re-runnable), or a
-        leftover old after the swap (finish the cleanup). Called before
-        every compaction and from repair_topic."""
-        pdir, tmp, old = self._compact_paths(topic, partition)
-        if os.path.isdir(old):
-            if not os.path.isdir(pdir):
-                os.rename(old, pdir)
-                storage.invalidate_index(self.base_dir, topic, partition)
-            else:
-                shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    def _swap_compacted(self, topic: str, partition: int) -> None:
-        """Atomic-per-step directory swap installing a finished rewrite;
-        see _recover_compaction for the crash analysis."""
-        pdir, tmp, old = self._compact_paths(topic, partition)
-        os.rename(pdir, old)
-        os.rename(tmp, pdir)
-        storage.invalidate_index(self.base_dir, topic, partition)
-        shutil.rmtree(old, ignore_errors=True)
 
     def maintain_topic(
         self,
@@ -1231,58 +1175,13 @@ class FlyQEngine:
                 compacted[p] = self.compact_partition(topic, p)
         return {"deleted_files": deleted, "compacted_partitions": compacted}
 
-    def compact_partition_by_key(self, topic: str, partition: int) -> int:
-        """Kafka ``cleanup.policy=compact`` for one partition: rewrite
-        keeping only the LATEST record per key (null-key records are
-        never compacted away, matching Kafka). Reuses the dataflow
-        operator (operators/retention.py:compact_by_key — one window
-        shuffle, offsets preserved so consumers seek into the compacted
-        log unchanged) and the size-targeted parallel rewrite of
-        ``compact_partition``; low watermark and LEO are untouched
-        (compaction removes middles, not ends). Returns surviving row
-        count. Single-writer contract applies."""
-        from flyq_spark.operators.retention import compact_by_key
-
-        self._recover_compaction(topic, partition)
-        pdir, tmp, _old = self._compact_paths(topic, partition)
-        stats = storage.partition_file_stats(self.base_dir, topic, partition)
-        if not stats:
-            return 0
-        # same defensive conf produce() sets: an INT96 rewrite would
-        # erase footer timestamp stats and kill time retention (Q5)
-        self.spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-        # a partition-dir read has no hive `partition` column; pin it as
-        # a literal for the window key, drop it again before the write
-        df = self.spark.read.parquet(pdir).withColumn(
-            "partition", F.lit(int(partition))
-        )
-        compacted = (
-            compact_by_key(
-                df, part_col="partition", key_col="key", offset_col="offset"
-            )
-            .drop("partition")
-            .persist()
-        )
-        n_rows = compacted.count()
-        total_bytes = sum(s.size_bytes for s in stats)
-        n_out = max(1, -(-total_bytes // self.config.segment_max_bytes))
-        (
-            compacted.repartitionByRange(n_out, "offset")
-            .sortWithinPartitions("offset")
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", str(self.config.max_records_per_file))
-            .parquet(tmp)
-        )
-        compacted.unpersist()
-        self._swap_compacted(topic, partition)
-        return n_rows
-
-    def compact_partition(self, topic: str, partition: int) -> int:
-        """Rewrite a partition's files into size-targeted files — the
-        housekeeping analog of segment rotation (partition.rs:116-127).
-        Returns the resulting file count. Single-writer contract applies.
+    def _rewrite_partition(
+        self, topic: str, partition: int, transform: Callable[[DataFrame], DataFrame]
+    ) -> list[storage.FileStats]:
+        """Rewrite one partition's files through ``transform`` into
+        size-targeted files, staged and then swapped in whole
+        (``storage.replace_dir``). Returns the partition's new segment
+        index; an empty partition is left as it is.
 
         Parallel rewrite: the output task count is byte-targeted
         (total on-disk size / segment_max_bytes), and
@@ -1291,26 +1190,58 @@ class FlyQEngine:
         over-target partition compacts with N writers instead of the
         single coalesce(1) straggler a 100x partition would hit, while
         offset-ordered point/range reads still prune by footer stats."""
-        self._recover_compaction(topic, partition)
-        pdir, tmp, _old = self._compact_paths(topic, partition)
+        pdir = storage.partition_dir(self.base_dir, topic, partition)
+        storage.restore_dir(pdir)
         stats = storage.partition_file_stats(self.base_dir, topic, partition)
         if not stats:
-            return 0
-        self.spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
+            return []
+        # no INT96 timestamps, for the reason _append_frame gives
+        self.spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         total_bytes = sum(s.size_bytes for s in stats)
         n_out = max(1, -(-total_bytes // self.config.segment_max_bytes))
-        df = self.spark.read.parquet(pdir)
+        staged = storage.staging_dir(pdir)
         (
-            df.repartitionByRange(n_out, "offset")
+            transform(self.spark.read.parquet(pdir))
+            .repartitionByRange(n_out, "offset")
             .sortWithinPartitions("offset")
             .write.mode("overwrite")
             .option("maxRecordsPerFile", str(self.config.max_records_per_file))
-            .parquet(tmp)
+            .parquet(staged)
         )
-        self._swap_compacted(topic, partition)
-        return len(storage.partition_file_stats(self.base_dir, topic, partition))
+        storage.replace_dir(pdir, staged)
+        return storage.partition_file_stats(self.base_dir, topic, partition)
+
+    def compact_partition_by_key(self, topic: str, partition: int) -> int:
+        """Kafka ``cleanup.policy=compact`` for one partition: rewrite
+        keeping only the LATEST record per key (null-key records are
+        never compacted away, matching Kafka). Reuses the dataflow
+        operator (operators/retention.py:compact_by_key — one window
+        shuffle, offsets preserved so consumers seek into the compacted
+        log unchanged) and the size-targeted parallel rewrite
+        (``_rewrite_partition``); low watermark and LEO are untouched
+        (compaction removes middles, not ends). Returns surviving row
+        count, summed from the new files' footers. Single-writer
+        contract applies."""
+        from flyq_spark.operators.retention import compact_by_key
+
+        def latest_per_key(df: DataFrame) -> DataFrame:
+            # a partition-dir read has no hive `partition` column; pin it
+            # as a literal for the window key, drop it again before the write
+            return compact_by_key(
+                df.withColumn("partition", F.lit(int(partition))),
+                part_col="partition",
+                key_col="key",
+                offset_col="offset",
+            ).drop("partition")
+
+        files = self._rewrite_partition(topic, partition, latest_per_key)
+        return sum(s.num_rows for s in files)
+
+    def compact_partition(self, topic: str, partition: int) -> int:
+        """Rewrite a partition's files into size-targeted files — the
+        housekeeping analog of segment rotation (partition.rs:116-127).
+        Returns the resulting file count. Single-writer contract applies."""
+        return len(self._rewrite_partition(topic, partition, lambda df: df))
 
     def erase_subject(
         self, subject_keys: list[bytes], topics: list[str] | None = None
@@ -1381,6 +1312,11 @@ class FlyQEngine:
             }
             return subject_access_report(tables, keys_long, "k")
 
+        # a partition an interrupted erasure left mid-swap is invisible
+        # to the reads below: restore it before the first one
+        for t in names:
+            for p in range(self.topic_partitions(t)):
+                storage.restore_dir(storage.partition_dir(self.base_dir, t, p))
         before = report().collect()  # |topics| x |subjects| rows
         stats: dict[str, dict] = {}
         for t in names:
@@ -1394,18 +1330,15 @@ class FlyQEngine:
                 .distinct()
                 .collect()
             )
-            try:
-                stats[t] = erase_partition_keys(
-                    self.spark,
-                    storage.topic_dir(self.base_dir, t),
-                    "partition",
-                    flagged,
-                    kdf,
-                    "kb",
-                    "key",
-                )
-            finally:
-                storage.invalidate_index(self.base_dir, t)
+            stats[t] = erase_partition_keys(
+                self.spark,
+                storage.topic_dir(self.base_dir, t),
+                "partition",
+                flagged,
+                kdf,
+                "kb",
+                "key",
+            )
         before_df = self.spark.createDataFrame(
             before,
             "table_name string, subject_key long, n_rows long, "

@@ -495,39 +495,38 @@ def erase_partition_keys(
       (the anti-join then drops nothing) — sound, just suboptimal, and
       bounded by the index's false-positive rate.
     - A partition whose every row is erased stages NO output
-      directory; the swap pass removes the on-disk directory without a
-      replacement. That pass is driver-side but bounded by |flagged|
-      (the work list), never by table size.
+      directory; the swap removes the on-disk directory without a
+      replacement. The swap pass is driver-side but bounded by
+      |flagged| (the work list), never by table size.
     - The erase key set ships via broadcast anti-join: deletion
       requests are human-scale (thousands), never table-scale.
 
-    Commit protocol: surviving rows are written to a STAGING directory
-    first, then each flagged partition directory is swapped (delete
-    old, move staged in) — never read-and-overwrite the same path (a
-    failure mid-write must not lose un-erased rows), and a partition
-    whose staged output is empty (every row erased) is simply removed.
-    The swap pass is driver-side directory renames, bounded by
-    |flagged| — at real scale the same protocol runs against the
-    object store's rename/delete API. Staging is cleaned up ONLY on
-    the success path: if the swap loop fails midway (after a target
-    directory was removed but before its staged replacement moved in),
-    the staged rows are the only surviving copy, so the error message
-    carries the staging path for manual recovery instead of deleting
-    it.
+    Commit protocol: surviving rows are written to a staging directory
+    ``.erase_staging`` inside ``path`` (same filesystem, skipped by
+    Spark's listing), never read-and-overwrite the same path, and each
+    flagged partition is then swapped in by ``storage.replace_dir``.
+    Every flagged partition is first resolved with
+    ``storage.restore_dir``, so an erasure interrupted mid-swap is
+    rolled back or finished before its rows are read again (the crash
+    rule is in ``storage``); the erasure itself is re-runnable. The
+    path must be driver-local, as the swap is os-level renames.
 
     Returns {"files_rewritten", "partitions_deleted"} actually acted
     on. Callers verify the rewrite with ``dataset_digest`` pre/post —
     divergence must localize to the erased keys' digest buckets.
     """
     import shutil
-    import tempfile
+
+    from flyq_spark import storage
 
     if not flagged:
         return {"files_rewritten": 0, "partitions_deleted": 0}
-    flagged = list(flagged)
+    live = {v: os.path.join(path, f"{part_col}={v}") for v in flagged}
+    for d in live.values():
+        storage.restore_dir(d)
     kept = (
         spark.read.parquet(path)
-        .where(F.col(part_col).isin(flagged))
+        .where(F.col(part_col).isin(list(live)))
         # null-keys-impossible: deletion keys; a NULL subject key is
         # not requestable, and left_anti keeps unmatched (NULL) rows
         .join(
@@ -536,36 +535,15 @@ def erase_partition_keys(
             how="left_anti",
         )
     )
-    staging = tempfile.mkdtemp(prefix="flyq_erase_staging_")
-    try:
-        kept.write.mode("overwrite").partitionBy(part_col).parquet(staging)
-    except Exception:
-        # nothing on disk was touched yet — staging is disposable
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    rewritten = deleted = 0
-    try:
-        for v in flagged:
-            part_dir = f"{part_col}={v}"
-            src = os.path.join(staging, part_dir)
-            dst = os.path.join(path, part_dir)
-            shutil.rmtree(dst, ignore_errors=True)
-            if os.path.isdir(src):
-                shutil.move(src, dst)
-                rewritten += 1
-            else:
-                deleted += 1
-    except Exception as exc:
-        # a target partition may already be gone with its replacement
-        # still staged — staging now holds the only copy of those
-        # survivors; leave it for manual recovery
-        raise RuntimeError(
-            f"erase swap failed mid-loop; staged survivors preserved at "
-            f"{staging} — recover by moving its {part_col}=* dirs into "
-            f"{path}"
-        ) from exc
-    shutil.rmtree(staging, ignore_errors=True)
-    return {"files_rewritten": rewritten, "partitions_deleted": deleted}
+    staging = os.path.join(path, ".erase_staging")
+    kept.write.mode("overwrite").partitionBy(part_col).parquet(staging)
+    rewritten = 0
+    for v, d in live.items():
+        staged = os.path.join(staging, f"{part_col}={v}")
+        rewritten += os.path.isdir(staged)
+        storage.replace_dir(d, staged)
+    shutil.rmtree(staging)
+    return {"files_rewritten": rewritten, "partitions_deleted": len(live) - rewritten}
 
 
 def compaction_execute(spark: SparkSession, path: str, plan: DataFrame) -> dict:

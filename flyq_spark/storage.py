@@ -59,6 +59,24 @@ are immutable and uuid-named, so a path that exists always holds the
 rows it was written with. Readers take no lock and stay bounded at
 LEO and snapshot-consistent as of the index listing they read; writes
 hold one mutex.
+
+Directory swap: every rewrite that replaces a whole directory
+(compaction, keyed erasure, the upsert sink's snapshot) writes its
+output to a staged directory on the same filesystem and installs it
+with ``replace_dir``: rename ``live`` to its dot-prefixed sibling
+``.<name>.old``, rename ``staged`` to ``live``, delete ``old``. Each
+step is one rename or delete, so a crash leaves one of three states,
+which ``restore_dir`` resolves before the next read of ``live``:
+
+- ``live`` untouched, maybe a staged leftover: nothing to undo (the
+  next rewrite overwrites its staging, ``repair_topic`` deletes it);
+- ``old`` present, ``live`` missing (between the renames): ``old`` is
+  renamed back, so the rewrite is lost and the data is not;
+- both present (the swap finished, the delete did not): ``old`` is
+  deleted.
+
+Dot-prefixed names are skipped by Spark's file listing and by
+``partition_file_stats``, so no reader sees a staged or old directory.
 """
 
 from __future__ import annotations
@@ -67,6 +85,7 @@ import bisect
 import json
 import os
 import re
+import shutil
 import threading
 import uuid
 from dataclasses import dataclass
@@ -301,16 +320,19 @@ def _publish(pdir: str, seen: _Index | None, new: _Index | None) -> None:
                 _INDEX[pdir] = new
 
 
+def _forget_dir(pdir: str) -> None:
+    _forget_rows(prefix=pdir + os.sep)
+    _mark_stale(pdir)
+
+
 def invalidate_index(base_dir: str, topic: str, partition: int | None = None) -> None:
     """Mark the index of one partition, or of every partition of the
     topic, stale (the next ``partition_file_stats`` call rescans its
     directory) and drop the cached rows of its files. Every in-process
-    change to a partition directory other than ``append_log_files`` and
-    ``remove_log_files`` calls this."""
+    change to a partition directory other than ``append_log_files``,
+    ``remove_log_files`` and ``replace_dir`` calls this."""
     if partition is not None:
-        pdir = partition_dir(base_dir, topic, partition)
-        _forget_rows(prefix=pdir + os.sep)
-        _mark_stale(pdir)
+        _forget_dir(partition_dir(base_dir, topic, partition))
         return
     prefix = topic_dir(base_dir, topic) + os.sep
     _forget_rows(prefix=prefix)
@@ -334,6 +356,54 @@ def remove_log_files(paths: Iterable[str]) -> None:
             _forget_rows(removed)
         for pdir in {os.path.dirname(path) for path in removed}:
             _mark_stale(pdir)
+
+
+def _sibling(live: str, tag: str) -> str:
+    head, name = os.path.split(live.rstrip(os.sep))
+    return os.path.join(head, f".{name}.{tag}")
+
+
+def staging_dir(live: str) -> str:
+    """The dot-prefixed sibling a rewrite of ``live`` is staged in."""
+    return _sibling(live, "staged")
+
+
+def replace_dir(live: str, staged: str) -> None:
+    """Install the directory ``staged`` as ``live`` (module docstring,
+    directory swap). A missing ``staged`` means the rewrite left
+    nothing: ``live`` is removed. ``live``'s index is marked stale and
+    its cached rows dropped."""
+    old = _sibling(live, "old")
+    had_live = os.path.isdir(live)
+    emptied = not os.path.isdir(staged)
+    if emptied:
+        # swap in an empty directory, so a crash while deleting ``old``
+        # finds ``live`` present and rolls forward
+        os.makedirs(staged)
+    try:
+        if had_live:
+            os.rename(live, old)
+        os.rename(staged, live)
+    finally:
+        _forget_dir(live)
+    if had_live:
+        shutil.rmtree(old)
+    if emptied:
+        os.rmdir(live)
+
+
+def restore_dir(live: str) -> None:
+    """Resolve a ``replace_dir`` of ``live`` that a crash interrupted:
+    roll ``old`` back when ``live`` is missing, delete it when both
+    exist."""
+    old = _sibling(live, "old")
+    if not os.path.isdir(old):
+        return
+    if os.path.isdir(live):
+        shutil.rmtree(old)
+    else:
+        os.rename(old, live)
+        _forget_dir(live)
 
 
 def partition_file_stats(base_dir: str, topic: str, partition: int) -> list[FileStats]:

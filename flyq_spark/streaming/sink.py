@@ -8,8 +8,8 @@
   (at-least-once, the reference's delivery contract; the reference
   additionally loses up to 5 s of *commits* on crash,
   runtime/flush.rs:9-39, which we do not).
-- :func:`upsert_sink` keeps a latest-wins snapshot table by a
-  two-rename swap.
+- :func:`upsert_sink` keeps a latest-wins snapshot table, swapped in
+  whole each batch by ``storage.replace_dir``.
 - :func:`neardup_dedup_sink` / :func:`phash_dedup_sink` drop near-dups
   against ``batch_id``-partitioned band-key state.
 - Five compacting VIEW sinks keep their state in one view store
@@ -115,71 +115,46 @@ def upsert_sink(
 
     Each micro-batch: read the current snapshot (empty on first batch),
     apply the batch's upserts/deletes (latest-wins, idempotent — safe
-    under at-least-once redelivery), write to a tmp dir, swap. Each
-    rename is atomic, but the swap is TWO renames (current→old,
-    tmp→current), so there is a brief window where the snapshot path is
-    absent — a concurrent reader can observe a missing directory (never
-    a partial one) and should retry; a crash inside the window strands
-    the snapshot under ``._old_<batch>``, which the next batch (or
-    query restart) recovers before merging. Single-writer discipline
-    holds by construction (foreachBatch invocations are serial within a
-    query). The batch itself may carry several changes per key —
-    apply_changes resolves them by (ts, change-beats-snapshot) in one
-    window.
+    under at-least-once redelivery), write to a staged sibling
+    directory and swap it in with ``storage.replace_dir``. Each step of
+    the swap is one rename, so a concurrent reader can find the
+    snapshot path briefly absent (never partial) and should retry; a
+    crash inside the swap is resolved by ``storage.restore_dir`` before
+    the next batch (or query restart) reads the snapshot, so no
+    committed state is lost. Single-writer discipline holds by
+    construction (foreachBatch invocations are serial within a query).
+    The batch itself may carry several changes per key — apply_changes
+    resolves them by (ts, change-beats-snapshot) in one window.
 
-    CONSTRAINT: ``snapshot_path`` must be DRIVER-LOCAL — the atomic
-    swap is os.rename, which no object store honors (the sibling
+    CONSTRAINT: ``snapshot_path`` must be DRIVER-LOCAL — the swap
+    renames directories, which no object store does atomically (the sibling
     ``neardup_dedup_sink`` needs no swap and works on any scheme).
     A scheme-qualified path is rejected up front rather than failing
     with a confusing missing-file error on the first batch."""
-    import glob
-    import os
-    import re
-    import shutil
-
+    from flyq_spark import storage
     from flyq_spark.operators.cdc import apply_changes
 
     if "://" in snapshot_path:
         raise ValueError(
-            f"upsert_sink needs a driver-local snapshot_path (os.rename "
-            f"swap); got scheme-qualified {snapshot_path!r}"
+            f"upsert_sink needs a driver-local snapshot_path (directory "
+            f"rename swap); got scheme-qualified {snapshot_path!r}"
         )
-
-    def _recover() -> None:
-        root = snapshot_path.rstrip("/")
-        olds = sorted(
-            glob.glob(root + "._old_*"),
-            key=lambda p: int(re.search(r"_(\d+)$", p).group(1))
-            if re.search(r"_(\d+)$", p)
-            else -1,
-        )
-        if not os.path.isdir(root) and olds:
-            # crash between the two renames: roll the newest old forward
-            os.rename(olds[-1], root)
-            olds = olds[:-1]
-        for d in olds:
-            shutil.rmtree(d, ignore_errors=True)
-        for d in glob.glob(root + "._tmp_*"):
-            shutil.rmtree(d, ignore_errors=True)
+    live = snapshot_path.rstrip("/")
+    staged = storage.staging_dir(live)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        _recover()
+        storage.restore_dir(live)
         spark = batch_df.sparkSession
         data_cols = [c for c in batch_df.columns if c != op_col]
-        if os.path.isdir(snapshot_path):
-            snapshot = spark.read.parquet(snapshot_path).select(*data_cols)
+        if os.path.isdir(live):
+            snapshot = spark.read.parquet(live).select(*data_cols)
         else:
             snapshot = spark.createDataFrame([], batch_df.drop(op_col).schema)
         merged = apply_changes(snapshot, batch_df, key_cols, ts_col, op_col)
-        tmp = snapshot_path.rstrip("/") + f"._tmp_{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = snapshot_path.rstrip("/") + f"._old_{batch_id}"
-        if os.path.isdir(snapshot_path):
-            os.rename(snapshot_path, old)
-        os.rename(tmp, snapshot_path)
-        shutil.rmtree(old, ignore_errors=True)
+        merged.write.mode("overwrite").parquet(staged)
+        storage.replace_dir(live, staged)
 
     return write
 

@@ -462,8 +462,9 @@ def test_delete_records_beyond_leo_raises(engine):
 
 def test_compaction_crash_recovery(engine):
     """A compaction interrupted mid-swap must roll back losslessly: a
-    stranded .compact_old with the live dir missing is restored, stale
-    .compact_tmp is swept, and data/watermarks are intact afterward."""
+    stranded .partition=0.old with the live dir missing is restored,
+    a stale .partition=0.staged is swept, and data/watermarks are
+    intact afterward."""
     import os
     import shutil
 
@@ -471,18 +472,20 @@ def test_compaction_crash_recovery(engine):
     from tests.conftest import make_messages
 
     engine.produce("cc", make_messages(30))
-    pdir, tmp, old = engine._compact_paths("cc", 0)
-    # simulate: crash between rename(live->old) and rename(tmp->live)
+    pdir = storage.partition_dir(engine.base_dir, "cc", 0)
+    tmp = os.path.join(os.path.dirname(pdir), ".partition=0.staged")
+    old = os.path.join(os.path.dirname(pdir), ".partition=0.old")
+    # simulate: crash between rename(live->old) and rename(staged->live)
     os.makedirs(tmp)  # incomplete rewrite (no _SUCCESS, no files)
     os.rename(pdir, old)
     assert not os.path.isdir(pdir)
-    engine._recover_compaction("cc", 0)
+    engine.repair_topic("cc")
     assert os.path.isdir(pdir) and not os.path.isdir(old) and not os.path.isdir(tmp)
     assert engine.read_from_offset("cc", 0, 0)[0]["offset"] == 0
     assert len(engine.read_from_offset("cc", 0, 0)) == 30
     # simulate: crash after the swap, old not yet removed
     shutil.copytree(pdir, old)
-    engine._recover_compaction("cc", 0)
+    storage.restore_dir(pdir)
     assert os.path.isdir(pdir) and not os.path.isdir(old)
     # repair_topic also runs the recovery
     os.makedirs(tmp)

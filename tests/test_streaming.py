@@ -639,25 +639,27 @@ def test_progress_listener_persists_metrics(engine, spark, tmp_path):
 
 def test_upsert_sink_recovers_stranded_old_snapshot(spark, tmp_path):
     """A crash between the swap's two renames strands the snapshot under
-    ._old_<batch>; the next batch must roll it forward before merging so
+    .snapshot.old; the next batch must roll it back before merging so
     no committed state is lost."""
     import os
 
     from flyq_spark.streaming.sink import upsert_sink
 
     snap = str(tmp_path / "snapshot")
+    old = str(tmp_path / ".snapshot.old")
+    staged = str(tmp_path / ".snapshot.staged")
     schema = "k long, v string, ts long, op string"
     sink = upsert_sink(snap, ("k",), "ts")
     sink(spark.createDataFrame([(1, "a", 10, "u"), (2, "b", 10, "u")], schema), 0)
     assert os.path.isdir(snap)
-    # simulate the crash window: current renamed away, tmp never landed
-    os.rename(snap, snap + "._old_0")
-    os.makedirs(snap + "._tmp_1")  # stale partial write, must be swept
+    # simulate the crash window: current renamed away, staged never landed
+    os.rename(snap, old)
+    os.makedirs(staged)  # stale partial write, must be swept
     sink(spark.createDataFrame([(3, "c", 20, "u")], schema), 1)
     got = {(r["k"], r["v"]) for r in spark.read.parquet(snap).collect()}
     assert got == {(1, "a"), (2, "b"), (3, "c")}
-    assert not os.path.exists(snap + "._old_0")
-    assert not os.path.exists(snap + "._tmp_1")
+    assert not os.path.exists(old)
+    assert not os.path.exists(staged)
 
 
 def test_watermark_tracker_stateful_plan_analyzes(engine, spark):
